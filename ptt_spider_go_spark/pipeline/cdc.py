@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ptt_spider_go_spark.functions.columns import _let
-from ptt_spider_go_spark.pipeline.common import md5_long
+from ptt_spider_go_spark.pipeline.common import gram_hashes, md5_long
 
 #: rolling window width (chars), shared construction with X134.
 CDC_W = 8
@@ -60,20 +60,9 @@ def _spans(text: Column) -> Column:
     spans between consecutive boundaries. Short docs (< CDC_W chars)
     are one whole-doc span; empty docs have none."""
     n = F.char_length(text)
-    # hash at window END i (i = CDC_W .. n)
-    hs_expr = F.when(
-        n < CDC_W, F.array().cast("array<bigint>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(CDC_W), F.greatest(n, F.lit(CDC_W))),
-            lambda i: md5_long(
-                F.substring(text, (i - CDC_W + 1).cast("int"),
-                            F.lit(CDC_W))
-            ),
-        )
-    )
 
     def spans_of(hs: Column) -> Column:
+        # hs[j] hashes the window ENDING at i = j + CDC_W;
         # boundary positions: i where h_i % D == 0
         b = F.filter(
             F.transform(
@@ -100,7 +89,7 @@ def _spans(text: Column) -> Column:
 
     return F.when(n <= 0, F.array().cast(
         "array<struct<s:bigint,e:bigint>>"
-    )).otherwise(_let(hs_expr, spans_of))
+    )).otherwise(_let(gram_hashes(text, CDC_W), spans_of))
 
 
 def cdc_chunks(docs: DataFrame) -> DataFrame:

@@ -29,6 +29,22 @@ def md5_long(c: Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(keyed), 1, 15), 16, 10).cast("long")
 
 
+def gram_hashes(text: Column, k: int) -> Column:
+    """md5_long of every char k-gram of `text`, in start order: element
+    j hashes chars [j+1, j+k] (1-based), so the array has
+    char_length - k + 1 entries; texts shorter than k give []. Bind the
+    result with columns._let before referencing it more than once —
+    each Column reference splices (and re-evaluates) the whole
+    per-position md5 transform."""
+    n = F.char_length(text)
+    return F.when(n < k, F.array().cast("array<bigint>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
+            lambda i: md5_long(F.substring(text, i.cast("int"), F.lit(k))),
+        )
+    )
+
+
 def md5_long_sql(expr: str, seed: int | None = None) -> str:
     keyed = expr if seed is None else f"concat('{seed}:', {expr})"
     return f"(('0x' || substr(md5({keyed}), 1, 15))::BIGINT)"

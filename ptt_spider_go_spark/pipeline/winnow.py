@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ptt_spider_go_spark.functions.columns import _let
-from ptt_spider_go_spark.pipeline.common import md5_long
+from ptt_spider_go_spark.pipeline.common import gram_hashes
 
 #: char k-gram size (noise threshold).
 K = 8
@@ -110,19 +110,8 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     0-based gram position and 60-bit gram hash, one row per SELECTED
     (hash, pos), distinct per doc. Map-only until the final distinct;
     unordered (consumers sort if they need to)."""
-    n_hashes = F.greatest(F.char_length("text") - K + 1, F.lit(0))
-    hs_expr = F.when(
-        F.char_length("text") < K, F.array().cast("array<bigint>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n_hashes, F.lit(1))),
-            lambda i: md5_long(
-                F.substring(F.col("text"), i.cast("int"), F.lit(K))
-            ),
-        )
-    )
     sel = docs.select(
-        "doc_id", _let(hs_expr, _selections).alias("sels")
+        "doc_id", _let(gram_hashes(F.col("text"), K), _selections).alias("sels")
     )
     return (
         sel.select("doc_id", F.explode("sels").alias("s"))

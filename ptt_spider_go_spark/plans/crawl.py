@@ -37,12 +37,11 @@ from pyspark.sql import functions as F
 
 from ptt_spider_go_spark.config import CrawlConfig
 from ptt_spider_go_spark.errors import quarantine_from_fetch_log
-from ptt_spider_go_spark.functions.columns import final_title
+from ptt_spider_go_spark.functions.columns import final_title, url_host
 from ptt_spider_go_spark.functions.udfs import (
     PARSED_ALL_SCHEMA,
     make_parse_page_kernel,
 )
-from ptt_spider_go_spark.functions.columns import url_host
 from ptt_spider_go_spark.operators.blocklist import blocklist_filter
 from ptt_spider_go_spark.operators.collision import with_unique_dir
 from ptt_spider_go_spark.operators.dedup import (
@@ -99,15 +98,11 @@ def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
-_TIMING = os.environ.get("PTT_CRAWL_TIMING", "") not in ("", "0")
-
-
 @contextmanager
 def _timed(label: str, timings: dict | None = None):
-    """Wall-clock a materialization block. Always records into
-    `timings` (two keys: the step-qualified label, and a cross-step
-    'phase.<name>' accumulator the scaling bench reads); prints only
-    under PTT_CRAWL_TIMING=1. The time.time() pair is nanoseconds of
+    """Wall-clock a materialization block into `timings` (two keys: the
+    step-qualified label, and a cross-step 'phase.<name>' accumulator
+    the scaling bench reads). The time.time() pair is nanoseconds of
     overhead against multi-second Spark jobs."""
     t = time.time()
     yield
@@ -117,8 +112,6 @@ def _timed(label: str, timings: dict | None = None):
         phase = label.split(".", 1)[-1]
         key = f"phase.{phase}"
         timings[key] = round(timings.get(key, 0.0) + dt, 4)
-    if _TIMING:
-        print(f"[crawl-timing] {label}: {dt:.2f}s", flush=True)
 
 
 _FRONTIER_SCHEMA = (
@@ -197,24 +190,10 @@ def run_crawl(
     file_mode = file_urls_path is not None
     ckpt = CheckpointManager(checkpoint_dir, spark) if checkpoint_dir else None
 
-    # Filter state placement: checkpointed runs keep the Bloom/cuckoo
-    # shard state as epoch-versioned parquet tables NEXT TO the seen
-    # snapshots (dedup.FilterStateTable) — builds chain table-to-table
-    # with no driver blob round-trip, and resume restores the filter
-    # from the table instead of rebuilding from seen. Un-checkpointed
-    # runs (contract queries, bench) keep the small in-memory mode.
-    filters_root = (
-        os.path.join(checkpoint_dir, "filters") if checkpoint_dir else None
-    )
-    if filters_root and not resume and os.path.exists(filters_root):
-        import shutil
-
-        shutil.rmtree(filters_root)  # stale state from a previous run
-
-    blooms = BloomShardSet(
-        cfg.bloom_shards, fpp=cfg.bloom_fpp,
-        state_dir=os.path.join(filters_root, "bloom") if filters_root else None,
-    )
+    # Filter state is driver-resident and never persisted: on resume
+    # the Bloom filter is rebuilt from the committed seen snapshot, so
+    # the checkpoint manifest stays the crawl's only commit protocol.
+    blooms = BloomShardSet(cfg.bloom_shards, fpp=cfg.bloom_fpp)
     # north_star: cuckoo-filter verification pass on Bloom probable hits
     # (~99% of Bloom FPs never reach the exact anti-join). Engages
     # adaptively: below cfg.cuckoo_min_seen rows the exact join is
@@ -228,9 +207,7 @@ def run_crawl(
     # (cuckoo_min_seen=0) from starting life overflowed.
     cuckoos = (
         CuckooShardSet.for_capacity(
-            cfg.bloom_shards, max(cfg.cuckoo_min_seen, 1 << 16),
-            state_dir=(os.path.join(filters_root, "cuckoo")
-                       if filters_root else None),
+            cfg.bloom_shards, max(cfg.cuckoo_min_seen, 1 << 16)
         )
         if cfg.cuckoo_verify else None
     )
@@ -253,15 +230,10 @@ def run_crawl(
         frontier = ckpt.read_latest("frontier")
         seen = ckpt.read_latest("seen")
         if seen is not None:
-            # Filter state restored straight from its table when present
-            # (the filter epoch always commits at-or-after the seen
-            # snapshot, so it is a superset — extra false positives get
-            # exact-verified; never a false negative). Rebuild from seen
-            # only for legacy checkpoints that predate the state table.
-            if not blooms.has_state():
-                blooms.add_df(seen)
+            # cuckoo_active stays False: _cuckoo_for_step bulk-builds the
+            # cuckoo filter from seen once n_seen_est crosses its threshold
+            blooms.add_df(seen)
             n_seen_est = seen.count()
-        cuckoo_active = cuckoos is not None and cuckoos.has_state()
     else:
         if file_mode:
             frontier = file_frontier(spark, file_urls_path)
@@ -577,7 +549,7 @@ def run_crawl(
             # of checkpointed fresh plus cheap windows over the already-
             # checkpointed frontier — the top-of-loop checkpoint
             # materializes it on the next iteration.
-            pass
+            #
             # articles/contents/log are cheap filters over the already-
             # materialized parsed_all — keep them lazy; the references
             # hold the checkpointed RDD alive until final assembly.
@@ -648,7 +620,6 @@ def run_crawl(
         .orderBy("superstep", "kind", "outcome")
     )
 
-    # No global orderBy on the result tables: a total sort of the
     # Opt-in archive stage (X95, default off): write the successfully
     # fetched pages as WARC shards + their CDX index under archive_dir
     # — the publish shape of a production crawl cycle. Pure side
@@ -683,6 +654,7 @@ def run_crawl(
             superstep_sketches(fetch_log.select("superstep", "url"))
         )
 
+    # No global orderBy on the result tables: a total sort of the
     # articles table is a full range-partition shuffle that buys nothing
     # at scale (consumers sort-or-window what they need; the contract
     # pins an order-insensitive hash; tests order explicitly).
@@ -728,8 +700,6 @@ def run_crawl(
 def _union_steps(spark, ckpt, steps, name, schema):
     dfs = []
     for s in steps:
-        import os
-
         p = ckpt.table_path(s, name)
         if os.path.exists(p):
             dfs.append(spark.read.parquet(p))

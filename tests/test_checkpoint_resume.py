@@ -5,11 +5,15 @@ superstep snapshot produces byte-identical final tables to an
 uninterrupted run.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from ptt_spider_go_spark.config import CrawlConfig
 from ptt_spider_go_spark.datagen import pages_pandas
+from ptt_spider_go_spark.operators.dedup import BloomShardSet, CuckooShardSet
+from ptt_spider_go_spark.plans.checkpoint import CheckpointManager
 from ptt_spider_go_spark.plans.crawl import run_crawl
 
 BOARD = "Beauty"
@@ -29,6 +33,11 @@ def _cfg(**kw):
     return CrawlConfig(**base)
 
 
+def _rows(df):
+    # repr key: rows may hold NULLs, which tuples cannot order directly
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
 def _snapshot(res):
     return {
         "articles": sorted(map(tuple, res.articles.collect())),
@@ -37,10 +46,39 @@ def _snapshot(res):
             (r["article_url"], r["content"]) for r in res.markdown_docs.collect()
         ),
         "seen": sorted(r["url"] for r in res.seen.collect()),
+        "fetch_log": _rows(res.fetch_log),
+        "metrics": _rows(res.metrics),
+        "progress_events": _rows(res.progress_events),
+        "quarantine": _rows(res.quarantine),
     }
 
 
-def test_kill_and_resume_identical(spark, pages, tmp_path):
+def _committed_seen(spark, ckpt_dir):
+    return sorted(
+        r["url"] for r in
+        CheckpointManager(ckpt_dir, spark).read_latest("seen").collect()
+    )
+
+
+def _record_adds(monkeypatch, cls):
+    """Spy on `cls.add_df`: the returned list gets each call's sorted
+    URLs."""
+    added = []
+    real_add = cls.add_df
+
+    def spy(self, df, url_col="url"):
+        added.append(sorted(r[url_col] for r in df.select(url_col).collect()))
+        return real_add(self, df, url_col)
+
+    monkeypatch.setattr(cls, "add_df", spy)
+    return added
+
+
+def test_kill_and_resume_identical(spark, pages, tmp_path, monkeypatch):
+    """Resume rebuilds the Bloom filter from the committed seen snapshot
+    (filter state is never persisted: no `filters/` directory), then
+    adds each resumed superstep's fresh URLs, and every compared table
+    equals the uninterrupted run's."""
     full_dir = tmp_path / "full"
     part_dir = tmp_path / "part"
 
@@ -52,10 +90,39 @@ def test_kill_and_resume_identical(spark, pages, tmp_path):
     # "Killed" run: stop after the first superstep commits...
     run_crawl(spark, pages, _cfg(max_supersteps=1),
               checkpoint_dir=str(part_dir), verify_text=False)
+    committed_seen = _committed_seen(spark, str(part_dir))
+    added = _record_adds(monkeypatch, BloomShardSet)
     # ...then resume from the snapshot.
     resumed = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(part_dir),
                         resume=True, verify_text=False)
 
+    assert resumed.supersteps >= 1
+    assert added[0] == committed_seen
+    assert len(added) == 1 + resumed.supersteps
+    for d in (full_dir, part_dir):
+        assert not os.path.exists(d / "filters")
+    assert _snapshot(full) == _snapshot(resumed)
+
+
+def test_kill_and_resume_identical_with_cuckoo_engaged(spark, pages, tmp_path,
+                                                      monkeypatch):
+    """With the cuckoo layer on from the start (cuckoo_min_seen=0), a
+    resumed run bulk-builds it from the committed seen snapshot before
+    its first probe, and every compared table equals the uninterrupted
+    run's."""
+    cfg = dict(cuckoo_min_seen=0)
+    full = run_crawl(spark, pages, _cfg(**cfg),
+                     checkpoint_dir=str(tmp_path / "full"), verify_text=False)
+    part_dir = str(tmp_path / "part")
+    run_crawl(spark, pages, _cfg(max_supersteps=1, **cfg),
+              checkpoint_dir=part_dir, verify_text=False)
+    committed_seen = _committed_seen(spark, part_dir)
+    added = _record_adds(monkeypatch, CuckooShardSet)
+    resumed = run_crawl(spark, pages, _cfg(**cfg), checkpoint_dir=part_dir,
+                        resume=True, verify_text=False)
+
+    assert resumed.supersteps >= 1
+    assert added[0] == committed_seen
     assert _snapshot(full) == _snapshot(resumed)
 
 
@@ -70,8 +137,6 @@ def test_resume_noop_when_finished(spark, pages, tmp_path):
 
 
 def test_manifest_counts_present(spark, pages, tmp_path):
-    from ptt_spider_go_spark.plans.checkpoint import CheckpointManager
-
     d = tmp_path / "m"
     run_crawl(spark, pages, _cfg(), checkpoint_dir=str(d), verify_text=False)
     ck = CheckpointManager(str(d), spark)
@@ -88,14 +153,10 @@ def test_expire_snapshots_keeps_history_drops_stale_state(spark, pages,
     """Iceberg expire_snapshots analogue: after a multi-step crawl,
     only the latest step still holds frontier/seen, every step keeps
     its *_delta history, and resume from the expired store is exact."""
-    import os
-
     d = tmp_path / "exp"
     full = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(d),
                      verify_text=False)
     assert full.supersteps >= 2
-    from ptt_spider_go_spark.plans.checkpoint import CheckpointManager
-
     ck = CheckpointManager(str(d), spark)
     last = ck.last_committed_step()
     for step in range(last + 1):

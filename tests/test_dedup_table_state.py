@@ -1,159 +1,25 @@
-"""Table-backed Bloom/cuckoo filter state (VERDICT r03 What's-wrong #1).
+"""Seen-set filter state across a crawl resume.
 
-The 10^10-URL design point holds ~15 GB of Bloom bits + ~20 GB of
-cuckoo fingerprints; that state must live in a parquet table, built
-table-to-table by executors, with NO filter byte ever crossing the
-driver. These tests pin:
-
-- bit-identical equivalence between in-memory and table-backed modes
-  (same add sequence -> same state bytes, same probe verdicts)
-- the no-driver-blobs invariant: during table-mode build + partitioned
-  probe + full dedup, no DataFrame with a binary column is ever
-  collect()ed
-- epoch lifecycle: atomic marker commit, old-epoch expiry
-- crawl resume restores filter state from the table instead of
-  rebuilding from seen
-- the ADVICE r3 blob-size guard (one shard's bytes must stay under the
-  ~1.5 GB single-binary-value cap)
+Filter state has no table of its own: the only persisted source of
+truth is the checkpointed `seen` table. A resumed crawl must restore
+its Bloom filter from that committed snapshot in one pass, then add
+only each resumed superstep's fresh URLs.
 """
 
-import json
 import os
 
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from ptt_spider_go_spark.operators import dedup as dmod
-from ptt_spider_go_spark.operators.dedup import (
-    BloomShardSet,
-    CuckooShardSet,
-    FilterStateTable,
-    dedup_against_seen,
-)
-
-
-def _urls(prefix, n, start=0):
-    return [f"https://{prefix}.test/{i}" for i in range(start, start + n)]
-
-
-def _df(spark, urls, parts=5):
-    return spark.createDataFrame([(u,) for u in urls], "url string") \
-        .repartition(parts)
-
-
-def _read_state(spark, root):
-    st = FilterStateTable(root)
-    return {r["shard"]: r for r in st.read(spark).collect()}
-
-
-def test_bloom_table_mode_bit_identical_to_memory(spark, tmp_path):
-    mem = BloomShardSet(n_shards=4, expected_per_shard=2048)
-    tab = BloomShardSet(n_shards=4, expected_per_shard=2048,
-                        state_dir=str(tmp_path / "bloom"))
-    for batch in (_urls("b", 1500), _urls("b", 1500, start=1000)):
-        mem.add_df(_df(spark, batch))
-        tab.add_df(_df(spark, batch, parts=3))
-
-    rows = _read_state(spark, str(tmp_path / "bloom"))
-    for s in range(4):
-        assert bytes(rows[s]["bits"]) == mem.shards[s].tobytes(), s
-
-    probes = _df(spark, _urls("b", 4000), parts=7)
-    expect = {r["url"]: r["maybe_seen"]
-              for r in mem.with_maybe_seen(probes).collect()}
-    for mode in ("broadcast", "partitioned"):
-        got = {r["url"]: r["maybe_seen"]
-               for r in tab.with_maybe_seen(probes, mode=mode).collect()}
-        assert got == expect, mode
-
-
-def test_cuckoo_table_mode_bit_identical_to_memory(spark, tmp_path):
-    mem = CuckooShardSet(n_shards=4, buckets_per_shard=1 << 10)
-    tab = CuckooShardSet(n_shards=4, buckets_per_shard=1 << 10,
-                         state_dir=str(tmp_path / "ck"))
-    for batch in (_urls("c", 2000), _urls("c", 2000, start=1500)):
-        mem.add_df(_df(spark, batch))
-        tab.add_df(_df(spark, batch, parts=3))
-
-    rows = _read_state(spark, str(tmp_path / "ck"))
-    for s in range(4):
-        assert bytes(rows[s]["bits"]) == mem.tables[s].tobytes(), s
-        assert bool(rows[s]["overflowed"]) == bool(mem.overflowed[s]), s
-
-    probes = _df(spark, _urls("c", 5000), parts=7)
-    expect = {r["url"]: r["maybe_seen"]
-              for r in mem.with_maybe_seen(probes).collect()}
-    for mode in ("broadcast", "partitioned"):
-        got = {r["url"]: r["maybe_seen"]
-               for r in tab.with_maybe_seen(probes, mode=mode).collect()}
-        assert got == expect, mode
-
-
-def test_table_mode_no_filter_blob_crosses_driver(spark, tmp_path,
-                                                  monkeypatch):
-    """During table-mode build and partitioned probe, no DataFrame whose
-    schema contains a binary column is ever collected — the state bytes
-    stay executor/parquet-side end-to-end."""
-    from pyspark.sql import DataFrame
-
-    real_collect = DataFrame.collect
-
-    def guarded(self):
-        if any(f.dataType.typeName() == "binary" for f in self.schema.fields):
-            raise AssertionError(
-                f"binary blob collected to driver: {self.schema.simpleString()}"
-            )
-        return real_collect(self)
-
-    monkeypatch.setattr(DataFrame, "collect", guarded)
-    # force the partitioned probe everywhere (broadcast mode legitimately
-    # pulls blobs once, but only below the byte budget)
-    monkeypatch.setattr(dmod, "PROBE_BROADCAST_MAX_BYTES", 0)
-
-    bl = BloomShardSet(n_shards=4, expected_per_shard=2048,
-                       state_dir=str(tmp_path / "bloom"))
-    ck = CuckooShardSet(n_shards=4, buckets_per_shard=1 << 10,
-                        state_dir=str(tmp_path / "ck"))
-    seen_urls = _urls("g", 2000)
-    seen = _df(spark, seen_urls)
-    bl.add_df(seen)
-    ck.add_df(seen)
-    cand = _df(spark, _urls("g", 3000), parts=6)
-    out = dedup_against_seen(cand, seen, bl, ck).collect()
-    assert {r["url"] for r in out} == set(_urls("g", 3000)) - set(seen_urls)
-
-
-def test_filter_state_epoch_lifecycle(spark, tmp_path):
-    """Marker commits atomically per add; epochs older than latest-1
-    are expired; the latest epoch is a complete state table."""
-    root = str(tmp_path / "bloom")
-    bl = BloomShardSet(n_shards=4, expected_per_shard=1024, state_dir=root)
-    assert not bl.has_state()
-    for i in range(3):
-        bl.add_df(_df(spark, _urls("e", 200, start=200 * i)))
-    st = FilterStateTable(root)
-    # init epoch 0 + three adds -> marker at 3; only epochs 2,3 remain
-    assert st.latest_epoch() == 3
-    with open(os.path.join(root, "_LATEST.json")) as f:
-        assert json.load(f) == {"epoch": 3}
-    present = sorted(
-        int(d.split("=")[1]) for d in os.listdir(root) if d.startswith("epoch=")
-    )
-    assert present == [2, 3]
-    assert {r["shard"] for r in st.read(spark).collect()} == {0, 1, 2, 3}
-    # all added URLs are members (no false negatives across epochs)
-    probed = bl.with_maybe_seen(_df(spark, _urls("e", 600)))
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
+from ptt_spider_go_spark.operators.dedup import BloomShardSet
 
 
 def test_crawl_resume_restores_filter_state_from_table(spark, tmp_path,
                                                        monkeypatch):
-    """Resume must read the persisted filter state, not rebuild it from
-    the seen table (VERDICT r03 next-round #2 'Done =' clause)."""
+    """Resume restores the Bloom filter from the committed seen table:
+    one add_df over exactly that snapshot, then one per resumed
+    superstep, and no filter state is written beside the checkpoint."""
     from ptt_spider_go_spark.config import CrawlConfig
     from ptt_spider_go_spark.datagen import pages_pandas
     from ptt_spider_go_spark.plans import crawl as cmod
+    from ptt_spider_go_spark.plans.checkpoint import CheckpointManager
 
     pages = spark.createDataFrame(
         pages_pandas(boards=("Beauty",), pages_per_board=3, slots_per_page=6)
@@ -162,56 +28,27 @@ def test_crawl_resume_restores_filter_state_from_table(spark, tmp_path,
     d = str(tmp_path / "ck")
     cmod.run_crawl(spark, pages, CrawlConfig(max_supersteps=1, **cfg),
                    checkpoint_dir=d, verify_text=False)
-    assert os.path.exists(os.path.join(d, "filters", "bloom", "_LATEST.json"))
+    assert not os.path.exists(os.path.join(d, "filters"))
+    committed_seen = sorted(
+        r["url"] for r in CheckpointManager(d, spark).read_latest("seen")
+        .collect()
+    )
+    assert committed_seen
 
     calls = []
     real = BloomShardSet.add_df
 
     def spy(self, df, url_col="url"):
-        calls.append(1)
+        calls.append(sorted(r[url_col] for r in df.select(url_col).collect()))
         return real(self, df, url_col)
 
     monkeypatch.setattr(BloomShardSet, "add_df", spy)
-    before = len(calls)
     res = cmod.run_crawl(spark, pages, CrawlConfig(max_supersteps=6, **cfg),
                          checkpoint_dir=d, resume=True, verify_text=False)
-    # resume itself rebuilt nothing: the first add_df happens only for
-    # the fresh candidates of the next superstep, never for full seen.
-    # With supersteps>=1 resumed work, add_df runs once per superstep.
     assert res.supersteps >= 1
-    assert len(calls) - before == res.supersteps
+    # restore: the whole committed seen snapshot, once...
+    assert calls[0] == committed_seen
+    # ...then only fresh candidates, once per resumed superstep
+    assert len(calls) == 1 + res.supersteps
+    assert not os.path.exists(os.path.join(d, "filters"))
     assert res.articles.count() > 0
-
-
-def test_shard_blob_size_guard():
-    """ADVICE r3: refuse configs whose single-shard bytes approach
-    Spark's 2 GB per-binary-value hard limit, naming the fix."""
-    with pytest.raises(ValueError, match="n_shards"):
-        BloomShardSet(n_shards=1, expected_per_shard=2_000_000_000)
-    with pytest.raises(ValueError, match="n_shards"):
-        CuckooShardSet(n_shards=1, buckets_per_shard=1 << 29)
-    # the same total state sharded wider is fine (no multi-GB alloc
-    # happens in table mode — state_dir skips the driver arrays)
-    BloomShardSet(n_shards=2048, expected_per_shard=2_000_000,
-                  state_dir="/tmp/never-used")
-
-
-def test_dedup_counters_measure_join_input(spark):
-    """The '~99% join-input cut' claim as a number: counters record the
-    anti-join input after each probabilistic layer."""
-    seen_urls = _urls("n", 3000)
-    seen = _df(spark, seen_urls)
-    bl = BloomShardSet(n_shards=4, expected_per_shard=2048)
-    ck = CuckooShardSet(n_shards=4, buckets_per_shard=1 << 11)
-    bl.add_df(seen)
-    ck.add_df(seen)
-    cand = _df(spark, _urls("n", 6000))  # 3000 repeats + 3000 new
-    counters = {}
-    out = dedup_against_seen(cand, seen, bl, ck, counters=counters)
-    assert {r["url"] for r in out.collect()} == set(_urls("n", 6000)) - set(seen_urls)
-    # every true repeat must reach the join (no false negatives)...
-    assert counters["anti_join_input_after_bloom"] >= 3000
-    assert counters["anti_join_input_after_cuckoo"] >= 3000
-    # ...and the cuckoo layer can only shrink the input
-    assert (counters["anti_join_input_after_cuckoo"]
-            <= counters["anti_join_input_after_bloom"])

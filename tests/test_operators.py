@@ -477,52 +477,24 @@ def test_cuckoo_bulk_place_empty_kernel():
     assert set(table[3]) == {12, 14}
 
 
-def test_probe_modes_bit_identical(spark):
-    """broadcast vs partitioned (shuffle-to-shard cogroup) probes must
-    agree bit-for-bit on both filter layers — the partitioned path is
-    the 10^10-URL mode where the tables no longer fit a broadcast."""
-    seen_urls = [f"https://m.test/{i}" for i in range(4000)]
-    probe_urls = [f"https://m.test/{i}" for i in range(2000, 6000)]
-    seen = spark.createDataFrame([(u,) for u in seen_urls], "url string")
-    probes = spark.createDataFrame(
-        [(u,) for u in probe_urls], "url string"
-    ).repartition(7)
-    bl = BloomShardSet(n_shards=4, expected_per_shard=2048)
-    ck = CuckooShardSet(n_shards=4, buckets_per_shard=1 << 11)
-    bl.add_df(seen)
-    ck.add_df(seen)
-    for filt in (bl, ck):
-        a = {r["url"]: r["maybe_seen"] for r in
-             filt.with_maybe_seen(probes, mode="broadcast").collect()}
-        b = {r["url"]: r["maybe_seen"] for r in
-             filt.with_maybe_seen(probes, mode="partitioned").collect()}
-        assert a == b
-        # true members are always flagged in both modes
-        assert all(a[u] for u in probe_urls[:2000])
+def test_shard_blob_size_guard():
+    """Refuse configs whose single-shard bytes approach Spark's 2 GB
+    per-binary-value hard limit, naming the fix."""
+    from ptt_spider_go_spark.operators.dedup import (
+        MAX_SHARD_BLOB_BYTES,
+        _check_shard_bytes,
+    )
 
-
-def test_probe_auto_mode_switches_on_size(spark, monkeypatch):
-    """auto = broadcast under the byte budget, partitioned above it."""
-    from ptt_spider_go_spark.operators import dedup as dmod
-
-    urls = [f"https://auto.test/{i}" for i in range(500)]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    bl = BloomShardSet(n_shards=2, expected_per_shard=512)
-    bl.add_df(df)
-    calls = []
-    real = dmod._partitioned_probe
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(dmod, "_partitioned_probe", spy)
-    bl.with_maybe_seen(df).count()          # small -> broadcast
-    assert calls == []
-    monkeypatch.setattr(dmod, "PROBE_BROADCAST_MAX_BYTES", 0)
-    out = bl.with_maybe_seen(df)            # forced over budget
-    assert out.filter(~F.col("maybe_seen")).count() == 0
-    assert calls  # partitioned path taken
+    with pytest.raises(ValueError, match="n_shards"):
+        BloomShardSet(n_shards=1, expected_per_shard=2_000_000_000)
+    with pytest.raises(ValueError, match="n_shards"):
+        CuckooShardSet(n_shards=1, buckets_per_shard=1 << 29)
+    # the cap is on ONE shard's bytes, whatever the shard count: a
+    # 2048-shard set at the cap passes without allocating anything
+    _check_shard_bytes(MAX_SHARD_BLOB_BYTES, 2048, "BloomShardSet")
+    with pytest.raises(ValueError, match="2048"):
+        _check_shard_bytes(MAX_SHARD_BLOB_BYTES + 1, 2048, "BloomShardSet")
+    BloomShardSet(n_shards=4, expected_per_shard=2_000_000)  # ~2.4 MB/shard
 
 
 def test_dedup_exactness_with_cuckoo_layer(spark):
@@ -539,6 +511,30 @@ def test_dedup_exactness_with_cuckoo_layer(spark):
     out = {r["url"]
            for r in dedup_against_seen(cand, seen, blooms, cuckoos).collect()}
     assert out == {f"https://s.test/{i}" for i in range(500, 900)}
+
+
+def test_dedup_counters_measure_join_input(spark):
+    """The '~99% join-input cut' claim as a number: counters record the
+    anti-join input after each probabilistic layer."""
+    seen_urls = [f"https://n.test/{i}" for i in range(3000)]
+    cand_urls = [f"https://n.test/{i}" for i in range(6000)]  # 3000 repeats
+    seen = spark.createDataFrame([(u,) for u in seen_urls], "url string") \
+        .repartition(5)
+    cand = spark.createDataFrame([(u,) for u in cand_urls], "url string") \
+        .repartition(5)
+    bl = BloomShardSet(n_shards=4, expected_per_shard=2048)
+    ck = CuckooShardSet(n_shards=4, buckets_per_shard=1 << 11)
+    bl.add_df(seen)
+    ck.add_df(seen)
+    counters = {}
+    out = dedup_against_seen(cand, seen, bl, ck, counters=counters)
+    assert {r["url"] for r in out.collect()} == set(cand_urls) - set(seen_urls)
+    # every true repeat must reach the join (no false negatives)...
+    assert counters["anti_join_input_after_bloom"] >= 3000
+    assert counters["anti_join_input_after_cuckoo"] >= 3000
+    # ...and the cuckoo layer can only shrink the input
+    assert (counters["anti_join_input_after_cuckoo"]
+            <= counters["anti_join_input_after_bloom"])
 
 
 # --- domain blocklist filter (r5) -------------------------------------------
