@@ -449,8 +449,8 @@ def main():
 
     # --- checkpoint/filter-state A/B (VERDICT r04 what's-wrong #3 /
     # next-round #5): the SAME crawl back-to-back with checkpoint_dir
-    # on (epoch-versioned parquet filter-state tables + per-superstep
-    # frontier/seen snapshots) vs the in-memory path timed above, with
+    # on (one append-only commit per superstep: step ledger, parsed
+    # rows, seen delta) vs the in-memory path timed above, with
     # per-phase walls from both, to locate whether the r4 crawl-wall
     # regression was the externalization (expected: no — the bench
     # path bypasses the tables entirely) or window noise.

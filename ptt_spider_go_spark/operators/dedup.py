@@ -19,9 +19,10 @@ add_df ORs (Bloom) or installs (cuckoo) the executor-built shard blobs.
 A crawl's defaults build a 1.26 MB Bloom set (8 × 157 KB) and a 16.8 MB
 cuckoo set, so one broadcast per probe is the whole transfer. The state
 is not persisted: a resumed crawl rebuilds the Bloom filter from the
-committed seen snapshot, and the cuckoo filter is bulk-built from seen
-when the seen set crosses its activation threshold, so the checkpoint
-manifest is the crawl's only commit protocol.
+committed seed frontier and per-step `fresh` deltas, and the cuckoo
+filter is bulk-built from seen when the seen set crosses its activation
+threshold, so the checkpoint manifest is the crawl's only commit
+protocol.
 """
 
 from __future__ import annotations

@@ -1,21 +1,23 @@
-"""Superstep snapshot checkpointing + exact resume (T5 [north_rule]).
+"""Append-only superstep commits + exact resume (T5 [north_rule]).
 
-Iceberg-style snapshot semantics on plain Parquet (the sandbox has no
+Iceberg-style append semantics on plain Parquet (the sandbox has no
 Iceberg runtime; the layout is deliberately table-format-agnostic —
-swapping `_write`/`read` for Iceberg `writeTo(...).createOrReplace()` /
-snapshot reads changes nothing above this module):
+swapping `write_step`/`read_steps` for Iceberg appends / snapshot reads
+changes nothing above this module):
 
-- every superstep writes its state tables under
-  ``<root>/step=<n>/<table>/`` (immutable, never rewritten)
+- superstep n appends its tables once, under ``<root>/step=<n>/<table>/``,
+  from frames the crawl loop has already materialized: ``ledger``
+  (every frontier row with the gate or fetch outcome that decided it),
+  ``parsed`` (the parse kernel's rows) and ``fresh`` (the step's seen
+  delta); step 0 also holds ``seed``, the deduplicated seed frontier.
+  A committed step is never rewritten, re-read by the loop or expired.
 - a commit is the atomic rename of ``_manifest.json.tmp`` ->
   ``_manifest.json`` recording the committed step + per-table row
-  counts (per-partition lineage/metrics live in the `metrics` table)
-- resume = read the manifest, load the latest committed step; a crash
-  mid-superstep leaves the previous manifest intact, so replay is exact
-
-Reading checkpointed state back each superstep also truncates Spark's
-logical-plan lineage — without it an iterative loop's plan grows
-superlinearly (the classic iterative-Spark failure at scale).
+  counts
+- resume reads steps 0..last by an explicit path list, never a glob: a
+  step directory a crash left half-written is ignored, and overwritten
+  when that step re-runs. A committed table that is missing (or a
+  checkpoint in another layout) raises instead of reading as empty.
 """
 
 from __future__ import annotations
@@ -67,8 +69,8 @@ class CheckpointManager:
 
     def write_step(self, step: int, tables: dict[str, DataFrame],
                    extra: dict[str, Any] | None = None) -> dict[str, int]:
-        """Write every state table for `step`, then commit atomically.
-        Returns per-table row counts (the snapshot's summary lineage)."""
+        """Write every table of `step`, then commit atomically. Returns
+        per-table row counts (the snapshot's summary lineage)."""
         counts: dict[str, int] = {}
         for name, df in tables.items():
             path = self.table_path(step, name)
@@ -85,43 +87,14 @@ class CheckpointManager:
         os.replace(tmp, self._manifest_path)  # atomic commit
         return counts
 
-    #: loop-carried state tables — only the latest committed snapshot is
-    #: live (resume reads nothing older). Append-only ``*_delta`` tables
-    #: are table HISTORY (final assembly unions every step) and are
-    #: never expired.
-    STATE_TABLES = ("frontier", "seen")
-
-    def expire_snapshots(self, keep_last: int = 1) -> list[str]:
-        """Iceberg ``expire_snapshots`` analogue: drop loop-carried
-        state tables from snapshots older than the newest `keep_last`
-        committed steps. At a 10^10-URL frontier the seen table is the
-        biggest artifact in the store and every superstep rewrites it —
-        without expiry the checkpoint root grows O(steps x |seen|).
-        Crash-safety is untouched: the manifest still points at an
-        intact snapshot, and resume only ever reads the latest
-        committed step. Returns the removed paths."""
-        import shutil
-
-        last = self.last_committed_step()
-        if last is None:
-            return []
-        removed: list[str] = []
-        for step in range(0, last - keep_last + 1):
-            for name in self.STATE_TABLES:
-                path = self.table_path(step, name)
-                if os.path.exists(path):
-                    shutil.rmtree(path)
-                    removed.append(path)
-        return removed
-
-    def read(self, step: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.table_path(step, name))
-
-    def read_latest(self, name: str) -> DataFrame | None:
-        step = self.last_committed_step()
-        if step is None:
-            return None
-        path = self.table_path(step, name)
-        if not os.path.exists(path):
-            return None
-        return self.spark.read.parquet(path)
+    def read_steps(self, steps: list[int], name: str) -> DataFrame:
+        """Table `name` of the committed `steps`, as one frame read by
+        explicit path. Raises FileNotFoundError when any is missing."""
+        paths = [self.table_path(s, name) for s in steps]
+        for p in paths:
+            if not os.path.isdir(p):
+                raise FileNotFoundError(
+                    f"committed checkpoint table missing: {p} (a checkpoint "
+                    "in another layout cannot be resumed)"
+                )
+        return self.spark.read.parquet(*paths)

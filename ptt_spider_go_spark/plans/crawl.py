@@ -14,9 +14,13 @@ frontier (BASELINE.json north_star). Each superstep:
   6. push-rate filter on candidates (F1), global URL-seen dedup of
      new candidates (D4: Bloom shards + exact anti-join verify)
   7. next frontier = fresh candidates ∪ deferred ∪ retries
-  8. snapshot commit (frontier/seen/output deltas + metrics)
+  8. append-only commit of frames the step already materialized: the
+     step ledger (steps 0-3: every frontier row with its gate or fetch
+     outcome), the parsed rows and the seen delta (fresh)
 
-After the loop, one deterministic assembly pass applies the global
+After the loop, one deterministic assembly pass derives every output
+table from the per-step (ledger, parsed) parts — the same code whether
+the parts were committed or only held in memory — applies the global
 dir-collision window (D3) and renders download_tasks / markdown_docs.
 Assembly is scheduling-independent: its window order is
 (page_no desc, pos, url), so deferred/retried articles land in the
@@ -27,7 +31,6 @@ what makes kill-and-resume byte-identical.
 from __future__ import annotations
 
 import functools
-import os
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -119,15 +122,15 @@ _FRONTIER_SCHEMA = (
     "pos int, depth int, warc_ts timestamp, title string, author string, "
     "push_rate int, attempt int, backoff_ms long"
 )
-_SEEN_SCHEMA = "url string"
-_ARTICLE_SCHEMA = (
-    "board string, page_no int, src_url string, pos int, title string, "
-    "url string, author string, push_rate int"
+#: a step ledger row: the frontier row (attempt/backoff advanced on a
+#: 429 retry) with its outcome — trapped, blocked, deferred, ok,
+#: retry_429 or failed — final HTTP status and trap rule or blocklist
+#: pattern
+_LEDGER_SCHEMA = (
+    _FRONTIER_SCHEMA
+    + ", outcome string, status int, reason string, superstep int"
 )
-_LOG_SCHEMA = (
-    "superstep int, url string, kind string, outcome string, attempt int, "
-    "backoff_ms long, status int"
-)
+_PARSED_SCHEMA = PARSED_ALL_SCHEMA + ", superstep int"
 
 
 def run_crawl(
@@ -154,7 +157,7 @@ def run_crawl(
     sketch_telemetry: bool = False,
 ) -> CrawlResult:
     """Run the crawl to fixpoint (or cfg.max_supersteps) and assemble
-    outputs. `checkpoint_dir` enables snapshot/resume; with
+    outputs. `checkpoint_dir` enables per-step commits + resume; with
     `resume=True` the loop continues from the last committed superstep.
 
     Two opt-in loop stages (default off, so the pinned reference-parity
@@ -191,8 +194,9 @@ def run_crawl(
     ckpt = CheckpointManager(checkpoint_dir, spark) if checkpoint_dir else None
 
     # Filter state is driver-resident and never persisted: on resume
-    # the Bloom filter is rebuilt from the committed seen snapshot, so
-    # the checkpoint manifest stays the crawl's only commit protocol.
+    # the Bloom filter is rebuilt from the committed seed and fresh
+    # deltas, so the checkpoint manifest stays the crawl's only commit
+    # protocol.
     blooms = BloomShardSet(cfg.bloom_shards, fpp=cfg.bloom_fpp)
     # north_star: cuckoo-filter verification pass on Bloom probable hits
     # (~99% of Bloom FPs never reach the exact anti-join). Engages
@@ -223,17 +227,29 @@ def run_crawl(
             cuckoo_active = True
         return cuckoos
 
+    # Per-step (ledger, parsed) parts — assembly's only input, in both
+    # modes. A resumed run reads the committed steps' parts back once;
+    # every step run here appends its in-memory (checkpointed) frames.
+    ledgers: list[DataFrame] = []
+    parsed_parts: list[DataFrame] = []
     start_step = 0
-
-    if resume and ckpt and ckpt.last_committed_step() is not None:
-        start_step = ckpt.last_committed_step() + 1
-        frontier = ckpt.read_latest("frontier")
-        seen = ckpt.read_latest("seen")
-        if seen is not None:
-            # cuckoo_active stays False: _cuckoo_for_step bulk-builds the
-            # cuckoo filter from seen once n_seen_est crosses its threshold
-            blooms.add_df(seen)
-            n_seen_est = seen.count()
+    last = ckpt.last_committed_step() if resume and ckpt else None
+    if last is not None:
+        start_step = last + 1
+        done = list(range(start_step))
+        ledgers.append(ckpt.read_steps(done, "ledger"))
+        parsed_parts.append(ckpt.read_steps(done, "parsed"))
+        seed = None  # committed with step 0
+        seen = ckpt.read_steps([0], "seed").select("url").unionByName(
+            ckpt.read_steps(done, "fresh").select("url")
+        )
+        frontier = _next_frontier(
+            ckpt.read_steps([last], "ledger"), ckpt.read_steps([last], "fresh")
+        )
+        # cuckoo_active stays False: _cuckoo_for_step bulk-builds the
+        # cuckoo filter from seen once n_seen_est crosses its threshold
+        blooms.add_df(seen)
+        n_seen_est = seen.count()
     else:
         if file_mode:
             frontier = file_frontier(spark, file_urls_path)
@@ -261,28 +277,27 @@ def run_crawl(
         seed_w = Window.partitionBy("url").orderBy(
             F.col("kind_rank").asc(), F.col("page_no").desc(), F.col("pos").asc()
         )
-        frontier = (
-            frontier.withColumn("_r", F.row_number().over(seed_w))
-            .filter(F.col("_r") == 1)
-            .drop("_r")
-        )
+        with _timed("init.seed_frontier", timings):
+            seed = frontier = (
+                frontier.withColumn("_r", F.row_number().over(seed_w))
+                .filter(F.col("_r") == 1)
+                .select(FRONTIER_COLS)
+                .localCheckpoint(eager=True)
+            )
         seen = frontier.select("url")
         with _timed("init.bloom_seed", timings):
             blooms.add_df(seen)  # bloom must stay a superset of seen
-        n_seen_est = frontier.count()  # seed frontier is small by construction
+        n_seen_est = frontier.count()  # checkpointed -> cheap count
 
     pages_fetch = pages.select("url", "warc_ts", "html", "text")
 
-    mem_steps: list[dict] = []
-    trapped_parts: list[DataFrame] = []
-    blocked_parts: list[DataFrame] = []
     budget_log_parts: list[DataFrame] = []
     cur_budgets = host_budgets
     step = start_step
     while step < cfg.max_supersteps:
         # Lineage truncation: an iterative loop's logical plan otherwise
-        # grows superlinearly. Checkpointed runs cut lineage via the
-        # snapshot re-read below; both modes cut the frontier here.
+        # grows superlinearly; every frame the loop carries (frontier,
+        # ledger, parsed rows, fresh) is localCheckpointed once.
         with _timed(f"step{step}.frontier_ckpt", timings):
             frontier = frontier.select(FRONTIER_COLS).localCheckpoint(eager=True)
 
@@ -290,20 +305,23 @@ def run_crawl(
             if frontier.isEmpty():
                 break
 
+        # 0-3. the step ledger: each frontier row tagged with the gate
+        # or fetch outcome that decides it this superstep, materialized
+        # once. The fetch probe, next frontier, fetch log and trapped /
+        # blocked tables are all filters over it.
+        gated: list[DataFrame] = []
+        passing = frontier
+
         # 0. crawler-trap gate (opt-in, default off so the pinned
         # reference-parity outputs are untouched): flag-and-divert,
         # never silently drop — trapped rows land in the `trapped`
         # result table with their rule, mirroring the quarantine
         # pattern. Stateless projection, zero extra shuffles.
         if trap_filter:
-            fl = with_trap_flags(frontier)
-            trapped_parts.append(
-                fl.filter(F.col("is_trap")).select(
-                    "url", F.col("trap_reason").alias("reason"),
-                    F.lit(step).alias("superstep"),
-                )
-            )
-            frontier = fl.filter(~F.col("is_trap")).select(FRONTIER_COLS)
+            fl = with_trap_flags(passing)
+            gated.append(_tag(fl.filter(F.col("is_trap")), "trapped",
+                              reason=F.col("trap_reason")))
+            passing = fl.filter(~F.col("is_trap")).select(FRONTIER_COLS)
 
         # 0b. domain-blocklist gate (opt-in, same flag-and-divert
         # contract as the trap gate): registrable-domain suffix match
@@ -312,16 +330,12 @@ def run_crawl(
         # result table with their winning pattern, never silently drop.
         if blocklist is not None:
             bl = blocklist_filter(
-                frontier.withColumn("_bhost", url_host(F.col("url"))),
+                passing.withColumn("_bhost", url_host(F.col("url"))),
                 blocklist, host_col="_bhost",
             )
-            blocked_parts.append(
-                bl.filter(F.col("blocked")).select(
-                    "url", F.col("matched_pattern").alias("pattern"),
-                    F.lit(step).alias("superstep"),
-                )
-            )
-            frontier = bl.filter(~F.col("blocked")).select(FRONTIER_COLS)
+            gated.append(_tag(bl.filter(F.col("blocked")), "blocked",
+                              reason=F.col("matched_pattern")))
+            passing = bl.filter(~F.col("blocked")).select(FRONTIER_COLS)
 
         # 1. robots + 2. politeness budget. `robots_wildcards` (opt-in,
         # default off — the trap_filter pattern) reads the rule table's
@@ -335,9 +349,9 @@ def run_crawl(
                 if "pattern" in robots.columns
                 else robots.withColumnRenamed("path_prefix", "pattern")
             )
-            allowed = apply_robots_wildcard(frontier, r)
+            allowed = apply_robots_wildcard(passing, r)
         else:
-            allowed = apply_robots(frontier, robots)
+            allowed = apply_robots(passing, robots)
         admitted, deferred = budget_gate(
             allowed, cfg.host_budget_per_superstep, cfg.host_salt,
             host_budgets=cur_budgets,
@@ -345,7 +359,17 @@ def run_crawl(
 
         # 3. retry ledger over simulated statuses
         ok, retry, failed = apply_fetch_status(admitted, fetch_events)
-        ok = ok.drop("status")
+        gated += [_tag(deferred, "deferred"), _tag(ok, "ok", status=200)]
+        if retry is not None:
+            gated.append(_tag(retry, "retry_429", status=429))
+        if failed is not None:
+            gated.append(_tag(failed, "failed", status=F.col("status")))
+        with _timed(f"step{step}.ledger", timings):
+            ledger = (
+                functools.reduce(DataFrame.unionByName, gated)
+                .withColumn("superstep", F.lit(step))
+                .localCheckpoint(eager=True)
+            )
 
         # 4+5. fetch ⋈ parse in ONE pass over the pages table: the join
         # streams the (huge) pages scan against the frontier, and a
@@ -366,14 +390,15 @@ def run_crawl(
         # shuffle join, which scales with cores. The frontier is
         # localCheckpointed, so the row-count probe is a cheap cached
         # count, the same class as the is_empty probe above.
-        probe = ok.drop("warc_ts")
+        probe = ledger.filter(F.col("outcome") == "ok").select(
+            [c for c in FRONTIER_COLS if c != "warc_ts"]
+        )
         if broadcast_frontier == "auto":
             do_broadcast = frontier.count() <= broadcast_max_rows
         else:
             do_broadcast = bool(broadcast_frontier)
         build = F.broadcast(probe) if do_broadcast else probe
         found = pages_fetch.join(build, on="url", how="inner")
-        missing = probe.join(pages_fetch.select("url"), on="url", how="left_anti")
 
         kernel_in = found.select(
             "url", "kind", "board", "page_no", "pos", "title", "author",
@@ -381,58 +406,37 @@ def run_crawl(
             *(["text"] if verify_text else []),
         )
         with _timed(f"step{step}.fetch_parse", timings):
-            parsed_all = kernel_in.mapInPandas(
-                make_parse_page_kernel(verify_text, cfg.push_rate),
-                PARSED_ALL_SCHEMA,
-            ).localCheckpoint(eager=True)
-
-        # 5a. article rows from index pages (P1) + F1 push threshold
-        # (board-mode producer filter, crawler.go:414)
-        admitted_articles = (
-            parsed_all.filter(F.col("row_kind") == "art")
-            .filter(F.col("push_rate") >= F.lit(cfg.push_rate))
-            .select("board", "page_no", "src_url", "pos", "title", "url",
-                    "author", "push_rate")
-        )
-
-        candidates = (
-            parsed_all.filter(F.col("row_kind") == "art")
-            .filter(F.col("push_rate") >= F.lit(cfg.push_rate))
-            .select(
-                "url",
-                F.lit("article").alias("kind"),
-                F.lit(1).alias("kind_rank"),
-                "board",
-                "page_no",
-                "pos",
-                F.lit(2).alias("depth"),
-                "warc_ts",
-                "title",
-                "author",
-                "push_rate",
-                F.lit(1).alias("attempt"),
-                F.lit(0).cast("long").alias("backoff_ms"),
+            parsed_all = (
+                kernel_in.mapInPandas(
+                    make_parse_page_kernel(verify_text, cfg.push_rate),
+                    PARSED_ALL_SCHEMA,
+                )
+                .withColumn("superstep", F.lit(step))
+                .localCheckpoint(eager=True)
             )
-        )
 
-        # 5b. article contents (P2 + D1 + D2 already applied in-kernel);
-        # superstep rides along for the progress-event taxonomy (T7).
-        content = parsed_all.filter(F.col("row_kind") == "content").select(
-            F.lit(step).alias("superstep"),
-            "url", "board", "page_no", "pos", "title", "author", "push_rate",
-            "parsed_title",
-            final_title(
-                F.coalesce(F.col("title"), F.lit("")),
-                F.col("parsed_title"),
-                file_mode,
-            ).alias("final_title"),
-            "img_urls", "file_names", "text_match",
+        # 5a. candidate articles from index pages (P1) + F1 push
+        # threshold (board-mode producer filter, crawler.go:414)
+        candidates = _article_rows(parsed_all, cfg.push_rate).select(
+            "url",
+            F.lit("article").alias("kind"),
+            F.lit(1).alias("kind_rank"),
+            "board",
+            "page_no",
+            "pos",
+            F.lit(2).alias("depth"),
+            "warc_ts",
+            "title",
+            "author",
+            "push_rate",
+            F.lit(1).alias("attempt"),
+            F.lit(0).cast("long").alias("backoff_ms"),
         )
 
         # 6. dedup new candidates: within-batch first (deterministic
         # winner by priority) then against the global seen set. fresh is
-        # used three times below (next frontier, seen union, bloom add)
-        # -> materialize it once.
+        # used four times below (next frontier, seen union, bloom add,
+        # commit) -> materialize it once.
         w = Window.partitionBy("url").orderBy(
             F.col("page_no").desc(), F.col("pos").asc()
         )
@@ -449,37 +453,6 @@ def run_crawl(
                 .localCheckpoint(eager=True)
             )
 
-        # 7. bookkeeping tables for this superstep. The 'fetched' rows
-        # come from the already-materialized parse result — no extra
-        # pages scan; 'missing' is a column-pruned url-only anti-join.
-        # The final HTTP status rides along so the quarantine can name
-        # the true cause (a 500 is not an exhausted 429 retry).
-        lit_step = F.lit(step)
-        log_rows = (
-            parsed_all.filter(F.col("row_kind") == "fetch").select(
-                lit_step.alias("superstep"), "url", "kind",
-                F.lit("fetched").alias("outcome"), "attempt", "backoff_ms",
-                F.lit(200).alias("status"),
-            )
-            .unionByName(missing.select(
-                lit_step.alias("superstep"), "url", "kind",
-                F.lit("missing_404").alias("outcome"), "attempt", "backoff_ms",
-                F.lit(404).alias("status"),
-            ))
-        )
-        if retry is not None:
-            log_rows = log_rows.unionByName(retry.select(
-                lit_step.alias("superstep"), "url", "kind",
-                F.lit("retry_429").alias("outcome"), "attempt", "backoff_ms",
-                F.lit(429).alias("status"),
-            ))
-        if failed is not None:
-            log_rows = log_rows.unionByName(failed.select(
-                lit_step.alias("superstep"), "url", "kind",
-                F.lit("failed").alias("outcome"), "attempt", "backoff_ms",
-                "status",
-            ))
-
         # AIMD control loop (opt-in): the budgets gating superstep k+1
         # are a pure function of this superstep's fetch statuses — one
         # tiny groupBy(host) over the log, localCheckpointed (the
@@ -493,7 +466,7 @@ def run_crawl(
             )
             with _timed(f"step{step}.aimd_budgets", timings):
                 cur_budgets = aimd_budgets(
-                    prev_b, log_rows,
+                    prev_b, _fetch_log(ledger, parsed_all),
                     default_budget=cfg.host_budget_per_superstep,
                 ).localCheckpoint(eager=True)
             budget_log_parts.append(
@@ -502,16 +475,15 @@ def run_crawl(
                 )
             )
 
-        next_frontier = fresh.unionByName(deferred.select(FRONTIER_COLS))
-        if retry is not None:
-            next_frontier = next_frontier.unionByName(retry.select(FRONTIER_COLS))
+        # 7. next frontier = fresh ∪ deferred ∪ retries
+        frontier = _next_frontier(ledger, fresh)
 
-        # Enqueue-time seen update: only the freshly admitted candidates
-        # are new — deferred/retry URLs are already members. fresh was
-        # anti-joined against the current seen set, so the pieces are
-        # DISJOINT: a plain union is already duplicate-free (no distinct
-        # shuffle), and both inputs are checkpointed, so the union needs
-        # no re-materialization of its own.
+        # Enqueue-time seen update: only the freshly admitted
+        # candidates are new — deferred/retry URLs are already members.
+        # fresh was anti-joined against the current seen set, so the
+        # pieces are DISJOINT: a plain union is already duplicate-free
+        # (no distinct shuffle), and every piece is checkpointed (or
+        # committed), so the union needs no materialization of its own.
         new_seen = fresh.select("url")
         seen = seen.unionByName(new_seen)
         with _timed(f"step{step}.bloom_add", timings):
@@ -520,69 +492,44 @@ def run_crawl(
                 cuckoos.add_df(new_seen)  # incremental once engaged
             n_seen_est += fresh.count()  # checkpointed -> cheap count
 
-        # 8. snapshot commit. Output tables are written as per-step
-        # deltas (append-only, like Iceberg appends); frontier/seen are
-        # the loop-carried state and re-read from the committed snapshot,
-        # which both truncates lineage and makes resume exact.
+        # 8. append-only commit (like Iceberg appends) of the frames
+        # this step already materialized: each write is one job over a
+        # checkpointed frame, and nothing committed is rewritten.
+        ledgers.append(ledger)
+        parsed_parts.append(parsed_all)
         if ckpt:
-            ckpt.write_step(
-                step,
-                {
-                    "frontier": next_frontier,
-                    "seen": seen,
-                    "articles_delta": admitted_articles,
-                    "contents_delta": content,
-                    "fetch_log_delta": log_rows,
-                },
-                extra={"board": cfg.board, "file_mode": file_mode},
-            )
-            next_frontier = ckpt.read(step, "frontier")
-            seen = ckpt.read(step, "seen")
-            # Iceberg expire_snapshots analogue: older frontier/seen
-            # copies are dead the moment this commit lands (resume reads
-            # only the latest step); without expiry the store grows
-            # O(steps x |seen|). Delta tables are history — kept.
-            ckpt.expire_snapshots()
-        else:
-            # Nothing to materialize here: seen is a union of
-            # checkpointed disjoint pieces, and next_frontier is a union
-            # of checkpointed fresh plus cheap windows over the already-
-            # checkpointed frontier — the top-of-loop checkpoint
-            # materializes it on the next iteration.
-            #
-            # articles/contents/log are cheap filters over the already-
-            # materialized parsed_all — keep them lazy; the references
-            # hold the checkpointed RDD alive until final assembly.
-            mem_steps.append(
-                {
-                    "articles": admitted_articles,
-                    "contents": content,
-                    "log": log_rows,
-                }
-            )
+            tables = {"seed": seed} if step == 0 else {}
+            tables.update(ledger=ledger, parsed=parsed_all, fresh=fresh)
+            ckpt.write_step(step, tables,
+                            extra={"board": cfg.board, "file_mode": file_mode})
 
-        frontier = next_frontier
         step += 1
 
     # ---- final assembly (deterministic, scheduling-independent) ----------
-    if ckpt:
-        steps = list(range(0, (ckpt.last_committed_step() or 0) + 1))
-        articles = _union_steps(spark, ckpt, steps, "articles_delta", _ARTICLE_SCHEMA)
-        contents = _union_steps(spark, ckpt, steps, "contents_delta", None)
-        fetch_log = _union_steps(spark, ckpt, steps, "fetch_log_delta", _LOG_SCHEMA)
-    else:
-        articles = _union_mem(spark, [m["articles"] for m in mem_steps], _ARTICLE_SCHEMA)
-        contents = _union_mem(spark, [m["contents"] for m in mem_steps], None)
-        fetch_log = _union_mem(spark, [m["log"] for m in mem_steps], _LOG_SCHEMA)
-
-    if contents is None:
-        contents = _empty(
-            spark,
-            "superstep int, url string, board string, page_no int, pos int, "
-            "title string, author string, push_rate int, parsed_title string, "
-            "final_title string, img_urls array<string>, "
-            "file_names array<string>, text_match boolean",
-        )
+    # The ledger union and the fetch log are each materialized once
+    # (localCheckpoint, filled on first use) and shared by every output
+    # table that reads them. Left a union, the ledger would also let
+    # Catalyst split the missing_404 anti-join into one shuffle join
+    # per superstep.
+    ledger = _union(spark, ledgers, _LEDGER_SCHEMA).localCheckpoint(eager=False)
+    parsed = _union(spark, parsed_parts, _PARSED_SCHEMA)
+    articles = _article_rows(parsed, cfg.push_rate).select(
+        "board", "page_no", "src_url", "pos", "title", "url", "author",
+        "push_rate",
+    )
+    # article contents (P2 + D1 + D2 already applied in-kernel);
+    # superstep rides along for the progress-event taxonomy (T7).
+    contents = parsed.filter(F.col("row_kind") == "content").select(
+        "superstep", "url", "board", "page_no", "pos", "title", "author",
+        "push_rate", "parsed_title",
+        final_title(
+            F.coalesce(F.col("title"), F.lit("")),
+            F.col("parsed_title"),
+            file_mode,
+        ).alias("final_title"),
+        "img_urls", "file_names", "text_match",
+    )
+    fetch_log = _fetch_log(ledger, parsed).localCheckpoint(eager=False)
 
     # D3: global dir-collision suffixing in canonical priority order.
     contents = with_unique_dir(contents)
@@ -669,26 +616,20 @@ def run_crawl(
         progress_events=events,
         quarantine=quarantine_from_fetch_log(fetch_log),
         trapped=(
-            functools.reduce(DataFrame.unionByName, trapped_parts)
-            if trapped_parts
-            else _empty(spark, "url string, reason string, superstep int")
-        )
-        if trap_filter
-        else None,
+            ledger.filter(F.col("outcome") == "trapped")
+            .select("url", "reason", "superstep")
+            if trap_filter else None
+        ),
         blocked=(
-            functools.reduce(DataFrame.unionByName, blocked_parts)
-            if blocked_parts
-            else _empty(spark, "url string, pattern string, superstep int")
-        )
-        if blocklist is not None
-        else None,
+            ledger.filter(F.col("outcome") == "blocked")
+            .select("url", F.col("reason").alias("pattern"), "superstep")
+            if blocklist is not None else None
+        ),
         host_budget_log=(
-            functools.reduce(DataFrame.unionByName, budget_log_parts)
-            if budget_log_parts
-            else _empty(spark, "superstep int, host string, budget long")
-        )
-        if aimd
-        else None,
+            _union(spark, budget_log_parts,
+                   "superstep int, host string, budget long")
+            if aimd else None
+        ),
         archive_cdx=archive_cdx,
         url_telemetry=url_telemetry,
         supersteps=step - start_step,
@@ -697,24 +638,61 @@ def run_crawl(
     )
 
 
-def _union_steps(spark, ckpt, steps, name, schema):
-    dfs = []
-    for s in steps:
-        p = ckpt.table_path(s, name)
-        if os.path.exists(p):
-            dfs.append(spark.read.parquet(p))
-    return _union_mem(spark, dfs, schema)
+def _tag(df: DataFrame, outcome: str, status=None, reason=None) -> DataFrame:
+    """`df`'s frontier columns as step-ledger rows of `outcome`.
+    `status` / `reason` are a value or Column (NULL when omitted)."""
+    return df.select(
+        *FRONTIER_COLS,
+        F.lit(outcome).alias("outcome"),
+        F.lit(status).cast("int").alias("status"),
+        F.lit(reason).cast("string").alias("reason"),
+    )
 
 
-def _union_mem(spark, dfs, schema):
-    dfs = [d for d in dfs if d is not None]
+def _next_frontier(ledger: DataFrame, fresh: DataFrame) -> DataFrame:
+    """The frontier after a step: its fresh candidates plus the rows it
+    deferred or re-enqueued for a 429 retry. The loop and resume both
+    build it here."""
+    return fresh.select(FRONTIER_COLS).unionByName(
+        ledger.filter(F.col("outcome").isin("deferred", "retry_429"))
+        .select(FRONTIER_COLS)
+    )
+
+
+def _article_rows(parsed: DataFrame, push_rate: int) -> DataFrame:
+    """Parsed index-page article rows at or above the push threshold."""
+    return parsed.filter(F.col("row_kind") == "art").filter(
+        F.col("push_rate") >= F.lit(push_rate)
+    )
+
+
+def _fetch_log(ledger: DataFrame, parsed: DataFrame) -> DataFrame:
+    """Fetch-log rows of (ledger, parsed) parts: `fetched` for each page
+    the parse kernel received (it emits one `fetch` row per joined
+    page), `missing_404` for an `ok` row without one, and the ledger's
+    `retry_429` / `failed` rows. The final HTTP status rides along so
+    the quarantine can name the true cause (a 500 is not an exhausted
+    429 retry)."""
+    fetched = parsed.filter(F.col("row_kind") == "fetch").select(
+        "superstep", "url", "kind", F.lit("fetched").alias("outcome"),
+        "attempt", "backoff_ms", F.lit(200).alias("status"),
+    )
+    missing = (
+        ledger.filter(F.col("outcome") == "ok")
+        .join(fetched.select("superstep", "url"), ["superstep", "url"],
+              "left_anti")
+        .select("superstep", "url", "kind",
+                F.lit("missing_404").alias("outcome"), "attempt",
+                "backoff_ms", F.lit(404).alias("status"))
+    )
+    dropped = ledger.filter(
+        F.col("outcome").isin("retry_429", "failed")
+    ).select("superstep", "url", "kind", "outcome", "attempt", "backoff_ms",
+             "status")
+    return fetched.unionByName(missing).unionByName(dropped)
+
+
+def _union(spark: SparkSession, dfs: list[DataFrame], schema: str) -> DataFrame:
     if not dfs:
-        return _empty(spark, schema) if schema else None
-    out = dfs[0]
-    for d in dfs[1:]:
-        # allowMissingColumns: checkpoint deltas written before a schema
-        # gained a column (e.g. fetch_log's status, ADVICE r3) union
-        # against new deltas with NULLs in the missing column; the
-        # quarantine builder's status fallback then covers those rows.
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
+        return _empty(spark, schema)
+    return functools.reduce(DataFrame.unionByName, dfs)

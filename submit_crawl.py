@@ -8,7 +8,7 @@ command works on YARN/k8s/standalone and local[N]):
         submit_crawl.py \
         --pages <parquet dir/table of (url, warc_ts, html, text, lang)> \
         --board beauty --pages-n 3 --push 10 \
-        --checkpoint <durable dir for superstep snapshots> \
+        --checkpoint <durable dir for the per-superstep commits> \
         --out <output dir> [--resume]
 
 Outputs (parquet under --out): articles/, markdown_docs/, metrics/,

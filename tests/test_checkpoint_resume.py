@@ -1,36 +1,52 @@
-"""T5: snapshot checkpointing + exact kill-and-resume.
+"""T5: append-only superstep commits + exact kill-and-resume.
 
 The invariant (BASELINE.json:14): resuming from the last committed
-superstep snapshot produces byte-identical final tables to an
-uninterrupted run.
+superstep produces byte-identical final tables to an uninterrupted run,
+wherever inside a superstep the crash happened.
 """
 
+import json
 import os
+import shutil
 
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from ptt_spider_go_spark.config import CrawlConfig
-from ptt_spider_go_spark.datagen import pages_pandas
+from ptt_spider_go_spark.datagen import fetch_events_pandas, pages_pandas
 from ptt_spider_go_spark.operators.dedup import BloomShardSet, CuckooShardSet
+from ptt_spider_go_spark.plans import checkpoint as ckmod
 from ptt_spider_go_spark.plans.checkpoint import CheckpointManager
 from ptt_spider_go_spark.plans.crawl import run_crawl
 
 BOARD = "Beauty"
-
-
-@pytest.fixture(scope="module")
-def pages(spark):
-    return spark.createDataFrame(
-        pages_pandas(boards=(BOARD,), pages_per_board=3, slots_per_page=6)
-    ).cache()
+STEP_TABLES = ("ledger", "parsed", "fresh")
 
 
 def _cfg(**kw):
+    # a budget of 8 fetches per superstep and the generator's 429
+    # schedule spread the crawl over several supersteps, so deferred
+    # and retried rows cross every commit
     base = dict(board=BOARD, pages=3, push_rate=0, host_salt=4,
-                max_supersteps=6)
+                workers=1, superstep_ms=10_000, max_supersteps=10)
     base.update(kw)
     return CrawlConfig(**base)
+
+
+@pytest.fixture(scope="module")
+def crawl(spark):
+    """run(checkpoint_dir, resume=False, **cfg) over the 3-page fixture."""
+    pdf = pages_pandas(boards=(BOARD,), pages_per_board=3, slots_per_page=6)
+    pages = spark.createDataFrame(pdf).cache()
+    events = spark.createDataFrame(fetch_events_pandas(pdf)).cache()
+
+    def run(ckpt_dir, resume=False, **cfg):
+        return run_crawl(spark, pages, _cfg(**cfg), fetch_events=events,
+                         checkpoint_dir=ckpt_dir, resume=resume,
+                         verify_text=False)
+
+    return run
 
 
 def _rows(df):
@@ -41,6 +57,7 @@ def _rows(df):
 def _snapshot(res):
     return {
         "articles": sorted(map(tuple, res.articles.collect())),
+        "contents": _rows(res.contents),
         "tasks": sorted(map(tuple, res.download_tasks.collect())),
         "markdown": sorted(
             (r["article_url"], r["content"]) for r in res.markdown_docs.collect()
@@ -53,11 +70,33 @@ def _snapshot(res):
     }
 
 
-def _committed_seen(spark, ckpt_dir):
-    return sorted(
-        r["url"] for r in
-        CheckpointManager(ckpt_dir, spark).read_latest("seen").collect()
-    )
+def _last_step(ckpt_dir):
+    with open(os.path.join(ckpt_dir, "_manifest.json")) as f:
+        return json.load(f)["step"]
+
+
+def _committed_seen(ckpt_dir):
+    """The seed URLs plus every committed step's fresh URLs, read
+    straight from the parquet files."""
+    paths = [os.path.join(ckpt_dir, "step=0", "seed")] + [
+        os.path.join(ckpt_dir, f"step={s}", "fresh")
+        for s in range(_last_step(ckpt_dir) + 1)
+    ]
+    return sorted(u for p in paths
+                  for u in pq.read_table(p, columns=["url"])["url"].to_pylist())
+
+
+def _step_files(ckpt_dir, steps):
+    """(size, mtime, inode) of every file under the given step dirs."""
+    out = {}
+    for s in steps:
+        root = os.path.join(ckpt_dir, f"step={s}")
+        for dirpath, _, names in os.walk(root):
+            for n in names:
+                st = os.stat(os.path.join(dirpath, n))
+                out[os.path.relpath(os.path.join(dirpath, n), ckpt_dir)] = (
+                    st.st_size, st.st_mtime_ns, st.st_ino)
+    return out
 
 
 def _record_adds(monkeypatch, cls):
@@ -74,97 +113,181 @@ def _record_adds(monkeypatch, cls):
     return added
 
 
-def test_kill_and_resume_identical(spark, pages, tmp_path, monkeypatch):
-    """Resume rebuilds the Bloom filter from the committed seen snapshot
-    (filter state is never persisted: no `filters/` directory), then
-    adds each resumed superstep's fresh URLs, and every compared table
-    equals the uninterrupted run's."""
-    full_dir = tmp_path / "full"
-    part_dir = tmp_path / "part"
+@pytest.fixture(scope="module")
+def full(crawl, tmp_path_factory):
+    """One uninterrupted checkpointed crawl: (snapshot, checkpoint dir)."""
+    d = str(tmp_path_factory.mktemp("full") / "ck")
+    res = crawl(d)
+    assert res.supersteps >= 4
+    outcomes = {r["outcome"] for r in res.fetch_log.collect()}
+    assert {"fetched", "retry_429", "failed"} <= outcomes
+    return _snapshot(res), d
 
-    # Uninterrupted run with checkpointing.
-    full = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(full_dir),
-                     verify_text=False)
-    assert full.supersteps >= 2
 
-    # "Killed" run: stop after the first superstep commits...
-    run_crawl(spark, pages, _cfg(max_supersteps=1),
-              checkpoint_dir=str(part_dir), verify_text=False)
-    committed_seen = _committed_seen(spark, str(part_dir))
+@pytest.fixture(scope="module")
+def step0(crawl, tmp_path_factory):
+    """A crawl "killed" right after superstep 0 committed."""
+    d = str(tmp_path_factory.mktemp("step0") / "ck")
+    crawl(d, max_supersteps=1)
+    assert _last_step(d) == 0
+    return d
+
+
+def _copy(src, tmp_path):
+    dst = str(tmp_path / "ck")
+    shutil.copytree(src, dst, copy_function=shutil.copy2)
+    return dst
+
+
+def test_kill_and_resume_identical(crawl, full, step0, tmp_path,
+                                   monkeypatch):
+    """Resume rebuilds the Bloom filter from the seed and committed
+    fresh URLs (filter state is never persisted: no `filters/`
+    directory), then adds each resumed superstep's fresh URLs; every
+    compared table equals the uninterrupted run's, and nothing under the
+    committed step is rewritten."""
+    d = _copy(step0, tmp_path)
+    before = _step_files(d, [0])
     added = _record_adds(monkeypatch, BloomShardSet)
-    # ...then resume from the snapshot.
-    resumed = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(part_dir),
-                        resume=True, verify_text=False)
+    resumed = crawl(d, resume=True)
 
     assert resumed.supersteps >= 1
-    assert added[0] == committed_seen
+    assert added[0] == _committed_seen(step0)
     assert len(added) == 1 + resumed.supersteps
-    for d in (full_dir, part_dir):
-        assert not os.path.exists(d / "filters")
-    assert _snapshot(full) == _snapshot(resumed)
+    assert not os.path.exists(os.path.join(d, "filters"))
+    assert _step_files(d, [0]) == before
+    assert _snapshot(resumed) == full[0]
 
 
-def test_kill_and_resume_identical_with_cuckoo_engaged(spark, pages, tmp_path,
+def test_kill_and_resume_identical_with_cuckoo_engaged(crawl, full,
+                                                      step0, tmp_path,
                                                       monkeypatch):
     """With the cuckoo layer on from the start (cuckoo_min_seen=0), a
-    resumed run bulk-builds it from the committed seen snapshot before
-    its first probe, and every compared table equals the uninterrupted
-    run's."""
-    cfg = dict(cuckoo_min_seen=0)
-    full = run_crawl(spark, pages, _cfg(**cfg),
-                     checkpoint_dir=str(tmp_path / "full"), verify_text=False)
-    part_dir = str(tmp_path / "part")
-    run_crawl(spark, pages, _cfg(max_supersteps=1, **cfg),
-              checkpoint_dir=part_dir, verify_text=False)
-    committed_seen = _committed_seen(spark, part_dir)
+    resumed run bulk-builds it from the committed seen URLs before its
+    first probe, and every compared table equals the uninterrupted
+    run's. The checkpoint holds no filter state, so the superstep-0
+    commit is the same whichever filters the killed run used."""
+    d = _copy(step0, tmp_path)
     added = _record_adds(monkeypatch, CuckooShardSet)
-    resumed = run_crawl(spark, pages, _cfg(**cfg), checkpoint_dir=part_dir,
-                        resume=True, verify_text=False)
+    resumed = crawl(d, resume=True, cuckoo_min_seen=0)
 
     assert resumed.supersteps >= 1
-    assert added[0] == committed_seen
-    assert _snapshot(full) == _snapshot(resumed)
+    assert added[0] == _committed_seen(step0)
+    assert _snapshot(resumed) == full[0]
 
 
-def test_resume_noop_when_finished(spark, pages, tmp_path):
-    d = tmp_path / "done"
-    first = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(d),
-                      verify_text=False)
-    again = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(d),
-                      resume=True, verify_text=False)
-    assert again.supersteps <= 1  # only the empty-frontier probe
-    assert _snapshot(first) == _snapshot(again)
+def test_resume_noop_when_finished(crawl, full, tmp_path):
+    d = _copy(full[1], tmp_path)
+    steps = range(_last_step(d) + 1)
+    before = _step_files(d, steps)
+    again = crawl(d, resume=True)
+    assert again.supersteps == 0  # only the empty-frontier probe
+    assert _snapshot(again) == full[0]
+    assert _step_files(d, steps) == before
 
 
-def test_manifest_counts_present(spark, pages, tmp_path):
-    d = tmp_path / "m"
-    run_crawl(spark, pages, _cfg(), checkpoint_dir=str(d), verify_text=False)
-    ck = CheckpointManager(str(d), spark)
-    m = ck.load_manifest()
+def test_manifest_counts_present(spark, full):
+    m = CheckpointManager(full[1], spark).load_manifest()
     assert m is not None
-    assert set(m["tables"]) == {
-        "frontier", "seen", "articles_delta", "contents_delta", "fetch_log_delta"
-    }
-    assert m["tables"]["seen"] > 0
+    assert set(m["tables"]) == set(STEP_TABLES)
+    assert m["tables"]["ledger"] > 0
 
 
-def test_expire_snapshots_keeps_history_drops_stale_state(spark, pages,
-                                                          tmp_path):
-    """Iceberg expire_snapshots analogue: after a multi-step crawl,
-    only the latest step still holds frontier/seen, every step keeps
-    its *_delta history, and resume from the expired store is exact."""
-    d = tmp_path / "exp"
-    full = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(d),
-                     verify_text=False)
-    assert full.supersteps >= 2
-    ck = CheckpointManager(str(d), spark)
-    last = ck.last_committed_step()
-    for step in range(last + 1):
-        state_present = os.path.exists(ck.table_path(step, "seen"))
-        assert state_present == (step == last), step
-        assert os.path.exists(ck.table_path(step, "articles_delta")), step
+def test_committed_steps_keep_their_tables(full):
+    """Every committed step keeps its own append-only tables (step 0
+    also the seed frontier), and the manifest's counts are the last
+    step's row counts."""
+    d = full[1]
+    last = _last_step(d)
+    for s in range(last + 1):
+        names = STEP_TABLES + (("seed",) if s == 0 else ())
+        assert sorted(os.listdir(os.path.join(d, f"step={s}"))) == \
+            sorted(names), s
+        # a step commits only while its frontier is non-empty
+        assert pq.read_table(os.path.join(d, f"step={s}", "ledger")) \
+            .num_rows > 0, s
+    with open(os.path.join(d, "_manifest.json")) as f:
+        counts = json.load(f)["tables"]
+    for name in STEP_TABLES:
+        assert counts[name] == pq.read_table(
+            os.path.join(d, f"step={last}", name)).num_rows
 
-    # resume over the expired store is still a no-op with equal tables
-    again = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(d),
-                      resume=True, verify_text=False)
-    assert _snapshot(full) == _snapshot(again)
+
+@pytest.mark.parametrize("step, table", [(0, "seed"), (1, "ledger"),
+                                         (1, "parsed"), (1, "fresh")])
+def test_resume_raises_on_missing_committed_table(crawl, full,
+                                                 tmp_path, step, table):
+    """A committed table that is gone is an error, never fewer rows."""
+    d = _copy(full[1], tmp_path)
+    shutil.rmtree(os.path.join(d, f"step={step}", table))
+    with pytest.raises(FileNotFoundError, match=f"step={step}/{table}"):
+        crawl(d, resume=True)
+
+
+def test_resume_raises_on_old_layout(crawl, tmp_path):
+    """A checkpoint of the frontier/seen snapshot layout cannot be
+    resumed: the resume raises instead of returning empty tables."""
+    d = tmp_path / "old"
+    for name in ("frontier", "seen", "articles_delta", "contents_delta",
+                 "fetch_log_delta"):
+        os.makedirs(d / "step=0" / name)
+    (d / "_manifest.json").write_text(json.dumps(
+        {"step": 0, "tables": {"frontier": 1, "seen": 1}, "extra": {}}))
+    with pytest.raises(FileNotFoundError, match="another layout"):
+        crawl(str(d), resume=True)
+
+
+class _Crash(Exception):
+    pass
+
+
+CRASH_POINTS = [(when, t) for t in (*STEP_TABLES, "_manifest.json")
+                for when in ("before", "after")]
+
+
+@pytest.mark.parametrize("when, target", CRASH_POINTS)
+def test_crash_inside_superstep_commit_resumes_identical(
+        crawl, full, step0, tmp_path, monkeypatch, when, target):
+    """A crash before or after any table write of superstep 1, or
+    before or after its manifest rename, resumes to the uninterrupted
+    run's tables. A crash before a write leaves a stray file in that
+    table's directory; the re-run step overwrites it."""
+    d = _copy(step0, tmp_path)
+    committed = _step_files(d, [0])
+    real_parquet = DataFrameWriter.parquet
+    real_replace = os.replace
+
+    def parquet(self, path, *a, **kw):
+        hit = path == os.path.join(d, "step=1", target)
+        if hit and when == "before":
+            os.makedirs(path, exist_ok=True)
+            with open(os.path.join(path, "part-00000-stray.parquet"), "wb") as f:
+                f.write(b"partial")
+            raise _Crash(path)
+        out = real_parquet(self, path, *a, **kw)
+        if hit:
+            raise _Crash(path)
+        return out
+
+    def replace(src, dst):
+        hit = os.path.basename(dst) == target
+        if hit:
+            with open(src) as f:
+                hit = json.load(f)["step"] == 1
+        if hit and when == "before":
+            raise _Crash(dst)
+        real_replace(src, dst)
+        if hit:
+            raise _Crash(dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        m.setattr(ckmod.os, "replace", replace)
+        with pytest.raises(_Crash):
+            crawl(d, resume=True)
+    assert _last_step(d) == (1 if (target, when) == ("_manifest.json",
+                                                     "after") else 0)
+
+    resumed = crawl(d, resume=True)
+    assert _snapshot(resumed) == full[0]
+    assert _step_files(d, [0]) == committed

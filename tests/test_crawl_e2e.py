@@ -309,6 +309,42 @@ def test_trap_filter_diverts_without_dropping_silently(spark, dataset, tmp_path)
     assert trap in {r["url"] for r in res_off.fetch_log.collect()}
 
 
+def test_trapped_and_blocked_survive_kill_and_resume(spark, dataset,
+                                                     tmp_path):
+    """With the trap gate and a blocklist on, a checkpointed crawl
+    killed after superstep 0 and resumed returns the same `trapped` and
+    `blocked` rows as an uninterrupted (in-memory) run: both tables are
+    derived from the committed step ledgers, not from run-local lists.
+    File mode seeds only www.ptt.cc URLs, so the blocklist names that
+    host; the trap gate runs first and keeps the calendar loop."""
+    golden_all = golden_crawl(dataset, BOARD, PAGES, 0)
+    url = golden_all["contents"][0]["url"]
+    trap = "https://www.ptt.cc/bbs" + "/cal/2024" * 4 + "/M.1.A.html"
+    f = tmp_path / "urls.txt"
+    f.write_text("\n".join([url, trap]))
+    bl = spark.createDataFrame([("www.ptt.cc",)], "pattern string")
+    pages = spark.createDataFrame(dataset)
+
+    def run(max_supersteps=4, **kw):
+        cfg = CrawlConfig(board=BOARD, pages=1, push_rate=0,
+                          max_supersteps=max_supersteps)
+        return run_crawl(spark, pages, cfg, file_urls_path=str(f),
+                         trap_filter=True, blocklist=bl, **kw)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    full = run()
+    assert rows(full.trapped) == [(trap, "repeated_segments", 0)]
+    assert rows(full.blocked) == [(url, "www.ptt.cc", 0)]
+
+    d = str(tmp_path / "ck")
+    run(checkpoint_dir=d, max_supersteps=1)
+    resumed = run(checkpoint_dir=d, resume=True)
+    assert rows(resumed.trapped) == rows(full.trapped)
+    assert rows(resumed.blocked) == rows(full.blocked)
+
+
 def test_blocklist_gate_inert_list_is_output_parity(spark, dataset):
     """Opt-in domain-blocklist gate with patterns matching no crawled
     host: the `blocked` table exists and is empty, and articles equal
