@@ -343,9 +343,9 @@ def _salt_ab(spark, cpus: int) -> dict:
         best = None
         for _ in range(2):  # best-of-2, same window-noise rationale
             t0 = time.time()
-            admitted, deferred = budget_gate(frontier, host_budget, salt)
-            n_adm = admitted.count()
-            _force(deferred)
+            gated = budget_gate(frontier, host_budget, salt)
+            n_adm = gated.filter("admitted").count()
+            _force(gated.filter("NOT admitted"))
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         counts[salt] = n_adm

@@ -451,11 +451,10 @@ def q_budget_override_gate(spark, sf_dir):
     overrides = spark.createDataFrame(
         [("h0.test", 10), ("h1.test", 3)], "host string, budget long"
     )
-    admitted, _ = budget_gate(
+    return budget_gate(
         frontier, host_budget=15, salt=1,
         order_cols=[F.col("url").asc()], host_budgets=overrides,
-    )
-    return admitted.select("event_id", "url")
+    ).filter("admitted").select("event_id", "url")
 
 
 SQL_BUDGET_OVERRIDE_GATE = """

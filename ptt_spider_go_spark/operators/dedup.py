@@ -470,7 +470,9 @@ def dedup_against_seen(candidates: DataFrame, seen: DataFrame | None,
         return candidates
     if blooms is None:
         return candidates.join(seen.select(url_col), on=url_col, how="left_anti")
-    probed = blooms.with_maybe_seen(candidates, url_col)
+    # both branches read the probe: one job runs it once per candidate
+    probed = blooms.with_maybe_seen(candidates, url_col).localCheckpoint(
+        eager=True)
     fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     probable = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
     if counters is not None:

@@ -21,15 +21,22 @@ arrive as a host/path-prefix table and apply as a broadcast anti-filter.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ptt_spider_go_spark.functions.columns import url_host
 
 
 def apply_robots(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """Drop frontier rows whose (host, path-prefix) is disallowed.
-    `robots` is tiny -> broadcast join.
+    """Drop frontier rows robots_allowed disallows."""
+    if robots is None:
+        return frontier
+    return robots_allowed(frontier, robots).filter("allowed").drop("allowed")
+
+
+def robots_allowed(frontier: DataFrame, robots: DataFrame) -> DataFrame:
+    """`frontier` + an `allowed` flag from (host, path_prefix, allowed)
+    rules. `robots` is tiny -> broadcast join.
 
     RFC 9309 §2.2.2 precedence: the MATCHING prefix with the most
     OCTETS decides (UTF-8 byte length, not characters — '/café' is 6
@@ -37,8 +44,6 @@ def apply_robots(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
     matching rule (including a host with rules none of which match, or
     a host with no rules at all) is ALLOWED; when an Allow and a
     Disallow match at equal octet length, Allow wins."""
-    if robots is None:
-        return frontier
     f = frontier.withColumn("_host", url_host(F.col("url"))).withColumn(
         "_path", F.coalesce(F.try_parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
     )
@@ -59,7 +64,7 @@ def apply_robots(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
         joined.withColumn("_mlen", match_len)
         .withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") == 1)
-        .filter((F.col("_mlen") < 0) | F.col("_allowed"))
+        .withColumn("allowed", (F.col("_mlen") < 0) | F.col("_allowed"))
     )
     return best.drop("_host", "_path", "_pfx", "_allowed", "_mlen", "_r")
 
@@ -82,15 +87,17 @@ def budgets_from_crawl_delays(delays: DataFrame, workers: int,
 
 def budget_gate(frontier: DataFrame, host_budget: int, salt: int,
                 order_cols: list | None = None,
-                host_budgets: DataFrame | None = None
-                ) -> tuple[DataFrame, DataFrame]:
-    """Split the frontier into (admitted, deferred) under per-host budgets.
+                host_budgets: DataFrame | None = None,
+                eligible: Column | None = None) -> DataFrame:
+    """The frontier with an `admitted` flag under per-host budgets;
+    rows not admitted are deferred to the next superstep.
 
     Admission is priority order within each of `salt` lanes per host;
     lane budgets sum exactly to the host's budget. `host_budgets`
     ((host, budget), tiny -> broadcast) overrides the global
-    `host_budget` per host — the robots Crawl-delay hook. Returns both
-    halves so the superstep loop can re-enqueue the deferred rows.
+    `host_budget` per host — the robots Crawl-delay hook. Only rows
+    where `eligible` holds (default: every row) compete for the budget:
+    the rest rank after them in their lane and are never admitted.
     """
     order_cols = order_cols or [
         F.col("kind_rank").asc(),
@@ -98,36 +105,28 @@ def budget_gate(frontier: DataFrame, host_budget: int, salt: int,
         F.col("warc_ts").asc(),
         F.col("url").asc(),
     ]
+    if eligible is not None:
+        order_cols = [eligible.desc(), *order_cols]
     lane = F.pmod(F.xxhash64(F.col("url")), F.lit(salt))
-    base, rem = divmod(host_budget, salt)
-    lane_budget = F.when(F.col("_lane") < rem, F.lit(base + 1)).otherwise(
-        F.lit(base)
-    )
     w = Window.partitionBy("_host", "_lane").orderBy(*order_cols)
     tagged = frontier.withColumn("_host", url_host(F.col("url")))
+    budget = F.lit(host_budget).cast("long")
     if host_budgets is not None:
         ov = host_budgets.select(F.col("host").alias("_host"),
                                  F.col("budget").alias("_hb"))
         tagged = tagged.join(F.broadcast(ov), on="_host", how="left")
-        eff = F.coalesce(F.col("_hb"), F.lit(host_budget).cast("long"))
-        # exact per-host lane split of the effective budget
-        lane_budget = (
-            F.floor(eff / salt)
-            + F.when(F.col("_lane") < eff % salt, F.lit(1)).otherwise(F.lit(0))
-        ).cast("long")
-    tagged = (
+        budget = F.coalesce(F.col("_hb"), budget)
+    # exact per-host lane split: the first budget % salt lanes take one more
+    lane_budget = (F.floor(budget / salt)
+                   + (F.col("_lane") < budget % salt).cast("long"))
+    admitted = F.row_number().over(w) <= lane_budget
+    if eligible is not None:
+        admitted = eligible & admitted
+    return (
         tagged.withColumn("_lane", lane)
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_cap", lane_budget)
-        .drop("_hb")
+        .withColumn("admitted", admitted)
+        .drop("_host", "_lane", "_hb")
     )
-    admitted = tagged.filter(F.col("_rn") <= F.col("_cap")).drop(
-        "_host", "_lane", "_rn", "_cap"
-    )
-    deferred = tagged.filter(F.col("_rn") > F.col("_cap")).drop(
-        "_host", "_lane", "_rn", "_cap"
-    )
-    return admitted, deferred
 
 
 def aimd_budgets(prev_budgets: DataFrame, fetch_log: DataFrame,

@@ -41,69 +41,63 @@ RETRY_SIM_NOW = "2026-01-01 00:00:00"
 
 
 def apply_fetch_status(frontier: DataFrame, fetch_events: DataFrame | None,
-                       now: Column | None = None
-                       ) -> tuple[DataFrame, DataFrame, DataFrame]:
+                       now: Column | None = None,
+                       fetched: Column | None = None) -> DataFrame:
     """Resolve this superstep's fetch outcomes.
 
-    frontier must carry an `attempt` column (1-based). Returns
-    (ok, retry, failed):
-      ok     — status 200 rows, proceed to parse
-      retry  — status 429 and attempt < RETRY_MAX_ATTEMPTS; re-enqueue
-               with attempt+1 and backoff_ms accumulated
-      failed — 429 with attempts exhausted (retry.go:39-41), or any
-               other non-200 status (never retried, retry.go:28-30)
+    frontier must carry an `attempt` column (1-based). Returns it
+    tagged with `outcome` and the final HTTP `status`:
+      ok        — status 200, proceeds to parse
+      retry_429 — status 429 and attempt < RETRY_MAX_ATTEMPTS; the only
+                  rows whose attempt (+1) and backoff_ms (accumulated)
+                  advance, for re-enqueueing
+      failed    — 429 with attempts exhausted (retry.go:39-41), or any
+                  other non-200 status (never retried, retry.go:28-30)
+    Rows where `fetched` is false (default: every row is fetched) are
+    not fetched this superstep: their outcome and status are NULL.
     """
-    if fetch_events is None:
-        return frontier.withColumn("status", F.lit(200)), None, None
-
-    has_header = "retry_after" in fetch_events.columns
-    has_legacy = "retry_after_s" in fetch_events.columns
-
-    # Renamed join keys: the retry output feeds back into this function
-    # next superstep, so same-name dataframe["col"] references would be
-    # ambiguous across rounds.
-    cols = [
-        F.col("url").alias("_url"),
-        F.col("attempt").alias("_att"),
-        F.col("status").alias("_status"),
-    ]
-    if has_header:
-        cols.append(F.col("retry_after").alias("_rah"))
-    if has_legacy:
-        cols.append(F.col("retry_after_s").alias("_ra"))
-    ev = fetch_events.select(*cols)
-    tmp_cols = ["_status"] + (["_rah"] if has_header else []) + (
-        ["_ra"] if has_legacy else [])
-
-    joined = frontier.join(
-        ev,
-        on=[F.col("url") == F.col("_url"), F.col("attempt") == F.col("_att")],
-        how="left",
-    ).drop("_url", "_att")
-    resolved = joined.withColumn(
-        "status", F.coalesce(F.col("_status"), F.lit(200))
-    )
-
-    if has_header:
-        delay = retry_after_delay_ms(
-            F.col("_rah"), F.col("attempt"),
-            now if now is not None else F.lit(RETRY_SIM_NOW).cast("timestamp"),
+    resolved, status, delay, tmp_cols = frontier, F.lit(200), F.lit(0), []
+    if fetch_events is not None:
+        # Renamed join keys: retry rows feed back into this function
+        # next superstep, so same-name dataframe["col"] references would
+        # be ambiguous across rounds.
+        ev = fetch_events.select(
+            F.col("url").alias("_url"),
+            F.col("attempt").alias("_att"),
+            F.col("status").alias("_status"),
+            *[F.col(c).alias(a)
+              for c, a in (("retry_after", "_rah"), ("retry_after_s", "_ra"))
+              if c in fetch_events.columns],
         )
-    elif has_legacy:
-        delay = retry_backoff_ms(F.col("attempt"), F.col("_ra"))
-    else:
-        delay = retry_backoff_ms(F.col("attempt"))
+        tmp_cols = ev.columns
+        resolved = frontier.join(
+            ev,
+            on=[F.col("url") == F.col("_url"),
+                F.col("attempt") == F.col("_att")],
+            how="left",
+        )
+        status = F.coalesce(F.col("_status"), F.lit(200))
+        if "_rah" in tmp_cols:
+            delay = retry_after_delay_ms(
+                F.col("_rah"), F.col("attempt"),
+                now if now is not None
+                else F.lit(RETRY_SIM_NOW).cast("timestamp"),
+            )
+        elif "_ra" in tmp_cols:
+            delay = retry_backoff_ms(F.col("attempt"), F.col("_ra"))
+        else:
+            delay = retry_backoff_ms(F.col("attempt"))
 
-    ok = resolved.filter(F.col("status") == 200).drop(*tmp_cols)
-    is_429 = F.col("status") == 429
-    retry = (
-        resolved.filter(is_429 & (F.col("attempt") < RETRY_MAX_ATTEMPTS))
-        .withColumn("backoff_ms", F.col("backoff_ms") + delay)
-        .withColumn("attempt", F.col("attempt") + 1)
-        .drop(*tmp_cols, "status")
-    )
-    failed = resolved.filter(
-        (is_429 & (F.col("attempt") >= RETRY_MAX_ATTEMPTS))
-        | (~is_429 & (F.col("status") != 200))
-    ).drop(*tmp_cols)
-    return ok, retry, failed
+    if fetched is not None:
+        status = F.when(fetched, status)
+    resolved = resolved.withColumn("status", status)
+    retry = (F.col("status") == 429) & (F.col("attempt") < RETRY_MAX_ATTEMPTS)
+    return resolved.withColumns({
+        "outcome": F.when(F.col("status") == 200, F.lit("ok"))
+        .when(retry, F.lit("retry_429"))
+        .when(F.col("status").isNotNull(), F.lit("failed")),
+        "backoff_ms": F.when(retry, F.col("backoff_ms") + delay)
+        .otherwise(F.col("backoff_ms")),
+        "attempt": F.when(retry, F.col("attempt") + 1)
+        .otherwise(F.col("attempt")),
+    }).drop(*tmp_cols)

@@ -13,7 +13,7 @@ changes nothing above this module):
   A committed step is never rewritten, re-read by the loop or expired.
 - a commit is the atomic rename of ``_manifest.json.tmp`` ->
   ``_manifest.json`` recording the committed step + per-table row
-  counts
+  counts (a fresh crawl's step 0 first removes an older manifest)
 - resume reads steps 0..last by an explicit path list, never a glob: a
   step directory a crash left half-written is ignored, and overwritten
   when that step re-runs. A committed table that is missing (or a
@@ -70,7 +70,11 @@ class CheckpointManager:
     def write_step(self, step: int, tables: dict[str, DataFrame],
                    extra: dict[str, Any] | None = None) -> dict[str, int]:
         """Write every table of `step`, then commit atomically. Returns
-        per-table row counts (the snapshot's summary lineage)."""
+        per-table row counts (the snapshot's summary lineage). Step 0
+        first removes an older crawl's manifest: a crash before this
+        commit must not resume the new step 0 under the old steps."""
+        if step == 0 and os.path.exists(self._manifest_path):
+            os.remove(self._manifest_path)
         counts: dict[str, int] = {}
         for name, df in tables.items():
             path = self.table_path(step, name)

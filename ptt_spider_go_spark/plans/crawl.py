@@ -4,9 +4,13 @@ A bounded BFS expressed as a batch superstep loop — not Structured
 Streaming — because the crawl is an iterative fixpoint over a priority
 frontier (BASELINE.json north_star). Each superstep:
 
+  0. opt-in trap and blocklist flags (flag-and-divert)
   1. robots filter (broadcast anti-filter)           [north_rule]
-  2. per-host politeness budget gate, salted lanes   (T1/T6)
+  2. per-host politeness budget flag, salted lanes   (T1/T6)
   3. retry-ledger resolution of simulated statuses   (T2)
+     — steps 0-3 are column producers, and the step ledger is ONE
+     projection over their flags: one budget rank and one fetch-status
+     join per superstep
   4. "fetch" = equi-join frontier ⋈ pages on url     (J1; broadcast
      hint on the frontier side — the budget bounds its size)
   5. Arrow-vectorized parse: index pages -> article rows (P1, UDTF
@@ -54,9 +58,9 @@ from ptt_spider_go_spark.operators.dedup import (
 )
 from ptt_spider_go_spark.operators.politeness import (
     aimd_budgets,
-    apply_robots,
-    apply_robots_wildcard,
     budget_gate,
+    robots_allowed,
+    robots_wildcard_verdicts,
     with_trap_flags,
 )
 from ptt_spider_go_spark.operators.progress import (
@@ -302,15 +306,17 @@ def run_crawl(
             frontier = frontier.select(FRONTIER_COLS).localCheckpoint(eager=True)
 
         with _timed(f"step{step}.is_empty", timings):
-            if frontier.isEmpty():
-                break
+            n_frontier = frontier.count()  # checkpointed -> cheap count
+        if n_frontier == 0:
+            break
 
-        # 0-3. the step ledger: each frontier row tagged with the gate
-        # or fetch outcome that decides it this superstep, materialized
-        # once. The fetch probe, next frontier, fetch log and trapped /
-        # blocked tables are all filters over it.
-        gated: list[DataFrame] = []
-        passing = frontier
+        # 0-3. the step ledger: ONE projection tags each frontier row
+        # with the gate or fetch outcome that decides it this superstep
+        # (trapped, else blocked, else deferred or the fetch outcome),
+        # over one budget rank and one fetch-status join. It is
+        # materialized once; the fetch probe, next frontier, fetch log
+        # and trapped / blocked tables are all filters over it.
+        gated, diverted, reason = frontier, F.lit(None), F.lit(None)
 
         # 0. crawler-trap gate (opt-in, default off so the pinned
         # reference-parity outputs are untouched): flag-and-divert,
@@ -318,10 +324,9 @@ def run_crawl(
         # result table with their rule, mirroring the quarantine
         # pattern. Stateless projection, zero extra shuffles.
         if trap_filter:
-            fl = with_trap_flags(passing)
-            gated.append(_tag(fl.filter(F.col("is_trap")), "trapped",
-                              reason=F.col("trap_reason")))
-            passing = fl.filter(~F.col("is_trap")).select(FRONTIER_COLS)
+            gated = with_trap_flags(gated)
+            diverted = F.when(F.col("is_trap"), F.lit("trapped"))
+            reason = F.when(F.col("is_trap"), F.col("trap_reason"))
 
         # 0b. domain-blocklist gate (opt-in, same flag-and-divert
         # contract as the trap gate): registrable-domain suffix match
@@ -329,47 +334,51 @@ def run_crawl(
         # (operators/blocklist.py); blocked rows land in the `blocked`
         # result table with their winning pattern, never silently drop.
         if blocklist is not None:
-            bl = blocklist_filter(
-                passing.withColumn("_bhost", url_host(F.col("url"))),
+            gated = blocklist_filter(
+                gated.withColumn("_bhost", url_host(F.col("url"))),
                 blocklist, host_col="_bhost",
             )
-            gated.append(_tag(bl.filter(F.col("blocked")), "blocked",
-                              reason=F.col("matched_pattern")))
-            passing = bl.filter(~F.col("blocked")).select(FRONTIER_COLS)
+            diverted = F.coalesce(
+                diverted, F.when(F.col("blocked"), F.lit("blocked")))
+            reason = F.coalesce(
+                reason, F.when(F.col("blocked"), F.col("matched_pattern")))
+        passing = diverted.isNull()
 
-        # 1. robots + 2. politeness budget. `robots_wildcards` (opt-in,
-        # default off — the trap_filter pattern) reads the rule table's
-        # path column as RFC 9309 full wildcard patterns (X90) instead
-        # of plain prefixes; on metachar-free rules the two matchers
-        # are provably identical (parity-pinned), so flipping the flag
-        # never changes a prefix-rule crawl.
-        if robots_wildcards and robots is not None:
-            r = (
-                robots
-                if "pattern" in robots.columns
-                else robots.withColumnRenamed("path_prefix", "pattern")
+        # 1. robots + 2. politeness budget, over the rows no gate above
+        # diverted; a robots-disallowed row leaves the ledger.
+        # `robots_wildcards` (opt-in, default off — the trap_filter
+        # pattern) reads the rule table's path column as RFC 9309 full
+        # wildcard patterns (X90) instead of plain prefixes; on
+        # metachar-free rules the two matchers are provably identical
+        # (parity-pinned), so flipping the flag never changes a
+        # prefix-rule crawl.
+        if robots is not None:
+            gated = (
+                robots_wildcard_verdicts(
+                    gated, robots.withColumnRenamed("path_prefix", "pattern"))
+                if robots_wildcards else robots_allowed(gated, robots)
             )
-            allowed = apply_robots_wildcard(passing, r)
-        else:
-            allowed = apply_robots(passing, robots)
-        admitted, deferred = budget_gate(
-            allowed, cfg.host_budget_per_superstep, cfg.host_salt,
-            host_budgets=cur_budgets,
+            gated = gated.filter(~passing | F.col("allowed"))
+        gated = budget_gate(
+            gated, cfg.host_budget_per_superstep, cfg.host_salt,
+            host_budgets=cur_budgets, eligible=passing,
         )
 
-        # 3. retry ledger over simulated statuses
-        ok, retry, failed = apply_fetch_status(admitted, fetch_events)
-        gated += [_tag(deferred, "deferred"), _tag(ok, "ok", status=200)]
-        if retry is not None:
-            gated.append(_tag(retry, "retry_429", status=429))
-        if failed is not None:
-            gated.append(_tag(failed, "failed", status=F.col("status")))
+        # 3. retry ledger over simulated statuses, for admitted rows
+        # only: deferred rows keep their attempt and backoff
+        gated = apply_fetch_status(gated, fetch_events,
+                                   fetched=F.col("admitted"))
         with _timed(f"step{step}.ledger", timings):
-            ledger = (
-                functools.reduce(DataFrame.unionByName, gated)
-                .withColumn("superstep", F.lit(step))
-                .localCheckpoint(eager=True)
-            )
+            ledger = gated.select(
+                *FRONTIER_COLS,
+                # diverted and deferred rows are never fetched, so
+                # their fetch outcome is NULL
+                F.coalesce(diverted, "outcome", F.lit("deferred"))
+                .alias("outcome"),
+                F.col("status").cast("int"),
+                reason.cast("string").alias("reason"),
+                F.lit(step).alias("superstep"),
+            ).localCheckpoint(eager=True)
 
         # 4+5. fetch ⋈ parse in ONE pass over the pages table: the join
         # streams the (huge) pages scan against the frontier, and a
@@ -387,14 +396,13 @@ def run_crawl(
         # broadcast is SERIAL work that caps scaling (measured: a 734k-
         # row broadcast costs ~6 s at any core count, turning a 0.84-
         # efficient parse stage into 0.70). A big frontier takes the
-        # shuffle join, which scales with cores. The frontier is
-        # localCheckpointed, so the row-count probe is a cheap cached
-        # count, the same class as the is_empty probe above.
+        # shuffle join, which scales with cores. The decision reuses the
+        # frontier row count the empty-frontier probe above took.
         probe = ledger.filter(F.col("outcome") == "ok").select(
             [c for c in FRONTIER_COLS if c != "warc_ts"]
         )
         if broadcast_frontier == "auto":
-            do_broadcast = frontier.count() <= broadcast_max_rows
+            do_broadcast = n_frontier <= broadcast_max_rows
         else:
             do_broadcast = bool(broadcast_frontier)
         build = F.broadcast(probe) if do_broadcast else probe
@@ -635,17 +643,6 @@ def run_crawl(
         supersteps=step - start_step,
         wall_secs=time.time() - t0,
         timings=timings,
-    )
-
-
-def _tag(df: DataFrame, outcome: str, status=None, reason=None) -> DataFrame:
-    """`df`'s frontier columns as step-ledger rows of `outcome`.
-    `status` / `reason` are a value or Column (NULL when omitted)."""
-    return df.select(
-        *FRONTIER_COLS,
-        F.lit(outcome).alias("outcome"),
-        F.lit(status).cast("int").alias("status"),
-        F.lit(reason).cast("string").alias("reason"),
     )
 
 

@@ -5,6 +5,7 @@ superstep produces byte-identical final tables to an uninterrupted run,
 wherever inside a superstep the crash happened.
 """
 
+import contextlib
 import json
 import os
 import shutil
@@ -245,20 +246,17 @@ CRASH_POINTS = [(when, t) for t in (*STEP_TABLES, "_manifest.json")
                 for when in ("before", "after")]
 
 
-@pytest.mark.parametrize("when, target", CRASH_POINTS)
-def test_crash_inside_superstep_commit_resumes_identical(
-        crawl, full, step0, tmp_path, monkeypatch, when, target):
-    """A crash before or after any table write of superstep 1, or
-    before or after its manifest rename, resumes to the uninterrupted
-    run's tables. A crash before a write leaves a stray file in that
-    table's directory; the re-run step overwrites it."""
-    d = _copy(step0, tmp_path)
-    committed = _step_files(d, [0])
+@contextlib.contextmanager
+def _crash_at(d, step, when, target):
+    """Raise _Crash before or after `step`'s write of table `target`
+    under checkpoint dir `d`, or its `_manifest.json` rename. A crash
+    before a table write leaves a stray file in that table's
+    directory."""
     real_parquet = DataFrameWriter.parquet
     real_replace = os.replace
 
     def parquet(self, path, *a, **kw):
-        hit = path == os.path.join(d, "step=1", target)
+        hit = path == os.path.join(d, f"step={step}", target)
         if hit and when == "before":
             os.makedirs(path, exist_ok=True)
             with open(os.path.join(path, "part-00000-stray.parquet"), "wb") as f:
@@ -273,21 +271,52 @@ def test_crash_inside_superstep_commit_resumes_identical(
         hit = os.path.basename(dst) == target
         if hit:
             with open(src) as f:
-                hit = json.load(f)["step"] == 1
+                hit = json.load(f)["step"] == step
         if hit and when == "before":
             raise _Crash(dst)
         real_replace(src, dst)
         if hit:
             raise _Crash(dst)
 
-    with monkeypatch.context() as m:
+    with pytest.MonkeyPatch.context() as m:
         m.setattr(DataFrameWriter, "parquet", parquet)
         m.setattr(ckmod.os, "replace", replace)
         with pytest.raises(_Crash):
-            crawl(d, resume=True)
+            yield
+
+
+@pytest.mark.parametrize("when, target", CRASH_POINTS)
+def test_crash_inside_superstep_commit_resumes_identical(
+        crawl, full, step0, tmp_path, when, target):
+    """A crash before or after any table write of superstep 1, or
+    before or after its manifest rename, resumes to the uninterrupted
+    run's tables. A crash before a write leaves a stray file in that
+    table's directory; the re-run step overwrites it."""
+    d = _copy(step0, tmp_path)
+    committed = _step_files(d, [0])
+    with _crash_at(d, 1, when, target):
+        crawl(d, resume=True)
     assert _last_step(d) == (1 if (target, when) == ("_manifest.json",
                                                      "after") else 0)
 
     resumed = crawl(d, resume=True)
     assert _snapshot(resumed) == full[0]
     assert _step_files(d, [0]) == committed
+
+
+def test_fresh_crawl_into_used_dir_crash_before_step0_commit(
+        crawl, full, tmp_path):
+    """A fresh crawl into a directory that holds another committed
+    crawl, crashed before its step-0 manifest rename, resumes to the
+    uninterrupted run's tables: the old manifest is gone before the new
+    step 0 writes anything, so the resume starts over instead of
+    reading the new step 0 under the old crawl's later steps."""
+    d = str(tmp_path / "ck")
+    crawl(d, workers=3)  # another crawl: 24 fetches per superstep
+    assert _last_step(d) > 0
+    with _crash_at(d, 0, "before", "_manifest.json"):
+        crawl(d)
+    assert not os.path.exists(os.path.join(d, "_manifest.json"))
+
+    resumed = crawl(d, resume=True)
+    assert _snapshot(resumed) == full[0]

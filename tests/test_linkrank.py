@@ -119,8 +119,8 @@ def test_authority_budgets_compose_with_budget_gate(spark):
     budgets = linkrank.authority_budgets(ranks, 40)
     bmap = {r["host"]: r["budget"] for r in budgets.collect()}
     assert bmap == {"big.example": 30, "small.example": 10}
-    admitted, deferred = budget_gate(frontier, 0, salt=4,
-                                     host_budgets=budgets)
+    g = budget_gate(frontier, 0, salt=4, host_budgets=budgets)
+    admitted, deferred = g.filter("admitted"), g.filter("NOT admitted")
     adm = {
         r["h"]: r["n"]
         for r in admitted.groupBy(
@@ -186,7 +186,8 @@ def test_aimd_budgets_feed_budget_gate(spark):
          for h in ("hot.example", "cool.example") for i in range(20)],
         "url string, kind_rank int, page_no int, ts long",
     ).withColumn("warc_ts", F.timestamp_seconds(F.col("ts"))).drop("ts")
-    admitted, _ = budget_gate(frontier, 0, salt=2, host_budgets=budgets)
+    admitted = budget_gate(frontier, 0, salt=2,
+                           host_budgets=budgets).filter("admitted")
     adm = {r["h"]: r["n"] for r in admitted.groupBy(
         F.expr("parse_url(url, 'HOST')").alias("h")
     ).agg(F.count("*").alias("n")).collect()}

@@ -36,7 +36,8 @@ def _frontier(spark, urls, kind="article", page_no=1):
 def test_budget_gate_exact_host_total(spark):
     urls = [f"https://www.ptt.cc/bbs/B/M.{i}.A.html" for i in range(100)]
     f = _frontier(spark, urls)
-    admitted, deferred = budget_gate(f, host_budget=37, salt=8)
+    g = budget_gate(f, host_budget=37, salt=8)
+    admitted, deferred = g.filter("admitted"), g.filter("NOT admitted")
     na, nd = admitted.count(), deferred.count()
     assert na <= 37          # lane split never exceeds the host budget
     assert na + nd == 100
@@ -48,7 +49,7 @@ def test_budget_gate_exact_host_total(spark):
 def test_budget_gate_multiple_hosts_independent(spark):
     urls = [f"https://h{i % 3}.test/p{i}" for i in range(60)]
     f = _frontier(spark, urls)
-    admitted, _ = budget_gate(f, host_budget=5, salt=2)
+    admitted = budget_gate(f, host_budget=5, salt=2).filter("admitted")
     per_host = {
         r["h"]: r["n"]
         for r in admitted.groupBy(
@@ -70,8 +71,8 @@ def test_budget_gate_per_host_overrides(spark):
     overrides = spark.createDataFrame(
         [("h0.test", 4), ("h1.test", 25)], "host string, budget long"
     )
-    admitted, deferred = budget_gate(f, host_budget=10, salt=4,
-                                     host_budgets=overrides)
+    g = budget_gate(f, host_budget=10, salt=4, host_budgets=overrides)
+    admitted, deferred = g.filter("admitted"), g.filter("NOT admitted")
     per_host = {
         r["h"]: r["n"]
         for r in admitted.groupBy(
@@ -124,7 +125,7 @@ def test_budget_gate_priority_respected_within_lane(spark):
     idx = _frontier(spark, [f"https://www.ptt.cc/bbs/B/index{i}.html" for i in range(10)], "index")
     art = _frontier(spark, [f"https://www.ptt.cc/bbs/B/M.{i}.A.html" for i in range(10)])
     f = idx.unionByName(art)
-    admitted, _ = budget_gate(f, host_budget=10, salt=1)
+    admitted = budget_gate(f, host_budget=10, salt=1).filter("admitted")
     kinds = {r["kind"] for r in admitted.collect()}
     assert kinds == {"index"}
 
@@ -230,6 +231,12 @@ def test_apply_robots_unknown_host_allowed(spark):
 
 # --- T2 retry ledger ----------------------------------------------------------
 
+def _by_outcome(resolved):
+    """apply_fetch_status's rows split (ok, retry_429, failed)."""
+    return [resolved.filter(F.col("outcome") == o)
+            for o in ("ok", "retry_429", "failed")]
+
+
 def test_retry_ledger_flow(spark):
     f = _frontier(spark, ["https://x/ok", "https://x/once", "https://x/always", "https://x/gone"])
     events = spark.createDataFrame(
@@ -243,7 +250,7 @@ def test_retry_ledger_flow(spark):
         ],
         "url string, attempt int, status int, retry_after_s int",
     )
-    ok, retry, failed = apply_fetch_status(f, events)
+    ok, retry, failed = _by_outcome(apply_fetch_status(f, events))
     assert {r["url"] for r in ok.collect()} == {"https://x/ok"}
     r = retry.collect()
     assert {x["url"] for x in r} == {"https://x/once", "https://x/always"}
@@ -252,14 +259,14 @@ def test_retry_ledger_flow(spark):
     assert {x["url"] for x in failed.collect()} == {"https://x/gone"}
 
     # second round: re-enqueue the retry rows
-    ok2, retry2, failed2 = apply_fetch_status(retry, events)
+    ok2, retry2, failed2 = _by_outcome(apply_fetch_status(retry, events))
     assert {r["url"] for r in ok2.collect()} == {"https://x/once"}
     r2 = retry2.collect()
     assert {x["url"] for x in r2} == {"https://x/always"}
     assert all(x["backoff_ms"] == 1000 + 2000 for x in r2)
 
     # third round: attempts exhausted (RetryMaxAttempts = 3)
-    ok3, retry3, failed3 = apply_fetch_status(retry2, events)
+    ok3, retry3, failed3 = _by_outcome(apply_fetch_status(retry2, events))
     assert ok3.count() == 0 and retry3.count() == 0
     assert {x["url"] for x in failed3.collect()} == {"https://x/always"}
 
@@ -270,7 +277,7 @@ def test_retry_after_header_honored(spark):
         [("https://x/ra", 1, 429, 7)],
         "url string, attempt int, status int, retry_after_s int",
     )
-    _, retry, _ = apply_fetch_status(f, events)
+    retry = apply_fetch_status(f, events).filter("outcome = 'retry_429'")
     assert retry.first()["backoff_ms"] == 7000
 
 
@@ -294,7 +301,7 @@ def test_retry_after_raw_header_branches(spark):
         [(u, 1, 429, ra) for u, (ra, _) in cases.items()],
         "url string, attempt int, status int, retry_after string",
     )
-    _, retry, _ = apply_fetch_status(f, events)
+    retry = apply_fetch_status(f, events).filter("outcome = 'retry_429'")
     got = {r["url"]: r["backoff_ms"] for r in retry.collect()}
     assert got == {u: ms for u, (_, ms) in cases.items()}
 
@@ -312,6 +319,37 @@ def test_bloom_dedup_exactness(spark):
     # exactness invariant: exactly the 500..899 range survives — bloom
     # false positives must have been rescued by the verify join
     assert out == {f"https://s.test/{i}" for i in range(500, 900)}
+
+
+def test_dedup_probes_each_candidate_once(spark, monkeypatch):
+    """A superstep's `fresh` evaluates one Bloom probe: its bloom-miss
+    branch and its verified probable-hit branch share one pass, so each
+    candidate crosses into the Python probe exactly once."""
+    seen = spark.createDataFrame(
+        [(f"https://s.test/{i}",) for i in range(500)], "url string")
+    cand = spark.createDataFrame(
+        [(f"https://s.test/{i}",) for i in range(400, 900)], "url string")
+    blooms = BloomShardSet(n_shards=4, expected_per_shard=256)
+    blooms.add_df(seen)
+
+    probed = spark.sparkContext.accumulator(0)
+    cls = type(cand)
+    real = cls.mapInPandas
+
+    def counted(self, func, schema, *a, **kw):
+        def run(batches):
+            def tally():
+                for b in batches:
+                    probed.add(len(b))
+                    yield b
+            return func(tally())
+        return real(self, run, schema, *a, **kw)
+
+    monkeypatch.setattr(cls, "mapInPandas", counted)
+    fresh = dedup_against_seen(cand, seen, blooms)
+    assert {r["url"] for r in fresh.collect()} == \
+        {f"https://s.test/{i}" for i in range(500, 900)}
+    assert probed.value == 500
 
 
 def test_bloom_probe_no_false_negatives(spark):
