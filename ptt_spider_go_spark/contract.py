@@ -8579,8 +8579,8 @@ def q_winnow_fingerprints(spark, sf_dir):
     """Winnowing fingerprint selection (X134, pipeline/winnow.py —
     Schleimer/Wilkerson/Aiken SIGMOD 2003, the MOSS algorithm):
     char-8-gram md5 hashes, window of 4, rightmost-min (robust
-    winnowing) per window, distinct (hash, pos) per doc — all
-    map-only on in-row array expressions; short docs get one
+    winnowing) per window, distinct (hash, pos) per doc — one
+    map-only Arrow pass of a hashlib kernel; short docs get one
     truncated window so every doc with a gram owns a fingerprint.
     The oracle replays hashing, frame minima, and the rightmost-min
     tie-break bit-exactly."""
@@ -8768,8 +8768,8 @@ def q_cdc_chunks(spark, sf_dir):
     LBFS/restic/casync storage-dedup primitive; boundaries where the
     8-char window-end md5 % 64 == 0, so edits perturb only touched
     chunks and the tail re-aligns): per-doc chunk spans + 60-bit
-    chunk hashes, map-only in-row spans + one explode. The oracle
-    replays hashing, boundary selection, and span assembly
+    chunk hashes from one map-only Arrow pass of a hashlib kernel.
+    The oracle replays hashing, boundary selection, and span assembly
     bit-exactly."""
     from ptt_spider_go_spark.pipeline.cdc import cdc_chunks
 

@@ -479,7 +479,9 @@ def dedup_against_seen(candidates: DataFrame, seen: DataFrame | None,
         probable = probable.localCheckpoint(eager=True)
         counters["anti_join_input_after_bloom"] = probable.count()
     if cuckoos is not None:
-        p2 = cuckoos.with_maybe_seen(probable, url_col)
+        # the same for the cuckoo probe of the probable hits
+        p2 = cuckoos.with_maybe_seen(probable, url_col).localCheckpoint(
+            eager=True)
         fresh = fresh.unionByName(
             p2.filter(~F.col("maybe_seen")).drop("maybe_seen")
         )

@@ -25,14 +25,13 @@ documented trade-off here is the pure content-defined rule, whose
 degenerate case (adversarial content with no or all boundary hits)
 is bounded by document length.
 
-Distributed shape (the 100 TB contract): boundary selection and
-chunk spans ride IN-ROW on `_let`-bound array expressions (the X134
-lesson — the hash array is bound once; unbound references would
-re-evaluate the md5 transform per reference), then ONE explode to
-chunk rows; chunk hashing is map-only on the exploded rows. The
-dedup receipt is ONE groupBy on the 60-bit chunk hash (map-side
-combine) + ONE 1-row aggregate — chunk text never shuffles (only
-hashes and lengths do).
+Distributed shape (the 100 TB contract): chunking is ONE map-only
+Arrow pass (common.map_texts, shared with X134): each batch of
+(doc_id, text) crosses into Python once, hashlib hashes every window
+and every chunk in one C call, and only (doc_id, chunk_idx, start,
+length, chunk_hash) rows come back. The dedup receipt is ONE groupBy
+on the 60-bit chunk hash (map-side combine) + ONE 1-row aggregate —
+chunk text never shuffles (only hashes and lengths do).
 
 Reference tie-in: the Go crawler stores every image byte-for-byte
 with per-article dedup only (SURVEY §2 D1); storage-level chunk
@@ -43,10 +42,11 @@ content).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from collections.abc import Iterator
 
-from ptt_spider_go_spark.functions.columns import _let
-from ptt_spider_go_spark.pipeline.common import gram_hashes, md5_long
+from pyspark.sql import DataFrame, functions as F
+
+from ptt_spider_go_spark.pipeline.common import map_texts, md5_60, md5_60_grams
 
 #: rolling window width (chars), shared construction with X134.
 CDC_W = 8
@@ -54,68 +54,32 @@ CDC_W = 8
 CDC_D = 64
 
 
-def _spans(text: Column) -> Column:
-    """Array of (start, end) 1-based inclusive chunk spans for one
-    document — boundary positions from the bound window-hash array,
-    spans between consecutive boundaries. Short docs (< CDC_W chars)
-    are one whole-doc span; empty docs have none."""
-    n = F.char_length(text)
-
-    def spans_of(hs: Column) -> Column:
-        # hs[j] hashes the window ENDING at i = j + CDC_W;
-        # boundary positions: i where h_i % D == 0
-        b = F.filter(
-            F.transform(
-                hs,
-                lambda h, j: F.struct(
-                    (j + CDC_W).cast("long").alias("p"), h.alias("h")
-                ),
-            ),
-            lambda x: x["h"] % CDC_D == 0,
-        )
-        bpos = F.transform(b, lambda x: x["p"])
-        starts = F.concat(
-            F.array(F.lit(1).cast("long")),
-            F.transform(bpos, lambda p: p + 1),
-        )
-        ends = F.concat(bpos, F.array(n.cast("long")))
-        return F.filter(
-            F.zip_with(
-                starts, ends,
-                lambda s, e: F.struct(s.alias("s"), e.alias("e")),
-            ),
-            lambda sp: sp["s"] <= sp["e"],
-        )
-
-    return F.when(n <= 0, F.array().cast(
-        "array<struct<s:bigint,e:bigint>>"
-    )).otherwise(_let(gram_hashes(text, CDC_W), spans_of))
+def _chunks(text: str | None) -> Iterator[tuple[int, int, int, int]]:
+    """(chunk_idx, start, length, chunk_hash) of one document: a chunk
+    ends at every 1-based window-end position i whose window hash is
+    0 mod CDC_D, and the last chunk ends at the document's end. Docs
+    shorter than CDC_W chars are one whole-doc chunk; NULL and empty
+    docs have none."""
+    if not text:
+        return
+    n = len(text)
+    ends = [j + CDC_W for j, h in enumerate(md5_60_grams(text, CDC_W))
+            if h % CDC_D == 0]
+    if not ends or ends[-1] != n:
+        ends.append(n)
+    start = 1
+    for idx, end in enumerate(ends):
+        yield idx, start, end - start + 1, md5_60(text[start - 1:end])
+        start = end + 1
 
 
 def cdc_chunks(docs: DataFrame) -> DataFrame:
     """(doc_id, chunk_idx, start, length, chunk_hash): content-
     defined chunks per document — 0-based chunk_idx, 1-based char
-    start, and the 60-bit md5 of the chunk text. Map-only (one
-    in-row span computation + one explode). Unordered."""
-    spans = docs.select(
-        "doc_id", "text", _spans(F.col("text")).alias("sp")
-    )
-    ch = spans.select(
-        "doc_id", "text",
-        F.posexplode("sp").alias("chunk_idx", "c"),
-    )
-    return ch.select(
-        "doc_id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.col("c.s").alias("start"),
-        (F.col("c.e") - F.col("c.s") + 1).cast("long").alias("length"),
-        md5_long(
-            F.substring(
-                F.col("text"), F.col("c.s").cast("int"),
-                (F.col("c.e") - F.col("c.s") + 1).cast("int"),
-            )
-        ).alias("chunk_hash"),
-    )
+    start, and the 60-bit md5 of the chunk text. One map-only Arrow
+    pass. Unordered."""
+    return map_texts(docs, _chunks,
+                     ("chunk_idx", "start", "length", "chunk_hash"))
 
 
 def cdc_dedup_stats(docs: DataFrame) -> DataFrame:

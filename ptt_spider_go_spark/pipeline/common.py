@@ -4,16 +4,28 @@ All hashing is md5-hex based so the Spark implementation and the
 DuckDB oracle SQL can compute bit-identical values:
 
     Spark :  conv(substr(md5(x), 1, 15), 16, 10) :: long
+    Python:  int.from_bytes(md5(x.encode()).digest()[:8], "big") >> 4
     DuckDB:  ('0x' || substr(md5(x), 1, 15)) :: BIGINT
 
 15 hex chars = 60 bits < 63, so the value is always a positive BIGINT
-in both engines.
+in every engine.
+
+Char-gram operators (winnowing, CDC) hash ~one gram per character.
+They run `md5_60_grams` in plain Python inside one Arrow-batched
+`map_texts` pass per operator: hashlib does a gram's md5 in one C call,
+where a Catalyst array lambda interprets md5, hex, substr and conv per
+array element.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import hashlib
+from collections.abc import Callable, Iterable
+
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 WS = r"\s+"
 
@@ -29,20 +41,46 @@ def md5_long(c: Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(keyed), 1, 15), 16, 10).cast("long")
 
 
-def gram_hashes(text: Column, k: int) -> Column:
-    """md5_long of every char k-gram of `text`, in start order: element
-    j hashes chars [j+1, j+k] (1-based), so the array has
-    char_length - k + 1 entries; texts shorter than k give []. Bind the
-    result with columns._let before referencing it more than once —
-    each Column reference splices (and re-evaluates) the whole
-    per-position md5 transform."""
-    n = F.char_length(text)
-    return F.when(n < k, F.array().cast("array<bigint>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda i: md5_long(F.substring(text, i.cast("int"), F.lit(k))),
-        )
-    )
+def md5_60(s: str) -> int:
+    """md5_long of one Python string (the md5 of its UTF-8 bytes)."""
+    return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 4
+
+
+def md5_60_grams(text: str | None, k: int) -> list[int]:
+    """md5_60 of every char k-gram of `text`, in start order: element j
+    hashes chars [j, j+k) (0-based). Chars are code points, as in Spark's
+    substring and char_length, so a supplementary-plane character is one
+    char. Texts shorter than k, empty or NULL give []."""
+    if text is None:
+        return []
+    return [md5_60(text[i:i + k]) for i in range(len(text) - k + 1)]
+
+
+def map_texts(docs: DataFrame,
+              kernel: Callable[[str | None], Iterable[tuple[int, ...]]],
+              cols: tuple[str, ...]) -> DataFrame:
+    """(doc_id, *cols): one map-only Arrow pass of a plain-Python
+    per-document kernel. `kernel(text)` yields one tuple of BIGINTs per
+    output row; doc_id passes through with its input type. Only doc_id
+    and text cross into Python."""
+    schema = StructType([docs.schema["doc_id"]]
+                        + [StructField(c, LongType()) for c in cols])
+
+    def run(batches):
+        for b in batches:
+            src, rows = [], []
+            for i, text in enumerate(b.column(1).to_pylist()):
+                for r in kernel(text):
+                    src.append(i)
+                    rows.append(r)
+            out = list(zip(*rows)) or [()] * len(cols)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(pa.array(src, pa.int64()))]
+                + [pa.array(c, pa.int64()) for c in out],
+                names=["doc_id", *cols],
+            )
+
+    return docs.select("doc_id", "text").mapInArrow(run, schema)
 
 
 def md5_long_sql(expr: str, seed: int | None = None) -> str:

@@ -22,23 +22,24 @@ with at least one k-gram owns >= 1 fingerprint (whole-short-doc
 copies stay detectable).
 
 Distributed shape (the 100 TB contract): fingerprint selection is
-ONE map-only projection — gram hashes, window minima, and the
-distinct-(hash, pos) set all ride in-row on array expressions (the
-X37/X123 plan class; O(n·w) expression work per doc, no explode
-until the final fingerprint rows). The pair stage is the MinHash-
-band shape: distinct (doc, fp) -> df-cap the hot fingerprints
+ONE map-only Arrow pass (common.map_texts): each batch of (doc_id,
+text) crosses into Python once, hashlib hashes every gram in one C
+call, a per-doc loop picks the window minima (O(n·w) per doc), and
+only (doc_id, pos, fp) rows come back. The pair stage is the
+MinHash-band shape: distinct (doc, fp) -> df-cap the hot fingerprints
 (boilerplate runs — the same stop-token lever as X4/X128; a capped
 fp yields <= CAP·(CAP-1)/2 pairs, so no key can quadratic-blow the
 join) -> one equi-join on fp -> one pair groupBy. Text bytes never
 shuffle; only 60-bit hashes and positions do.
 
 Exactness: hashes are the repo-wide md5 60-bit construction
-(common.md5_long), bit-identical in DuckDB; minima, tie-breaks, and
-similarity ppm (BIGINT cross-multiplied floor division) are integer
-comparisons end to end — no float anywhere. The DuckDB oracle
-replays gram hashing, robust-winnowing selection (rightmost min via
-a frame min + an in-window max(pos) join), the df cap, and every
-pair count bit-exactly.
+(common.md5_60, the Python twin of common.md5_long), bit-identical in
+DuckDB; minima, tie-breaks, and similarity ppm (BIGINT
+cross-multiplied floor division) are integer comparisons end to end —
+no float anywhere. The DuckDB oracle replays gram hashing,
+robust-winnowing selection (rightmost min via a frame min + an
+in-window max(pos) join), the df cap, and every pair count
+bit-exactly.
 
 Reference tie-in: the Go crawler dedups whole URLs/images only
 (crawler.go seen-map; SURVEY §2 D1/D4); sub-document copy evidence
@@ -47,10 +48,11 @@ is pipeline-extension territory (SURVEY §2 X-table).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from collections.abc import Iterator
 
-from ptt_spider_go_spark.functions.columns import _let
-from ptt_spider_go_spark.pipeline.common import gram_hashes
+from pyspark.sql import DataFrame, functions as F
+
+from ptt_spider_go_spark.pipeline.common import map_texts, md5_60_grams
 
 #: char k-gram size (noise threshold).
 K = 8
@@ -69,59 +71,32 @@ MIN_SHARED = 2
 SIM_PPM_MIN = 200_000
 
 
-def _selections(hs: Column) -> Column:
-    """Robust-winnowing selection over a BOUND hash-array reference:
-    window starts 0 .. max(m-W, 0), each window spans
+def _fingerprints(text: str | None) -> Iterator[tuple[int, int]]:
+    """(pos, fp) of one document by robust winnowing: window starts
+    0 .. max(m-W, 0) over its m gram hashes, each window spanning
     [s, min(s+W-1, m-1)] — the last (or only) window truncates so
-    short docs still fingerprint. Rightmost min: fold ascending,
-    replace on <= (ties move right). `hs` MUST be a `_let`-bound
-    lambda variable — the fold references it 2·W times per window and
-    a raw Column reference would splice (and re-evaluate) the full
-    md5 transform per reference (the columns.py _let lesson: measured
-    minutes-per-500-docs before, sub-second after)."""
-    m = F.size(hs)
-    sels = F.transform(
-        F.sequence(F.lit(0), F.greatest(m - W, F.lit(0))),
-        lambda s: F.aggregate(
-            F.sequence(s, F.least(s + W - 1, m - 1)),
-            F.struct(
-                F.lit(None).cast("long").alias("fp"),
-                F.lit(-1).cast("long").alias("pos"),
-            ),
-            lambda acc, j: F.when(
-                acc["fp"].isNull()
-                | (F.try_element_at(hs, (j + 1).cast("int"))
-                   <= acc["fp"]),
-                F.struct(
-                    F.try_element_at(hs, (j + 1).cast("int")).alias("fp"),
-                    j.cast("long").alias("pos"),
-                ),
-            ).otherwise(acc),
-        ),
-    )
-    return F.when(
-        m == 0,
-        F.array().cast("array<struct<fp:bigint,pos:bigint>>"),
-    ).otherwise(F.array_distinct(sels))
+    short docs still fingerprint; the rightmost minimum wins ties.
+    Each position is yielded once: the selected position never moves
+    left as the window slides (the old pick stays the rightmost
+    minimum until it leaves or a new hash <= it enters), so repeats
+    are consecutive. NULL, empty and < K-char texts yield nothing."""
+    hs = md5_60_grams(text, K)
+    last = -1
+    for s in range(max(len(hs) - W, 0) + 1 if hs else 0):
+        win = hs[s:s + W]
+        fp = min(win)
+        pos = s + len(win) - 1 - win[::-1].index(fp)
+        if pos != last:
+            last = pos
+            yield pos, fp
 
 
 def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, fp): the robust-winnowing fingerprint set —
     0-based gram position and 60-bit gram hash, one row per SELECTED
-    (hash, pos), distinct per doc. Map-only until the final distinct;
-    unordered (consumers sort if they need to)."""
-    sel = docs.select(
-        "doc_id", _let(gram_hashes(F.col("text"), K), _selections).alias("sels")
-    )
-    return (
-        sel.select("doc_id", F.explode("sels").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.pos").alias("pos"),
-            F.col("s.fp").alias("fp"),
-        )
-        .distinct()
-    )
+    (hash, pos), distinct per doc. One map-only Arrow pass until the
+    final distinct; unordered (consumers sort if they need to)."""
+    return map_texts(docs, _fingerprints, ("pos", "fp")).distinct()
 
 
 def winnow_pairs(docs: DataFrame) -> DataFrame:
@@ -133,7 +108,7 @@ def winnow_pairs(docs: DataFrame) -> DataFrame:
     (exact integer overlap coefficient). Ordered (doc_a, doc_b)."""
     # localCheckpoint: the fingerprint relation feeds the df counts,
     # the cap join, the sizes, AND both join sides — materialize the
-    # map-only selection once (the ADVICE-r04 authority_budgets
+    # map-only Arrow selection once (the ADVICE-r04 authority_budgets
     # idiom) instead of re-running it per consumer.
     fps = (
         winnow_fingerprints(docs)
@@ -197,7 +172,7 @@ def source_templates(docs: DataFrame) -> DataFrame:
     exact) — the direct 'how much of this page is site chrome'
     score a cleaning gate thresholds on.
 
-    Scale shape: the X134 map-only selection (localCheckpointed
+    Scale shape: the X134 map-only Arrow selection (localCheckpointed
     once), ONE doc->source equi-join (broadcast-eligible dimension),
     ONE (source, fp) groupBy, ONE source groupBy, then one semi-
     annotating LEFT join back and ONE doc groupBy — all keyed

@@ -7,7 +7,9 @@ the leading chunk(s) while every chunk after the first re-aligned
 boundary keeps its hash (the property fixed-size chunking lacks,
 pinned against X39-style fixed spans); identical docs dedup to the
 same chunk hashes and the savings receipt is exact; short/empty
-docs behave (whole-doc chunk / no rows); partitioning-invariant.
+docs behave (whole-doc chunk / no rows, NULL text too); chunk
+positions count code points, pinned on CJK text with a
+supplementary-plane character; partitioning-invariant.
 """
 
 from __future__ import annotations
@@ -32,10 +34,10 @@ def _h(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
-def _mirror(text: str):
-    n = len(text)
-    if n == 0:
+def _mirror(text: str | None):
+    if not text:
         return []
+    n = len(text)
     bounds = [
         i + CDC_W                       # 1-based window-end position
         for i in range(n - CDC_W + 1)
@@ -59,7 +61,7 @@ def _text(seed: str, n_words: int) -> str:
 def test_matches_pure_python_mirror(spark):
     rows = [
         (1, _text("a", 120)), (2, _text("b", 80)), (3, "tiny"),
-        (4, ""), (5, "exactly8"), (6, _text("a", 120)),
+        (4, ""), (5, "exactly8"), (6, _text("a", 120)), (7, None),
     ]
     got = {}
     for r in cdc_chunks(_docs(spark, rows)).collect():
@@ -68,6 +70,16 @@ def test_matches_pure_python_mirror(spark):
         )
     for d, t in rows:
         assert sorted(got.get(d, [])) == _mirror(t), f"doc {d}"
+
+
+def test_cjk_chunk_spans_count_code_points(spark):
+    # 11 code points, one outside the BMP: no boundary, one whole-doc
+    # chunk with the hash Spark's substring/md5 construction gave.
+    text = "寫了一篇文章😀好嗎測試"
+    got = [(r["chunk_idx"], r["start"], r["length"], r["chunk_hash"])
+           for r in cdc_chunks(_docs(spark, [(1, text)])).collect()]
+    assert got == [(0, 1, 11, 309978202463101380)]
+    assert got == _mirror(text)
 
 
 def test_chunks_tile_the_document(spark):

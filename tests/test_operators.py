@@ -324,13 +324,19 @@ def test_bloom_dedup_exactness(spark):
 def test_dedup_probes_each_candidate_once(spark, monkeypatch):
     """A superstep's `fresh` evaluates one Bloom probe: its bloom-miss
     branch and its verified probable-hit branch share one pass, so each
-    candidate crosses into the Python probe exactly once."""
+    candidate crosses into the Python probe exactly once. With the
+    cuckoo layer engaged, each Bloom probable hit also crosses the
+    cuckoo probe exactly once."""
     seen = spark.createDataFrame(
         [(f"https://s.test/{i}",) for i in range(500)], "url string")
     cand = spark.createDataFrame(
         [(f"https://s.test/{i}",) for i in range(400, 900)], "url string")
     blooms = BloomShardSet(n_shards=4, expected_per_shard=256)
     blooms.add_df(seen)
+    cuckoos = CuckooShardSet(n_shards=4, buckets_per_shard=1 << 9)
+    cuckoos.add_df(seen)
+    n_probable = blooms.with_maybe_seen(cand).filter("maybe_seen").count()
+    assert n_probable >= 100  # the 100 true repeats, plus false positives
 
     probed = spark.sparkContext.accumulator(0)
     cls = type(cand)
@@ -346,10 +352,15 @@ def test_dedup_probes_each_candidate_once(spark, monkeypatch):
         return real(self, run, schema, *a, **kw)
 
     monkeypatch.setattr(cls, "mapInPandas", counted)
+    want = {f"https://s.test/{i}" for i in range(500, 900)}
     fresh = dedup_against_seen(cand, seen, blooms)
-    assert {r["url"] for r in fresh.collect()} == \
-        {f"https://s.test/{i}" for i in range(500, 900)}
+    assert {r["url"] for r in fresh.collect()} == want
     assert probed.value == 500
+
+    probed.value = 0
+    fresh = dedup_against_seen(cand, seen, blooms, cuckoos)
+    assert {r["url"] for r in fresh.collect()} == want
+    assert probed.value == 500 + n_probable
 
 
 def test_bloom_probe_no_false_negatives(spark):

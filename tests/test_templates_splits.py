@@ -2,7 +2,8 @@
 
 Pins: a pure-Python mirror (on the test_winnow fingerprint mirror)
 matches source_templates exactly, including the >=50%-of-source
-boundary and the MIN_DOCS gate; fingerprint-less docs report zeros;
+boundary and the MIN_DOCS gate; fingerprint-less docs (NULL text
+included) report zeros;
 leakage_safe_splits puts every member of a near-dup cluster in the
 same split (the whole point), matches a pure-Python md5-bucket
 mirror on singleton clusters, and split_manifest accounts for every
@@ -40,7 +41,7 @@ def _pairs(spark, pairs, parts=2):
 
 
 def _mirror_templates(rows):
-    fps = {d: {fp for _p, fp in _mirror_fps(t)} for d, t, _s in rows}
+    fps = {d: {fp for _p, fp in _mirror_fps(t or "")} for d, t, _s in rows}
     src_of = {d: s for d, t, s in rows}
     by_src: dict[str, set[int]] = {}
     for d, s in src_of.items():
@@ -78,6 +79,7 @@ def _template_fixture():
     for i in range(3):  # source B: below the MIN_DOCS gate
         rows.append((100 + i, "identical tiny page" + FOOTER, "B"))
     rows.append((200, "nofp", "A"))  # < K chars -> zero fingerprints
+    rows.append((201, None, "A"))    # NULL text -> zero fingerprints
     return rows
 
 
@@ -99,8 +101,10 @@ def test_templates_semantics(spark):
     # source B is below the MIN_DOCS gate: no templates despite
     # identical texts
     assert all(got[100 + i]["n_template"] == 0 for i in range(3))
-    # fingerprint-less doc reports zeros
+    # fingerprint-less docs report zeros
     assert (got[200]["n_fps"], got[200]["template_ppm"]) == (0, 0)
+    assert (got[201]["n_fps"], got[201]["n_template"],
+            got[201]["template_ppm"]) == (0, 0, 0)
 
 
 def test_template_boundary_exactly_half(spark):

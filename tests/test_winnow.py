@@ -5,7 +5,9 @@ hashes, window minima, rightmost tie-break, truncated last window,
 distinct selection) matches Spark bit-for-bit; the paper's guarantee
 holds — any shared substring of length >= W + K - 1 chars yields a
 shared fingerprint and a reported pair; docs shorter than K have no
-fingerprints while docs with one gram have exactly one; the df cap
+fingerprints while docs with one gram have exactly one, and NULL
+text has none; grams are code-point slices, pinned on CJK text with a
+supplementary-plane character; the df cap
 silences a fingerprint shared by too many docs; sim_ppm is the exact
 integer overlap coefficient; and both queries are
 partitioning-invariant.
@@ -94,13 +96,25 @@ def test_fingerprints_match_pure_python_mirror(spark):
 
 
 def test_short_doc_boundaries(spark):
-    rows = [(4, "short"), (5, "exactly8"), (6, "")]
+    rows = [(4, "short"), (5, "exactly8"), (6, ""), (8, None)]
     got = winnow_fingerprints(_docs(spark, rows)).collect()
     by_doc = {}
     for r in got:
         by_doc.setdefault(r["doc_id"], []).append((r["pos"], r["fp"]))
-    assert 4 not in by_doc and 6 not in by_doc
+    assert 4 not in by_doc and 6 not in by_doc and 8 not in by_doc
     assert by_doc[5] == [(0, _h("exactly8"))]
+
+
+def test_cjk_grams_are_code_point_slices(spark):
+    # 11 code points, one outside the BMP (4 UTF-8 bytes): 4 grams, one
+    # window. The fingerprint is the one Spark's substring/md5
+    # construction selected.
+    text = "寫了一篇文章😀好嗎測試"
+    assert len(text) == 11
+    got = [(r["pos"], r["fp"])
+           for r in winnow_fingerprints(_docs(spark, [(1, text)])).collect()]
+    assert got == [(1, 703441963328075100)]
+    assert got == sorted(_mirror_fps(text))
 
 
 def test_guarantee_shared_substring_yields_pair(spark):
