@@ -514,11 +514,13 @@ def run_crawl(
         step += 1
 
     # ---- final assembly (deterministic, scheduling-independent) ----------
-    # The ledger union and the fetch log are each materialized once
-    # (localCheckpoint, filled on first use) and shared by every output
-    # table that reads them. Left a union, the ledger would also let
-    # Catalyst split the missing_404 anti-join into one shuffle join
-    # per superstep.
+    # Every frame more than one output table reads is materialized once
+    # (localCheckpoint, filled on first use): the ledger union, the
+    # fetch log, the dir-suffixed contents and the progress events.
+    # Otherwise each table re-derives them in jobs of its own (the
+    # events union alone reads contents twice and the fetch log once).
+    # Left a union, the ledger would also let Catalyst split the
+    # missing_404 anti-join into one shuffle join per superstep.
     ledger = _union(spark, ledgers, _LEDGER_SCHEMA).localCheckpoint(eager=False)
     parsed = _union(spark, parsed_parts, _PARSED_SCHEMA)
     articles = _article_rows(parsed, cfg.push_rate).select(
@@ -540,7 +542,7 @@ def run_crawl(
     fetch_log = _fetch_log(ledger, parsed).localCheckpoint(eager=False)
 
     # D3: global dir-collision suffixing in canonical priority order.
-    contents = with_unique_dir(contents)
+    contents = with_unique_dir(contents).localCheckpoint(eager=False)
 
     # download_tasks: explode the per-article aligned (img, file) arrays.
     tasks = (
@@ -567,7 +569,7 @@ def run_crawl(
     events = progress_events(
         contents, tasks, fetch_log, articles,
         total_pages=cfg.pages, workers=cfg.workers,
-    )
+    ).localCheckpoint(eager=False)
     metrics = (
         fetch_log.groupBy("superstep", "kind", "outcome")
         .agg(F.count("*").alias("n"), F.sum("backoff_ms").alias("backoff_ms_total"))

@@ -48,6 +48,7 @@ actually arrives in.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -82,7 +83,8 @@ def write_warc(pages: DataFrame, path: str,
     """Render (doc_id, url, warc_date, status, payload) rows as
     WARC/1.1 response records; one narrow projection + write.text.
     Both Content-Length values count UTF-8 OCTETS (octet_length), so
-    multi-byte payloads round-trip exactly."""
+    multi-byte payloads round-trip exactly. Part files are named by
+    partition only (`_drop_job_uuids`)."""
     reason = F.coalesce(
         F.element_at(
             F.create_map(*[
@@ -119,6 +121,28 @@ def write_warc(pages: DataFrame, path: str,
     if n_files is not None:
         out = out.repartition(n_files)
     out.write.mode("overwrite").text(path)
+    _drop_job_uuids(pages.sparkSession, path)
+
+
+#: Spark's part-file name: part-<task partition>-<job uuid>-c<file>.<ext>
+_PART_NAME = re.compile(
+    r"^(part-\d+)-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}(-.*)$"
+)
+
+
+def _drop_job_uuids(spark: SparkSession, path: str) -> None:
+    """Rename every part file under `path` to its name without the
+    write job's random uuid (part-00000-c000.txt), so a shard's name
+    depends only on its partition and a CDX index over the archive is
+    the same on every run. Goes through the Hadoop FileSystem of
+    `path`, like the write itself."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    root = jpath(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    for st in fs.listStatus(root):
+        m = _PART_NAME.match(st.getPath().getName())
+        if m:
+            fs.rename(st.getPath(), jpath(root, m.group(1) + m.group(2)))
 
 
 def _parse_warc_bytes(blob: bytes) -> Iterator[

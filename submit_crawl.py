@@ -11,6 +11,19 @@ command works on YARN/k8s/standalone and local[N]):
         --checkpoint <durable dir for the per-superstep commits> \
         --out <output dir> [--resume]
 
+Under spark-submit the driver JVM is already running when this script
+builds its session, so the short-lived-session engine settings of
+`ptt_spider_go_spark.session` (its docstring says why) go on the
+command line. The driver's JIT thresholds are the string
+`session.DRIVER_JIT_OPTIONS`, the codegen cache size
+`session.CODEGEN_CACHE_ENTRIES`:
+
+    spark-submit \
+        --conf "spark.driver.defaultJavaOptions=$(python -c \
+            'from ptt_spider_go_spark.session import DRIVER_JIT_OPTIONS as o; print(o)')" \
+        --conf spark.sql.codegen.cache.maxEntries=1000 \
+        --py-files dist/ptt_spider_go_spark.zip submit_crawl.py ...
+
 Outputs (parquet under --out): articles/, markdown_docs/, metrics/,
 quarantine/, fetch_log/. Checkpointing + --resume give exact
 kill-and-resume (plans/checkpoint.py); politeness, robots and the

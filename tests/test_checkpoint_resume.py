@@ -8,6 +8,7 @@ wherever inside a superstep the crash happened.
 import contextlib
 import json
 import os
+import re
 import shutil
 
 import pyarrow.parquet as pq
@@ -42,10 +43,10 @@ def crawl(spark):
     pages = spark.createDataFrame(pdf).cache()
     events = spark.createDataFrame(fetch_events_pandas(pdf)).cache()
 
-    def run(ckpt_dir, resume=False, **cfg):
+    def run(ckpt_dir, resume=False, archive_dir=None, **cfg):
         return run_crawl(spark, pages, _cfg(**cfg), fetch_events=events,
                          checkpoint_dir=ckpt_dir, resume=resume,
-                         verify_text=False)
+                         archive_dir=archive_dir, verify_text=False)
 
     return run
 
@@ -175,6 +176,20 @@ def test_kill_and_resume_identical_with_cuckoo_engaged(crawl, full,
     assert resumed.supersteps >= 1
     assert added[0] == _committed_seen(step0)
     assert _snapshot(resumed) == full[0]
+
+
+def test_archive_cdx_identical_after_kill_and_resume(crawl, step0,
+                                                     tmp_path):
+    """WARC shards are named by partition alone, so an uninterrupted
+    crawl and a kill-and-resume publish the same CDX index (each shard
+    name carried the write job's random uuid)."""
+    full = crawl(str(tmp_path / "full"), archive_dir=str(tmp_path / "a1"))
+    resumed = crawl(_copy(step0, tmp_path), resume=True,
+                    archive_dir=str(tmp_path / "a2"))
+    rows = _rows(full.archive_cdx)
+    assert rows and rows == _rows(resumed.archive_cdx)
+    assert all(re.fullmatch(r"part-\d{5}-c\d{3}\.txt", r["filename"])
+               for r in full.archive_cdx.select("filename").collect())
 
 
 def test_resume_noop_when_finished(crawl, full, tmp_path):

@@ -1,7 +1,10 @@
 """End-to-end board-mode crawl vs the sequential golden model."""
 
+import re
+
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ptt_spider_go_spark.config import CrawlConfig
@@ -187,6 +190,38 @@ def test_crawl_identical_with_cuckoo_engaged(spark, dataset, result):
     assert key(res2.articles) == key(result.articles)
     assert sorted(r["url"] for r in res2.seen.collect()) == \
         sorted(r["url"] for r in result.seen.collect())
+
+
+def test_assembly_plans_the_dir_collision_window_once(spark, dataset,
+                                                      monkeypatch):
+    """Assembly materializes the dir-suffixed contents and the progress
+    events once; download_tasks, markdown_docs, progress_events and
+    metrics read those frames, so across every frame the crawl
+    checkpoints and every result table's plan, the D3 dir-collision
+    Window appears once (it appeared 5 times when each table re-derived
+    contents)."""
+    plans = []
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+
+    def spy(self, *a, **kw):
+        out = real(self, *a, **kw)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    pages = spark.createDataFrame(dataset)
+    cfg = CrawlConfig(board=BOARD, pages=PAGES, push_rate=PUSH,
+                      host_salt=4, max_supersteps=6)
+    res = run_crawl(spark, pages, cfg, verify_text=False)
+    plans += [df._jdf.queryExecution().executedPlan().toString()
+              for df in vars(res).values() if isinstance(df, DataFrame)]
+    dir_windows = [
+        w for p in plans
+        for w in re.findall(r"Window \[.*\], \[board#\d+, dir_key0#\d+\], \[",
+                            p.split("== Initial Plan ==")[0])
+    ]
+    assert len(dir_windows) == 1, dir_windows
 
 
 def test_aimd_budget_halves_on_429_host(spark, dataset):
