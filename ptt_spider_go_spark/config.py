@@ -10,7 +10,7 @@ which at superstep granularity is a per-host row budget.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 _VALID_BOARD = re.compile(r"^[A-Za-z0-9_-]+$")  # crawler/crawler.go:39
 
@@ -52,11 +52,8 @@ class CrawlConfig:
     # extra probe pass is pure overhead (measured +3 s on a 6k-URL
     # crawl); at the 10^10-URL design point it cuts the join input
     # ~99% on top of the Bloom layer.
-    cuckoo_verify: bool = True
     cuckoo_min_seen: int = 5_000_000
     max_supersteps: int = 8
-    seed: int = 42
-    robots_rules: list = field(default_factory=list)
 
     def __post_init__(self):
         self.validate()

@@ -828,8 +828,8 @@ _ROBOTS_RULES = [
 
 
 def q_robots_filter(spark, sf_dir):
-    """Robots-rule filter [north_rule]: longest-matching-prefix wins,
-    broadcast join against a tiny host/prefix rule table
+    """Robots-rule filter [north_rule]: the longest matching rule wins,
+    broadcast join against a tiny per-host rule array
     (operators/politeness.py apply_robots). Hosts/paths synthesized
     from o_orderkey identically on both engines."""
     from ptt_spider_go_spark.operators.politeness import apply_robots
@@ -5541,17 +5541,20 @@ FROM sv GROUP BY stage_id, stage"""
 def q_robots_wildcards(spark, sf_dir):
     """RFC 9309 full wildcard matching (X90): `*` spans, trailing `$`
     anchors, longest-pattern-wins precedence with Allow beating
-    Disallow at equal length (politeness.robots_wildcard_verdicts),
-    rules parsed from a real robots.txt body through the Arrow kernel
-    (sources.robots.wildcard_rules_from_pages). Eight path shapes per
+    Disallow at equal length (politeness.robots_allowed), rules parsed
+    from a real robots.txt body through the Arrow kernel
+    (sources.robots.robots_rules_from_pages). Eight path shapes per
     doc_id exercise: wildcard rescue by a longer Allow (m=0), plain
     wildcard block (1), `$`-anchored extension block (2), the anchor
     NOT matching a longer path (3), exact-path `$` block (4) vs its
     one-char-longer sibling (5), an equal-length Allow/Disallow tie
     (6), and literal regex metachars in a pattern (7). The oracle
     derives verdicts independently from the branch selector."""
-    from ptt_spider_go_spark.operators.politeness import robots_wildcard_verdicts
-    from ptt_spider_go_spark.sources.robots import wildcard_rules_from_pages
+    from ptt_spider_go_spark.operators.politeness import (
+        robots_allowed,
+        robots_host_rules,
+    )
+    from ptt_spider_go_spark.sources.robots import robots_rules_from_pages
 
     docs = _t(spark, sf_dir, "documents")
     d = F.col("doc_id").cast("string")
@@ -5584,8 +5587,8 @@ def q_robots_wildcards(spark, sf_dir):
     pages = spark.createDataFrame(
         [("http://wc.example/robots.txt", body)], "url string, text string"
     )
-    rules = wildcard_rules_from_pages(pages)
-    return robots_wildcard_verdicts(frontier, rules).distinct()
+    rules = robots_host_rules(robots_rules_from_pages(pages))
+    return robots_allowed(frontier, rules).distinct()
 
 
 SQL_ROBOTS_WILDCARDS = f"""

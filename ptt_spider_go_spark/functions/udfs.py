@@ -5,8 +5,10 @@ Two shapes:
 - ``parse_articles_map``: a ``mapInPandas`` stage (1 board-index page ->
   N article rows, the UDTF shape of P1) — avoids an array<struct> +
   posexplode round-trip and keeps the emitted ``pos`` column exact.
-- scalar ``pandas_udf``s for P2 (article content), P3 (max page) and P4
-  (byte-identical text extraction).
+- ``make_parse_page_kernel``: one ``mapInPandas`` pass over fetched
+  pages of both kinds — P1 article rows, P2 article content and the P4
+  byte-identical text check together.
+- a scalar ``pandas_udf`` for P3 (max page).
 
 All per-document work happens batch-at-a-time over Arrow; there is no
 row-at-a-time Python UDF anywhere in the engine (BASELINE.json
@@ -20,7 +22,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     StringType,
     StructField,
@@ -174,37 +175,6 @@ def make_parse_page_kernel(verify_text: bool, push_threshold: int | None = None)
     return kernel
 
 
-CONTENT_STRUCT = StructType(
-    [
-        StructField("parsed_title", StringType()),
-        StructField("img_urls", ArrayType(StringType())),
-        StructField("file_names", ArrayType(StringType())),
-    ]
-)
-
-
-@F.pandas_udf(CONTENT_STRUCT)
-def parse_content_udf(html: pd.Series) -> pd.DataFrame:
-    """P2 + D1 + D2 in one article-scoped pass: parse title/images, dedup
-    images first-occurrence-in-order (crawler.go:460), derive collision-
-    suffixed filenames (filename.go:31-49). Single-row scope -> no shuffle."""
-    titles, urls_col, names_col = [], [], []
-    for doc in html:
-        if doc is None:
-            titles.append(None)
-            urls_col.append(None)
-            names_col.append(None)
-            continue
-        title, imgs = parse_article_content(doc)
-        imgs = unique_in_order(imgs)
-        titles.append(title)
-        urls_col.append(imgs)
-        names_col.append(image_file_names(imgs))
-    return pd.DataFrame(
-        {"parsed_title": titles, "img_urls": urls_col, "file_names": names_col}
-    )
-
-
 @F.pandas_udf(IntegerType())
 def parse_max_page_udf(html: pd.Series) -> pd.Series:
     """P3: board landing page -> newest index number + 1; NULL on failure
@@ -212,13 +182,4 @@ def parse_max_page_udf(html: pd.Series) -> pd.Series:
     return pd.Series(
         [None if doc is None else parse_max_page(doc) for doc in html],
         dtype="Int32",
-    )
-
-
-@F.pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """P4: engine-side text extraction; compared byte-wise against the
-    pages.text golden column in tests."""
-    return pd.Series(
-        [None if doc is None else extract_text(doc) for doc in html]
     )

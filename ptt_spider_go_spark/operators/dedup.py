@@ -54,17 +54,27 @@ def _hash2(urls: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     return h1, (h2 | np.uint64(1))
 
 
-def _set_bits(bits: np.ndarray, h1, h2, k: int, m_bits: int) -> None:
+def _bit_indices(h1, h2, k: int, n_shards: int, m_bits: int):
+    """The k bit positions of each URL in the flat (n_shards * m_bits)
+    bit array: bit shard * m_bits + (h1 + i * h2) mod m_bits of shard
+    h1 mod n_shards. m_bits % 8 == 0, so a shard's bits are exactly
+    its own m_bits / 8 bytes of the flat array."""
+    base = (h1 % np.uint64(n_shards)) * np.uint64(m_bits)
     for i in range(k):
-        idx = (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
+        yield base + (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
+
+
+def _set_bits(bits: np.ndarray, h1, h2, k: int, n_shards: int,
+              m_bits: int) -> None:
+    for idx in _bit_indices(h1, h2, k, n_shards, m_bits):
         np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
                          np.left_shift(np.uint8(1), (idx & np.uint64(7)).astype(np.uint8)))
 
 
-def _test_bits(bits: np.ndarray, h1, h2, k: int, m_bits: int) -> np.ndarray:
+def _test_bits(bits: np.ndarray, h1, h2, k: int, n_shards: int,
+               m_bits: int) -> np.ndarray:
     hit = np.ones(len(h1), dtype=bool)
-    for i in range(k):
-        idx = (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
+    for idx in _bit_indices(h1, h2, k, n_shards, m_bits):
         byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
         mask = np.left_shift(np.uint8(1), (idx & np.uint64(7)).astype(np.uint8))
         hit &= (byte & mask) != 0
@@ -89,7 +99,8 @@ def _check_shard_bytes(shard_bytes: int, n_shards: int, what: str) -> None:
 
 class BloomShardSet:
     """n_shards Bloom filters keyed by shard = h1(url) % n_shards; the
-    (n_shards, bytes) bit-arrays live on the driver."""
+    (n_shards, bytes) bit-arrays live on the driver, and executors
+    set and test them as one flat bit array."""
 
     def __init__(self, n_shards: int = 8, expected_per_shard: int = 1 << 17,
                  fpp: float = 0.01):
@@ -104,30 +115,25 @@ class BloomShardSet:
 
     def add_df(self, df: DataFrame, url_col: str = "url") -> None:
         """OR the URLs of `df` into the shard bit-arrays. Distributed:
-        each partition reduces its rows to n_shards bitmaps, which the
-        driver ORs into its arrays."""
+        each non-empty partition reduces its rows to one flat bitmap of
+        the whole shard set, which the driver ORs into its arrays."""
         n_shards, m_bits, k = self.n_shards, self.m_bits, self.k
 
         def to_bitmaps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc = np.zeros((n_shards, m_bits // 8), dtype=np.uint8)
-            touched = np.zeros(n_shards, dtype=bool)
+            acc = None
             for pdf in batches:
                 if not len(pdf):
                     continue
-                h1, h2 = _hash2(pdf[url_col])
-                shard = (h1 % np.uint64(n_shards)).astype(np.int64)
-                for s in np.unique(shard):
-                    sel = shard == s
-                    _set_bits(acc[s], h1[sel], h2[sel], k, m_bits)
-                    touched[s] = True
-            yield pd.DataFrame(
-                {"shard": np.nonzero(touched)[0].astype("int64"),
-                 "bits": [acc[s].tobytes() for s in np.nonzero(touched)[0]]}
-            )
+                if acc is None:
+                    acc = np.zeros(n_shards * m_bits // 8, dtype=np.uint8)
+                _set_bits(acc, *_hash2(pdf[url_col]), k, n_shards, m_bits)
+            if acc is not None:
+                yield pd.DataFrame({"bits": [acc.tobytes()]})
 
-        parts = df.select(url_col).mapInPandas(to_bitmaps, "shard long, bits binary")
+        parts = df.select(url_col).mapInPandas(to_bitmaps, "bits binary")
+        flat = self.shards.reshape(-1)
         for row in parts.collect():
-            self.shards[row["shard"]] |= np.frombuffer(row["bits"], dtype=np.uint8)
+            flat |= np.frombuffer(row["bits"], dtype=np.uint8)
 
     # -- probe ---------------------------------------------------------------
 
@@ -140,20 +146,14 @@ class BloomShardSet:
         bc = df.sparkSession.sparkContext.broadcast(self.shards.tobytes())
 
         def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            flat = np.frombuffer(bc.value, dtype=np.uint8).reshape(
-                n_shards, m_bits // 8
-            )
+            flat = np.frombuffer(bc.value, dtype=np.uint8)
             for pdf in batches:
                 if not len(pdf):
                     pdf[out_col] = pd.Series([], dtype=bool)
                     yield pdf
                     continue
-                h1, h2 = _hash2(pdf[url_col])
-                shard = (h1 % np.uint64(n_shards)).astype(np.int64)
-                hit = np.zeros(len(pdf), dtype=bool)
-                for s in np.unique(shard):
-                    sel = shard == s
-                    hit[sel] = _test_bits(flat[s], h1[sel], h2[sel], k, m_bits)
+                hit = _test_bits(flat, *_hash2(pdf[url_col]), k, n_shards,
+                                 m_bits)
                 pdf = pdf.copy()
                 pdf[out_col] = hit
                 yield pdf

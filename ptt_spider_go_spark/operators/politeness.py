@@ -16,7 +16,11 @@ its W workers also each apply politeness independently with no global
 priority coordination (SURVEY §4 "single-host serialization").
 
 Robots [north_rule]: the reference does not parse robots.txt; rules
-arrive as a host/path-prefix table and apply as a broadcast anti-filter.
+arrive as a (host, path_prefix, allowed) table whose `path_prefix` is an
+RFC 9309 path pattern (`*` and a trailing `$`), matched against the
+URL's path + `?query`. One matcher, robots_allowed, decides every
+verdict from a broadcast per-host rule array (robots_host_rules): one
+broadcast join and one projection, with no shuffle of the frontier.
 """
 
 from __future__ import annotations
@@ -28,45 +32,66 @@ from ptt_spider_go_spark.functions.columns import url_host
 
 
 def apply_robots(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """Drop frontier rows robots_allowed disallows."""
+    """Drop frontier rows the (host, path_prefix, allowed) robots rules
+    disallow."""
     if robots is None:
         return frontier
-    return robots_allowed(frontier, robots).filter("allowed").drop("allowed")
+    return (robots_allowed(frontier, robots_host_rules(robots))
+            .filter("allowed").drop("allowed", "rule"))
 
 
-def robots_allowed(frontier: DataFrame, robots: DataFrame) -> DataFrame:
-    """`frontier` + an `allowed` flag from (host, path_prefix, allowed)
-    rules. `robots` is tiny -> broadcast join.
+def robots_host_rules(robots: DataFrame) -> DataFrame:
+    """(host, path_prefix, allowed) rules -> (_host, _rules): one row per
+    host holding its rules as an array of (len, allowed, pattern, rx)
+    structs, where len is the pattern's octet length and rx its
+    robots_pattern_rx regex. Build it once per rule table; it is the
+    broadcast side of robots_allowed."""
+    p = F.col("path_prefix")
+    rule = F.struct(
+        F.octet_length(p).alias("len"), "allowed", p.alias("pattern"),
+        robots_pattern_rx(p).alias("rx"),
+    )
+    return robots.groupBy(F.col("host").alias("_host")).agg(
+        F.collect_list(rule).alias("_rules"))
 
-    RFC 9309 §2.2.2 precedence: the MATCHING prefix with the most
-    OCTETS decides (UTF-8 byte length, not characters — '/café' is 6
-    octets and outranks a 5-octet ASCII prefix); a URL with no
-    matching rule (including a host with rules none of which match, or
-    a host with no rules at all) is ALLOWED; when an Allow and a
-    Disallow match at equal octet length, Allow wins."""
-    f = frontier.withColumn("_host", url_host(F.col("url"))).withColumn(
-        "_path", F.coalesce(F.try_parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
+
+def robots_allowed(frontier: DataFrame, host_rules: DataFrame) -> DataFrame:
+    """`frontier` + (allowed boolean, rule string) under the per-host
+    rule arrays of robots_host_rules.
+
+    Each `path_prefix` is an RFC 9309 §2.2.3 path pattern (`*` spans
+    any octets, a trailing `$` anchors the end; a pattern with neither
+    is a plain prefix), matched against the URL's path plus `?query`
+    when a query is present, so `Disallow: /*?sessionid=` style rules
+    work. §2.2.2 precedence: among matching rules the one with the most
+    pattern OCTETS decides ('/café' is 6 octets and outranks the
+    5-octet '/caf*'); at equal length Allow beats Disallow. A URL no
+    rule matches, including every URL of a host without rules, is
+    allowed with a NULL `rule`; a matching rule whose `allowed` is NULL
+    yields NULL, never allowed.
+
+    The rule arrays are tiny (|hosts| rows) and broadcast, so the
+    verdict is one broadcast join and one projection: `array_max` over
+    the matching rule structs orders by (len, allowed, ...), and a
+    struct's NULL field sorts first. The frontier never shuffles."""
+    qs = F.try_parse_url(F.col("url"), F.lit("QUERY"))
+    path = F.concat(
+        F.coalesce(F.try_parse_url(F.col("url"), F.lit("PATH")), F.lit("/")),
+        F.when(qs.isNotNull(), F.concat(F.lit("?"), qs)).otherwise(F.lit("")),
     )
-    r = robots.select(
-        F.col("host").alias("_host"),
-        F.col("path_prefix").alias("_pfx"),
-        F.col("allowed").alias("_allowed"),
+    f = frontier.withColumns({"_host": url_host(F.col("url")), "_path": path})
+    best = F.array_max(F.filter(
+        "_rules", lambda r: F.regexp_like(F.col("_path"), r["rx"])))
+    return (
+        f.join(F.broadcast(host_rules), on="_host", how="left")
+        .withColumn("_best", best)
+        .select(
+            *frontier.columns,
+            F.when(F.col("_best").isNull(), F.lit(True))
+            .otherwise(F.col("_best.allowed")).alias("allowed"),
+            F.col("_best.pattern").alias("rule"),
+        )
     )
-    joined = f.join(F.broadcast(r), on="_host", how="left")
-    match_len = F.when(
-        F.col("_pfx").isNotNull() & F.col("_path").startswith(F.col("_pfx")),
-        F.octet_length(F.col("_pfx")),
-    ).otherwise(F.lit(-1))
-    w = Window.partitionBy("url").orderBy(
-        F.col("_mlen").desc(), F.col("_allowed").desc_nulls_last()
-    )
-    best = (
-        joined.withColumn("_mlen", match_len)
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .withColumn("allowed", (F.col("_mlen") < 0) | F.col("_allowed"))
-    )
-    return best.drop("_host", "_path", "_pfx", "_allowed", "_mlen", "_r")
 
 
 def budgets_from_crawl_delays(delays: DataFrame, workers: int,
@@ -261,74 +286,6 @@ def robots_pattern_rx(pattern):
     return F.concat(
         F.lit("^"), star, F.when(anchored, F.lit("$")).otherwise(F.lit(""))
     )
-
-
-def robots_wildcard_verdicts(frontier: DataFrame, rules: DataFrame) -> DataFrame:
-    """Frontier rows + (host, pattern, allowed) wildcard rules ->
-    frontier columns + (allowed boolean, rule string).
-
-    RFC 9309 §2.2.2 precedence over FULL wildcard patterns: among
-    matching rules the one with the most pattern octets decides; at
-    equal length Allow beats Disallow (the "least restrictive" rule);
-    no matching rule (or no rules for the host) -> allowed, rule NULL.
-    Matching runs against path + '?query' when a query string is
-    present (the REP matches the URL after the authority, so
-    `Disallow: /*?sessionid=` style rules work).
-
-    Scale shape: the rule table is |hosts| x avg_rules — broadcast by
-    construction; translation is a JVM regexp_replace chain evaluated
-    once per joined row, the match one non-foldable RLIKE (Spark
-    compiles per row — acceptable because rules-per-host is small and
-    the join is broadcast; the 10^10-row side never shuffles). The
-    dedup window partitions by url, matching apply_robots: the
-    frontier is distinct-by-url after the seen anti-join.
-    """
-    qs = F.try_parse_url(F.col("url"), F.lit("QUERY"))
-    path = F.concat(
-        F.coalesce(F.try_parse_url(F.col("url"), F.lit("PATH")), F.lit("/")),
-        F.when(qs.isNotNull(), F.concat(F.lit("?"), qs)).otherwise(F.lit("")),
-    )
-    f = frontier.withColumn("_host", url_host(F.col("url"))).withColumn(
-        "_path", path
-    )
-    r = rules.select(
-        F.col("host").alias("_host"),
-        F.col("pattern").alias("_pat"),
-        robots_pattern_rx(F.col("pattern")).alias("_rx"),
-        F.col("allowed").alias("_allowed"),
-    )
-    joined = f.join(F.broadcast(r), on="_host", how="left")
-    # Column.rlike only takes a literal; RLIKE with a per-row pattern
-    # column is SQL-expression territory.
-    hit = F.col("_pat").isNotNull() & F.expr("_path rlike _rx")
-    joined = joined.withColumn(
-        "_mlen", F.when(hit, F.octet_length(F.col("_pat"))).otherwise(F.lit(-1))
-    )
-    w = Window.partitionBy("url").orderBy(
-        F.col("_mlen").desc(), F.col("_allowed").desc_nulls_last()
-    )
-    best = joined.withColumn("_r", F.row_number().over(w)).filter(
-        F.col("_r") == 1
-    )
-    return best.select(
-        *[c for c in frontier.columns],
-        F.when(F.col("_mlen") >= 0, F.col("_allowed"))
-        .otherwise(F.lit(True))
-        .alias("allowed"),
-        F.when(F.col("_mlen") >= 0, F.col("_pat")).alias("rule"),
-    )
-
-
-def apply_robots_wildcard(frontier: DataFrame,
-                          rules: DataFrame | None) -> DataFrame:
-    """Drop frontier rows a wildcard robots rule disallows — the
-    RFC 9309 full-matching upgrade of apply_robots (which handles the
-    prefix-only subset); same broadcast shape, same allowed-on-no-rule
-    default."""
-    if rules is None:
-        return frontier
-    v = robots_wildcard_verdicts(frontier, rules)
-    return v.filter(F.col("allowed")).drop("allowed", "rule")
 
 
 # --- X97: robots-fetch-first scheduling --------------------------------------

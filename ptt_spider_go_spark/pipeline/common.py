@@ -111,13 +111,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Shingles straight from a text column. Prefer tokenizing into a
-    column first and calling shingles_from_tokens (see its perf note);
-    this form re-evaluates the tokenizer per lambda reference."""
-    return shingles_from_tokens(tokens(text), n)
-
-
 TOKENS_SQL = "list_filter(regexp_split_to_array(trim({text}), '\\s+'), t -> t <> '')"
 # DuckDB CTE fragment producing (doc_id, sh) word-3-gram shingle rows;
 # compose with: WITH toks AS (...), shingles AS (SHINGLES_SQL) ...

@@ -5,7 +5,7 @@ Streaming — because the crawl is an iterative fixpoint over a priority
 frontier (BASELINE.json north_star). Each superstep:
 
   0. opt-in trap and blocklist flags (flag-and-divert)
-  1. robots filter (broadcast anti-filter)           [north_rule]
+  1. robots verdicts (broadcast per-host rules)      [north_rule]
   2. per-host politeness budget flag, salted lanes   (T1/T6)
   3. retry-ledger resolution of simulated statuses   (T2)
      — steps 0-3 are column producers, and the step ledger is ONE
@@ -60,7 +60,7 @@ from ptt_spider_go_spark.operators.politeness import (
     aimd_budgets,
     budget_gate,
     robots_allowed,
-    robots_wildcard_verdicts,
+    robots_host_rules,
     with_trap_flags,
 )
 from ptt_spider_go_spark.operators.progress import (
@@ -98,7 +98,6 @@ class CrawlResult:
     timings: dict = field(default_factory=dict)
     supersteps: int = 0
     wall_secs: float = 0.0
-    counters: dict = field(default_factory=dict)
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
@@ -156,13 +155,19 @@ def run_crawl(
     blocklist: DataFrame | None = None,
     seed_from_sitemaps: bool = False,
     aimd: bool = False,
-    robots_wildcards: bool = False,
     archive_dir: str | None = None,
     sketch_telemetry: bool = False,
 ) -> CrawlResult:
     """Run the crawl to fixpoint (or cfg.max_supersteps) and assemble
     outputs. `checkpoint_dir` enables per-step commits + resume; with
     `resume=True` the loop continues from the last committed superstep.
+
+    `robots` is a (host, path_prefix, allowed) rule table. Each
+    `path_prefix` is an RFC 9309 path pattern (`*` spans any octets, a
+    trailing `$` anchors the end) matched against the URL's path +
+    `?query`; the longest matching pattern decides and Allow wins ties
+    (operators.politeness.robots_allowed). A disallowed row leaves the
+    crawl; a URL no rule matches is allowed.
 
     Two opt-in loop stages (default off, so the pinned reference-parity
     outputs are untouched — the trap_filter pattern; VERDICT r04
@@ -213,18 +218,15 @@ def run_crawl(
     # ~cuckoo_min_seen fingerprints, so a fixed size would overflow at
     # the crossing); the 2^16 floor keeps forced-on test configs
     # (cuckoo_min_seen=0) from starting life overflowed.
-    cuckoos = (
-        CuckooShardSet.for_capacity(
-            cfg.bloom_shards, max(cfg.cuckoo_min_seen, 1 << 16)
-        )
-        if cfg.cuckoo_verify else None
+    cuckoos = CuckooShardSet.for_capacity(
+        cfg.bloom_shards, max(cfg.cuckoo_min_seen, 1 << 16)
     )
     cuckoo_active = False
     n_seen_est = 0
 
     def _cuckoo_for_step(seen_df):
         nonlocal cuckoo_active
-        if cuckoos is None or n_seen_est < cfg.cuckoo_min_seen:
+        if n_seen_est < cfg.cuckoo_min_seen:
             return None
         if not cuckoo_active:
             cuckoos.add_df(seen_df)  # one-time bulk build at crossing
@@ -294,6 +296,12 @@ def run_crawl(
         n_seen_est = frontier.count()  # checkpointed -> cheap count
 
     pages_fetch = pages.select("url", "warc_ts", "html", "text")
+    # the robots rules grouped once into per-host arrays: every
+    # superstep broadcasts this frame instead of re-grouping the table
+    host_rules = (
+        robots_host_rules(robots).localCheckpoint(eager=True)
+        if robots is not None else None
+    )
 
     budget_log_parts: list[DataFrame] = []
     cur_budgets = host_budgets
@@ -345,20 +353,12 @@ def run_crawl(
         passing = diverted.isNull()
 
         # 1. robots + 2. politeness budget, over the rows no gate above
-        # diverted; a robots-disallowed row leaves the ledger.
-        # `robots_wildcards` (opt-in, default off — the trap_filter
-        # pattern) reads the rule table's path column as RFC 9309 full
-        # wildcard patterns (X90) instead of plain prefixes; on
-        # metachar-free rules the two matchers are provably identical
-        # (parity-pinned), so flipping the flag never changes a
-        # prefix-rule crawl.
-        if robots is not None:
-            gated = (
-                robots_wildcard_verdicts(
-                    gated, robots.withColumnRenamed("path_prefix", "pattern"))
-                if robots_wildcards else robots_allowed(gated, robots)
-            )
-            gated = gated.filter(~passing | F.col("allowed"))
+        # diverted; a robots-disallowed row leaves the ledger. The
+        # robots verdict is one broadcast join against the per-host
+        # rule arrays built before the loop, and one projection.
+        if host_rules is not None:
+            gated = robots_allowed(gated, host_rules).filter(
+                ~passing | F.col("allowed"))
         gated = budget_gate(
             gated, cfg.host_budget_per_superstep, cfg.host_salt,
             host_budgets=cur_budgets, eligible=passing,

@@ -1,11 +1,13 @@
-"""robots.txt parsing -> the engine's host/prefix rule table.
+"""robots.txt parsing -> the engine's host/pattern rule table.
 
 The reference crawler does NOT parse robots.txt (its politeness is
 delay-only; config/config.go:89-92); robots handling is engine-native
 [north_rule: "politeness, robots"]. This module turns raw robots.txt
 bodies stored in the pages table into the (host, path_prefix, allowed)
 rule rows that `operators.politeness.apply_robots` consumes with its
-longest-matching-prefix broadcast join.
+broadcast per-host rule arrays. `path_prefix` holds the rule's value
+verbatim: an RFC 9309 path pattern whose `*` and trailing `$` are
+interpreted only at match time, against the URL's path + `?query`.
 
 Parsing semantics (the original REP subset every major crawler agrees
 on — RFC 9309 §2):
@@ -15,12 +17,13 @@ on — RFC 9309 §2):
 - the group matched is the one naming `agent` exactly (case-insensitive),
   else the `*` group; rules from multiple groups for the same agent
   merge (RFC 9309 §2.2.1);
-- `Allow:` / `Disallow:` values are path prefixes; an EMPTY Disallow
+- `Allow:` / `Disallow:` values are path patterns; an EMPTY Disallow
   means "allow all" and contributes no rule;
 - `#` starts a comment; unknown directives (Crawl-delay, Sitemap) are
   ignored;
-- precedence (longest-prefix-wins) is applied later by apply_robots,
-  matching RFC 9309 §2.2.2.
+- matching (RFC 9309 §2.2.3) and precedence (most pattern octets wins,
+  Allow wins ties; RFC 9309 §2.2.2) are applied later by
+  politeness.robots_allowed.
 
 The parse itself is an Arrow-batched mapInPandas over the (tiny —
 one per host) robots pages; at 10^10-URL scale the rule table stays
@@ -39,7 +42,7 @@ RULES_SCHEMA = "host string, path_prefix string, allowed boolean"
 
 
 def parse_robots_txt(body: str, agent: str = "*") -> list[tuple[str, bool]]:
-    """robots.txt body -> [(path_prefix, allowed)] for `agent`.
+    """robots.txt body -> [(path pattern, allowed)] for `agent`.
 
     Pure Python (also used inside the Arrow kernel); deterministic rule
     order = file order, so downstream tie-breaks are stable.
@@ -195,9 +198,6 @@ def sitemap_directives(robots_pages: DataFrame) -> DataFrame:
 
 # --- X90: RFC 9309 wildcard patterns ---------------------------------------
 
-WILDCARD_RULES_SCHEMA = "host string, pattern string, allowed boolean"
-
-
 def robots_pattern_regex(pattern: str) -> str:
     """Robots path pattern -> anchored regex, RFC 9309 §2.2.3 full
     matching: `*` matches any octet span, a TRAILING `$` anchors the
@@ -222,23 +222,6 @@ def robots_pattern_regex(pattern: str) -> str:
     if anchored:
         out.append("$")
     return "".join(out)
-
-
-def wildcard_rules_from_pages(pages: DataFrame, agent: str = "*") -> DataFrame:
-    """pages rows whose url path is /robots.txt -> wildcard rule table
-    (host, pattern, allowed) for politeness.apply_robots_wildcard.
-
-    Group/agent selection is IDENTICAL to the prefix subset
-    (parse_robots_txt — RFC 9309 §2.2.1 grouping is matching-agnostic);
-    only the downstream MATCHING differs, so this is a rename
-    projection over the same Arrow kernel: patterns flow through
-    verbatim, `*`/`$` uninterpreted until match time. Rule order =
-    file order (stable downstream tie-breaks), one tiny row set per
-    host — broadcast-sized at 10^10-URL scale exactly like the prefix
-    table."""
-    return robots_rules_from_pages(pages, agent).select(
-        "host", F.col("path_prefix").alias("pattern"), "allowed"
-    )
 
 
 def robots_failure_policy(statuses: DataFrame,

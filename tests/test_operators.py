@@ -373,6 +373,31 @@ def test_bloom_probe_no_false_negatives(spark):
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
+def test_bloom_flat_bits_match_per_shard_filters(spark):
+    """The flat bit array holds, byte for byte, what n_shards separate
+    Bloom filters hold after the same adds: bit (h1 + i*h2) mod m_bits
+    of shard h1 mod n_shards, for i < k."""
+    import numpy as np
+    import pandas as pd
+
+    from ptt_spider_go_spark.operators.dedup import _hash2
+
+    urls = [f"https://f.test/{i}" for i in range(3000)]
+    blooms = BloomShardSet(n_shards=4, expected_per_shard=512)
+    for part in (urls[:1000], urls[1000:]):
+        blooms.add_df(spark.createDataFrame(
+            [(u,) for u in part], "url string").repartition(3))
+    n, m = blooms.n_shards, blooms.m_bits
+    mirror = np.zeros((n, m // 8), dtype=np.uint8)
+    h1s, h2s = _hash2(pd.Series(urls))
+    for h1, h2 in zip(map(int, h1s), map(int, h2s)):
+        for i in range(blooms.k):
+            bit = (h1 + i * h2) % 2**64 % m
+            mirror[h1 % n, bit >> 3] |= 1 << (bit & 7)
+    assert blooms.shards.shape == mirror.shape
+    assert blooms.shards.tobytes() == mirror.tobytes()
+
+
 # --- D3 dir collision window --------------------------------------------------
 
 def test_dir_collision_window(spark):

@@ -2,9 +2,10 @@
 
 The reference crawler has no robots handling at all (its politeness is
 delay-only, crawler/crawler.go:59-65); robots support is engine-native
-per the north rule. R1 covered the prefix-only subset; X90 adds the
-full §2.2.3 matching semantics: `*` spans any octets, a TRAILING `$`
-anchors the end, longest-pattern-octets precedence, Allow wins ties.
+per the north rule. One matcher applies the full §2.2.3 semantics to
+every rule: `*` spans any octets, a TRAILING `$` anchors the end,
+longest-pattern-octets precedence, Allow wins ties. A rule without
+`*` or `$` is a plain prefix.
 """
 
 from __future__ import annotations
@@ -17,14 +18,15 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ptt_spider_go_spark.operators.politeness import (
-    apply_robots_wildcard,
+    apply_robots,
+    robots_allowed,
+    robots_host_rules,
     robots_pattern_rx,
-    robots_wildcard_verdicts,
 )
 from ptt_spider_go_spark.sources.robots import (
-    WILDCARD_RULES_SCHEMA,
+    RULES_SCHEMA,
     robots_pattern_regex,
-    wildcard_rules_from_pages,
+    robots_rules_from_pages,
 )
 
 
@@ -129,8 +131,9 @@ def rules(spark):
             ("h.test", "/t/x*", False),
             ("h.test", "/q(1)/", False),
             ("h.test", "/*?sessionid=", False),
+            ("h.test", "/n", None),
         ],
-        WILDCARD_RULES_SCHEMA,
+        RULES_SCHEMA,
     )
 
 
@@ -138,7 +141,7 @@ def _verdicts(spark, rules, paths):
     f = spark.createDataFrame(
         [("http://h.test" + p,) for p in paths], "url string"
     )
-    rows = robots_wildcard_verdicts(f, rules).collect()
+    rows = robots_allowed(f, robots_host_rules(rules)).collect()
     return {r["url"].removeprefix("http://h.test"): (r["allowed"], r["rule"])
             for r in rows}
 
@@ -158,6 +161,7 @@ def test_verdict_matrix(spark, rules):
             "/q(1)/p",  # literal metachars in pattern
             "/p?sessionid=3",  # match runs over path + query
             "/p",  # no rule matches
+            "/n1",  # the matching rule has a NULL verdict
         ],
     )
     assert v["/private/p.html"] == (True, "/private/*.html$")
@@ -170,13 +174,14 @@ def test_verdict_matrix(spark, rules):
     assert v["/q(1)/p"] == (False, "/q(1)/")
     assert v["/p?sessionid=3"] == (False, "/*?sessionid=")
     assert v["/p"] == (True, None)
+    assert v["/n1"] == (None, "/n")
 
 
 def test_unknown_host_allowed(spark, rules):
     f = spark.createDataFrame(
         [("http://other.test/private/p.txt",)], "url string"
     )
-    out = apply_robots_wildcard(f, rules).collect()
+    out = apply_robots(f, rules).collect()
     assert [r["url"] for r in out] == ["http://other.test/private/p.txt"]
 
 
@@ -190,7 +195,7 @@ def test_precedence_counts_octets_not_characters(spark):
     only wildcard patterns need the distinction.)"""
     r = spark.createDataFrame(
         [("h.test", "/caf*", True), ("h.test", "/café", False)],
-        WILDCARD_RULES_SCHEMA,
+        RULES_SCHEMA,
     )
     v = _verdicts(spark, r, ["/café-menu"])
     assert v["/café-menu"] == (False, "/café")
@@ -198,7 +203,7 @@ def test_precedence_counts_octets_not_characters(spark):
 
 def test_none_rules_passthrough(spark):
     f = spark.createDataFrame([("http://h.test/a",)], "url string")
-    assert apply_robots_wildcard(f, None) is f
+    assert apply_robots(f, None) is f
 
 
 def test_filter_drops_extra_columns_only(spark, rules):
@@ -206,7 +211,8 @@ def test_filter_drops_extra_columns_only(spark, rules):
         [("http://h.test/private/p.txt", 7), ("http://h.test/ok", 8)],
         "url string, k int",
     )
-    out = apply_robots_wildcard(f, rules)
+    f = f.union(spark.createDataFrame([("http://h.test/n1", 9)], f.schema))
+    out = apply_robots(f, rules)
     assert out.columns == ["url", "k"]
     assert [(r["url"], r["k"]) for r in out.collect()] == [
         ("http://h.test/ok", 8)
@@ -220,8 +226,8 @@ def test_rules_parse_through_arrow_kernel(spark):
         "url string, text string",
     )
     got = {
-        (r["host"], r["pattern"], r["allowed"])
-        for r in wildcard_rules_from_pages(pages).collect()
+        (r["host"], r["path_prefix"], r["allowed"])
+        for r in robots_rules_from_pages(pages).collect()
     }
     assert got == {
         ("k.test", "/w/*", False),
@@ -229,14 +235,11 @@ def test_rules_parse_through_arrow_kernel(spark):
     }
 
 
-def test_prefix_rules_identical_to_prefix_matcher(spark):
-    """On metachar-free rules the wildcard matcher is a strict
-    generalization of apply_robots: same prefixes, same length
-    precedence, same tie-break — outputs must be row-identical, which
-    is what makes run_crawl's robots_wildcards flag safe to flip on a
-    prefix-rule table."""
-    from ptt_spider_go_spark.operators.politeness import apply_robots
-
+def test_prefix_rules_longest_match_verdicts(spark):
+    """On rules without `*` or `$` the matcher is longest-prefix
+    matching: the matching prefix with the most octets decides, Allow
+    wins ties, no matching prefix means allowed, and a query string
+    never changes a prefix rule's verdict."""
     prefix_rules = spark.createDataFrame(
         [
             ("p.test", "/bbs/", True),
@@ -244,30 +247,32 @@ def test_prefix_rules_identical_to_prefix_matcher(spark):
             ("p.test", "/adm", False),
             ("p.test", "/adm/pub", True),
         ],
-        "host string, path_prefix string, allowed boolean",
+        RULES_SCHEMA,
     )
-    paths = [
-        "/bbs/ok.html", "/bbs/private/x", "/bbs/privateX",
-        "/adm/secret", "/adm/pub/open", "/other", "/",
-    ]
+    expected = {
+        "/bbs/ok.html": (True, "/bbs/"),
+        "/bbs/private/x": (False, "/bbs/private"),
+        "/bbs/privateX": (False, "/bbs/private"),
+        "/adm/secret": (False, "/adm"),
+        "/adm/pub/open": (True, "/adm/pub"),
+        "/adm/pub?next=/adm": (True, "/adm/pub"),
+        "/other": (True, None),
+        "/": (True, None),
+    }
     f = spark.createDataFrame(
-        [("http://p.test" + p,) for p in paths], "url string"
+        [("http://p.test" + p,) for p in expected], "url string"
     )
-    a = sorted(r["url"] for r in apply_robots(f, prefix_rules).collect())
-    b = sorted(
-        r["url"]
-        for r in apply_robots_wildcard(
-            f, prefix_rules.withColumnRenamed("path_prefix", "pattern")
-        ).collect()
-    )
-    assert a == b
+    got = {
+        r["url"].removeprefix("http://p.test"): (r["allowed"], r["rule"])
+        for r in robots_allowed(f, robots_host_rules(prefix_rules)).collect()
+    }
+    assert got == expected
 
 
-def test_run_crawl_wildcard_flag_prefix_parity(spark):
-    """run_crawl(robots_wildcards=True) over a prefix-only rule table
-    produces the exact article set of the default matcher (flag is
-    opt-in and inert on prefix rules), and a `$`-anchored rule only
-    bites with the flag on."""
+def test_run_crawl_applies_wildcard_rules(spark):
+    """A default run_crawl reads `path_prefix` as an RFC 9309 pattern: a
+    `$`-anchored rule and a `*` rule each keep their article out of the
+    crawl, while a prefix-only rule table still yields articles."""
     from ptt_spider_go_spark.config import CrawlConfig
     from ptt_spider_go_spark.datagen import pages_pandas
     from ptt_spider_go_spark.plans.crawl import run_crawl
@@ -277,20 +282,29 @@ def test_run_crawl_wildcard_flag_prefix_parity(spark):
     pages = spark.createDataFrame(dataset)
     cfg = CrawlConfig(board="Beauty", pages=2, push_rate=0,
                       host_salt=2, max_supersteps=4)
-    rules = spark.createDataFrame(
+    prefix_rules = spark.createDataFrame(
         [("www.ptt.cc", "/bbs/Beauty/M.", True),
          ("www.ptt.cc", "/bbs/X", False)],
-        "host string, path_prefix string, allowed boolean",
+        RULES_SCHEMA,
     )
-
-    def key(r):
-        return (r["board"], r["page_no"], r["pos"])
-
-    base = run_crawl(spark, pages, cfg, robots=rules)
-    wc = run_crawl(spark, pages, cfg, robots=rules, robots_wildcards=True)
-    assert [tuple(r) for r in sorted(wc.articles.collect(), key=key)] == \
-        [tuple(r) for r in sorted(base.articles.collect(), key=key)]
-    assert len([tuple(r) for r in base.articles.collect()]) > 0
+    base = {r["url"] for r in
+            run_crawl(spark, pages, cfg, robots=prefix_rules)
+            .articles.collect()}
+    assert len(base) > 2
+    anchored, starred = sorted(base)[:2]
+    host = "https://www.ptt.cc"
+    # '$' anchors the first article's exact path; '*' spans the middle
+    # of the second's file name
+    stem, ext = starred[len(host):].rsplit(".", 1)
+    rules = spark.createDataFrame(
+        [("www.ptt.cc", anchored[len(host):] + "$", False),
+         ("www.ptt.cc", stem[:12] + "*" + stem[-3:] + "." + ext, False)],
+        RULES_SCHEMA,
+    )
+    res = run_crawl(spark, pages, cfg, robots=rules)
+    fetched = {r["url"] for r in res.fetch_log.collect()}
+    assert anchored not in fetched and starred not in fetched
+    assert {r["url"] for r in res.articles.collect()} == base
 
 
 def test_robots_failure_policy_rfc9309(spark):

@@ -6,10 +6,16 @@ import re
 
 import pytest
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ptt_spider_go_spark.config import CrawlConfig
 from ptt_spider_go_spark.datagen import fetch_events_pandas, pages_pandas
+from ptt_spider_go_spark.operators.politeness import politeness_receipts
 from ptt_spider_go_spark.plans.crawl import run_crawl
+from ptt_spider_go_spark.sources.robots import (
+    RULES_SCHEMA,
+    robots_pattern_regex,
+)
 
 BOARD = "Beauty"
 TRAP_PATH = "/cal/2024" * 4
@@ -30,9 +36,9 @@ def _with_trap_and_offhost_links(pdf):
 
 @pytest.fixture(scope="module")
 def gated_crawl(spark):
-    """run(**kw): the 3-page fixture under robots rules, the generator's
-    429 schedule, the trap gate and a blocklist, budgeted to 8 fetches
-    per superstep."""
+    """run(**kw): the 3-page fixture under robots rules (`robots=`
+    replaces them), the generator's 429 schedule, the trap gate and a
+    blocklist, budgeted to 8 fetches per superstep."""
     pdf = pages_pandas(boards=(BOARD,), pages_per_board=3, slots_per_page=6)
     events = spark.createDataFrame(fetch_events_pandas(pdf)).cache()
     pages = spark.createDataFrame(_with_trap_and_offhost_links(pdf)).cache()
@@ -43,7 +49,7 @@ def gated_crawl(spark):
     )
     blocklist = spark.createDataFrame([("ads.example",)], "pattern string")
 
-    def run(**kw):
+    def run(robots=robots, **kw):
         cfg = CrawlConfig(board=BOARD, pages=3, push_rate=0, host_salt=4,
                           workers=1, superstep_ms=10_000,
                           max_supersteps=kw.pop("max_supersteps", 10))
@@ -55,9 +61,10 @@ def gated_crawl(spark):
 
 
 def test_step0_ledger_is_one_pass(spark, gated_crawl, monkeypatch):
-    """The executed step-0 ledger plan holds one budget Window
-    (partitioned by _host, _lane), one join against fetch_events, and
-    no Union of per-outcome branches."""
+    """The executed step-0 ledger plan holds one Window, the budget's
+    (partitioned by _host, _lane), one join against fetch_events, no
+    Union of per-outcome branches, and no shuffle by url: the robots
+    verdict is a broadcast join and a projection."""
     plans = []
     cls = type(spark.range(1))
     real = cls.localCheckpoint
@@ -76,6 +83,8 @@ def test_step0_ledger_is_one_pass(spark, gated_crawl, monkeypatch):
         r"Window \[.*\], \[_host#\d+, _lane#\d+L?\], \[", plan)
     events_joins = re.findall(r"Join \[url#\d+, .*\], \[_url#\d+, _att#", plan)
     assert len(budget_windows) == 1, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert not re.search(r"Exchange hashpartitioning\(url#", plan), plan
     assert len(events_joins) == 1, plan
     assert "Union" not in plan, plan
 
@@ -102,3 +111,57 @@ def test_outputs_independent_of_shuffle_partitions(spark, gated_crawl):
     assert got[1]["trapped"] and got[1]["blocked"]
     assert any("retry_429" in r for r in got[1]["fetch_log"])
     assert got[1] == got[7]
+
+
+def test_composed_production_profile(spark, gated_crawl, tmp_path):
+    """Every opt-in at once (trap gate, blocklist, AIMD budgets, WARC
+    archive, sketch telemetry) under a robots table with a `$` rule and
+    a `*` rule: no disallowed URL is fetched, trapped / blocked / fetched
+    URLs are disjoint, the CDX index is exactly the fetched 200s, and
+    every host complies with its budget."""
+    pdf = pages_pandas(boards=(BOARD,), pages_per_board=3, slots_per_page=6)
+    site = "https://www.ptt.cc"
+    index = sorted(u for u in pdf["url"] if re.search(r"/index\d+\.html$", u))
+    article = sorted(u for u in pdf["url"] if "/M." in u)[-1]
+    patterns = [
+        index[0][len(site):] + "$",
+        f"/bbs/{BOARD}/*" + article[article.index(".A."):],
+    ]
+    robots = spark.createDataFrame(
+        [("www.ptt.cc", p, False) for p in patterns], RULES_SCHEMA)
+    disallowed = {
+        u for u in pdf["url"]
+        if any(re.match(robots_pattern_regex(p), u[len(site):])
+               for p in patterns)
+    }
+    assert {index[0], article} <= disallowed
+
+    res = gated_crawl(robots=robots, aimd=True,
+                      archive_dir=str(tmp_path / "archive"),
+                      sketch_telemetry=True)
+
+    def urls(df, col="url"):
+        return {r[0] for r in df.select(col).collect()}
+
+    fetched = urls(res.fetch_log)
+    assert fetched and not fetched & disallowed
+    assert not urls(res.contents) & disallowed
+    assert not urls(res.articles, "src_url") & disallowed
+    # the `*` rule bites on an article an allowed index page lists
+    assert article in urls(res.articles)
+
+    trapped, blocked = urls(res.trapped), urls(res.blocked)
+    assert trapped and blocked
+    assert not trapped & blocked
+    assert not (trapped | blocked) & fetched
+
+    assert urls(res.archive_cdx) == urls(
+        res.fetch_log.filter(F.col("status") == 200))
+    assert res.url_telemetry.count() > 0
+
+    budget = 8
+    budgets = res.host_budget_log.groupBy("host").agg(
+        F.greatest(F.max("budget"), F.lit(budget)).alias("budget"))
+    receipts = politeness_receipts(res.fetch_log, budgets,
+                                   default_budget=budget).collect()
+    assert receipts and all(r["compliant"] for r in receipts), receipts
