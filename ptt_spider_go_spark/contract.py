@@ -436,10 +436,10 @@ SELECT event_id, event_type FROM (
 
 def q_budget_override_gate(spark, sf_dir):
     """T1 + robots Crawl-delay: per-host budget OVERRIDES in the
-    politeness gate (broadcast override join; hosts without an override
-    use the global budget). salt=1 keeps the lane split
+    politeness gate (the per-host policy join; hosts without an
+    override use the global budget). salt=1 keeps the lane split
     SQL-expressible; lane exactness is pinned in pytest."""
-    from ptt_spider_go_spark.operators.politeness import budget_gate
+    from ptt_spider_go_spark.operators import politeness
 
     ev = _t(spark, sf_dir, "events")
     k = F.col("event_id")
@@ -451,9 +451,10 @@ def q_budget_override_gate(spark, sf_dir):
     overrides = spark.createDataFrame(
         [("h0.test", 10), ("h1.test", 3)], "host string, budget long"
     )
-    return budget_gate(
-        frontier, host_budget=15, salt=1,
-        order_cols=[F.col("url").asc()], host_budgets=overrides,
+    return politeness.budget_gate(
+        politeness.with_host_policy(frontier, host_budgets=overrides),
+        F.coalesce(F.col("host_budget"), F.lit(15)), salt=1,
+        order_cols=[F.col("url").asc()],
     ).filter("admitted").select("event_id", "url")
 
 
@@ -2392,7 +2393,8 @@ def q_authority_budgets(spark, sf_dir):
     """Authority-proportional crawl-budget allocation: host_rank over
     the documents link graph -> largest-remainder integer split of a
     1000-fetch superstep budget (operators/linkrank.py
-    authority_budgets — the host_budgets override budget_gate takes)."""
+    authority_budgets — a per-host budget table for the politeness
+    gate)."""
     from ptt_spider_go_spark.operators import linkrank
 
     docs = _t(spark, sf_dir, "documents")

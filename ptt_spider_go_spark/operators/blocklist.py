@@ -16,8 +16,9 @@ Scale shape (the reason this is an operator and not a `LIKE` chain):
 - matching runs per DISTINCT host, not per URL: hosts are ~10^7 when
   URLs are ~10^10, so the suffix explosion (a host has at most
   label-count-1 candidate suffixes, typically 2-4) happens on the
-  small relation, and the verdict joins back to the frontier on the
-  host equi-key the frontier is already shuffled by for politeness;
+  small relation, and the per-host verdicts broadcast back to the
+  rows, which never shuffle (the crawl loop carries them in its one
+  per-host policy frame, politeness.with_host_policy);
 - the blocklist itself broadcasts (UT1-scale lists are ~10^6-10^7
   short strings — well under the broadcast budget; a list that
   outgrows it degrades to an ordinary shuffled equi-join on the
@@ -53,22 +54,18 @@ def host_suffixes(host: Column) -> Column:
     ).otherwise(F.array(host))
 
 
-def blocklist_filter(rows: DataFrame, blocklist: DataFrame,
-                     host_col: str = "host") -> DataFrame:
-    """Annotate `rows` with (blocked: boolean, matched_pattern:
-    string|null) by registrable-domain suffix match of rows[host_col]
+def blocklist_verdicts(hosts: DataFrame, blocklist: DataFrame,
+                       host_col: str = "host") -> DataFrame:
+    """(host_col, blocked, matched_pattern): the verdict of each host
+    in `hosts` (one row per host) by registrable-domain suffix match
     against blocklist(pattern). Longest matching pattern wins
-    attribution, ties lexicographic. See module docstring for the
-    scale shape; callers drop or quarantine on `blocked` (the
-    quarantine path composes with errors.py like every other gate).
-    """
-    hosts = rows.select(host_col).distinct()
+    attribution, ties lexicographic."""
     # length-prefixed pattern string: max() picks longest-then-lex.
     tagged = F.concat(
         F.lpad(F.length("pattern").cast("string"), 4, "0"),
         F.col("pattern"),
     )
-    verdicts = (
+    return (
         hosts
         .select(host_col,
                 F.explode(host_suffixes(F.col(host_col))).alias("_sfx"))
@@ -77,13 +74,24 @@ def blocklist_filter(rows: DataFrame, blocklist: DataFrame,
         .groupBy(host_col)
         .agg(F.max(F.when(F.col("pattern").isNotNull(), tagged))
              .alias("_m"))
+        .select(host_col, F.col("_m").isNotNull().alias("blocked"),
+                F.expr("substring(_m, 5)").alias("matched_pattern"))
     )
-    # left join: a null host (unparseable URL) can never equi-match its
-    # verdict row, and a frontier gate must annotate, not drop, such
-    # rows — they surface as blocked=false and fail later at fetch.
-    return (
-        rows.join(verdicts, host_col, "left")
-        .withColumn("blocked", F.col("_m").isNotNull())
-        .withColumn("matched_pattern", F.expr("substring(_m, 5)"))
-        .drop("_m")
-    )
+
+
+def blocklist_filter(rows: DataFrame, blocklist: DataFrame,
+                     host_col: str = "host") -> DataFrame:
+    """Annotate `rows` with (blocked: boolean, matched_pattern:
+    string|null) by registrable-domain suffix match of rows[host_col]
+    against blocklist(pattern) (blocklist_verdicts). See module
+    docstring for the scale shape; callers drop or quarantine on
+    `blocked` (the quarantine path composes with errors.py like every
+    other gate).
+    """
+    verdicts = blocklist_verdicts(rows.select(host_col).distinct(),
+                                  blocklist, host_col)
+    # left join: a frontier gate must annotate, not drop, a row whose
+    # host is NULL (unparseable URL) — it surfaces as blocked=false
+    # and fails later at fetch.
+    return (rows.join(F.broadcast(verdicts), host_col, "left")
+            .fillna(False, ["blocked"]))

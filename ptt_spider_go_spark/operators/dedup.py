@@ -38,18 +38,17 @@ from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
 
-_HASH_KEY_1 = "ptt-spider-bloom-1"  # padded to 16 bytes below
-_HASH_KEY_2 = "ptt-spider-bloom-2"
-
-
-def _key(k: str) -> str:
-    return (k * 2)[:16]
+#: two distinct 16-byte SipHash keys, so h1 and h2 are independent
+#: hashes: the Bloom stride (h2) and the cuckoo fingerprint (h2's top
+#: bits) must not derive from the shard and bucket hash (h1)
+_HASH_KEY_1 = "ptt-spider-blm-1"
+_HASH_KEY_2 = "ptt-spider-blm-2"
 
 
 def _hash2(urls: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     arr = np.asarray(urls.astype(object))
-    h1 = pd.util.hash_array(arr, hash_key=_key(_HASH_KEY_1))
-    h2 = pd.util.hash_array(arr, hash_key=_key(_HASH_KEY_2))
+    h1 = pd.util.hash_array(arr, hash_key=_HASH_KEY_1)
+    h2 = pd.util.hash_array(arr, hash_key=_HASH_KEY_2)
     # Kirsch-Mitzenmacher double hashing; force h2 odd so strides cover bits.
     return h1, (h2 | np.uint64(1))
 

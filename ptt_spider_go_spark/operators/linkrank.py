@@ -128,8 +128,8 @@ def authority_budgets(ranks: DataFrame, total_budget: int) -> DataFrame:
     """(host, rank_micro) -> (host, budget): split a global per-superstep
     fetch budget across hosts PROPORTIONALLY to link authority — the
     composition point between host_rank and the politeness gate
-    (politeness.budget_gate's host_budgets override, the same hook the
-    robots Crawl-delay table uses). High-authority hosts get crawled
+    (a per-host budget table for politeness.with_host_policy, the same
+    hook the robots Crawl-delay table uses). High-authority hosts get crawled
     deeper each superstep; every host keeps >= its teleport-rank floor,
     so no host starves.
 
@@ -673,7 +673,7 @@ def demoted_budgets(ranks: DataFrame, spam: DataFrame,
     apportionment (their share redistributes to clean hosts by the
     same exact largest-remainder arithmetic) and re-emitted with
     budget 0 and demoted=TRUE: an explicit zero-budget row is
-    auditable and composes with budget_gate's override semantics
+    auditable and composes with the per-host budget override
     (budget 0 = "fetch nothing this superstep"), where silently
     dropping the host would mean "no override" and let the default
     budget through — the exact failure a demotion list exists to

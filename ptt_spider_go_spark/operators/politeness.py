@@ -18,9 +18,14 @@ priority coordination (SURVEY §4 "single-host serialization").
 Robots [north_rule]: the reference does not parse robots.txt; rules
 arrive as a (host, path_prefix, allowed) table whose `path_prefix` is an
 RFC 9309 path pattern (`*` and a trailing `$`), matched against the
-URL's path + `?query`. One matcher, robots_allowed, decides every
-verdict from a broadcast per-host rule array (robots_host_rules): one
-broadcast join and one projection, with no shuffle of the frontier.
+URL's path + `?query`. One matcher, robots_verdict, decides every
+verdict from a per-host rule array (robots_host_rules).
+
+Per-host policy meets the rows in one place, with_host_policy: one
+frame per distinct host holds the host's robots rule array, blocklist
+verdict and budget, and ONE broadcast join on host carries it to every
+row. The robots verdict, the blocked flag and the lane budget are then
+projections, and only the budget's salted lanes shuffle the frontier.
 """
 
 from __future__ import annotations
@@ -28,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ptt_spider_go_spark.functions.columns import url_host
+from ptt_spider_go_spark.functions.columns import _let, url_host
+from ptt_spider_go_spark.operators.blocklist import blocklist_verdicts
 
 
 def apply_robots(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
@@ -55,9 +61,48 @@ def robots_host_rules(robots: DataFrame) -> DataFrame:
         F.collect_list(rule).alias("_rules"))
 
 
-def robots_allowed(frontier: DataFrame, host_rules: DataFrame) -> DataFrame:
-    """`frontier` + (allowed boolean, rule string) under the per-host
-    rule arrays of robots_host_rules.
+def with_host_policy(rows: DataFrame, host_rules: DataFrame | None = None,
+                     blocklist: DataFrame | None = None,
+                     host_budgets: DataFrame | None = None) -> DataFrame:
+    """`rows` + `_host` (the url's host) + the per-host policy columns
+    of the tables given:
+
+    - `_rules`: the host's robots rule array (robots_host_rules), which
+      robots_verdict reads;
+    - `blocked`, `matched_pattern`: its blocklist verdict
+      (operators/blocklist.py);
+    - `host_budget`: its (host, budget) row's budget, NULL without one.
+
+    This is the one place the crawl's per-host policy meets a frontier
+    row. The policy frame is host-level (tiny), so it meets `rows` in
+    ONE broadcast join on `_host`, and the rows never shuffle. With a
+    blocklist, or with both rule arrays and budgets, the frame starts
+    from the distinct hosts of `rows` (with their blocklist verdicts)
+    and left-joins the rule and budget tables by broadcast. A lone rule
+    or budget table is the frame as it stands, which saves the census
+    of hosts its shuffle. A NULL host (unparseable url) matches no policy row: no
+    rules, a NULL (not true) `blocked`, no budget."""
+    tagged = rows.withColumn("_host", url_host(F.col("url")))
+    tables = [] if host_rules is None else [host_rules]
+    if host_budgets is not None:
+        tables.append(host_budgets.select(
+            F.col("host").alias("_host"), F.col("budget").alias("host_budget")))
+    policy = None
+    if blocklist is not None or len(tables) > 1:
+        policy = tagged.select("_host").distinct()
+    if blocklist is not None:
+        policy = blocklist_verdicts(policy, blocklist, "_host")
+    for t in tables:
+        policy = (t if policy is None
+                  else policy.join(F.broadcast(t), "_host", "left"))
+    if policy is None:
+        return tagged
+    return tagged.join(F.broadcast(policy), "_host", "left")
+
+
+def robots_verdict(rows: DataFrame) -> DataFrame:
+    """`rows` (a `url` and its host's `_rules` array, as
+    with_host_policy joins it) + (allowed boolean, rule string).
 
     Each `path_prefix` is an RFC 9309 §2.2.3 path pattern (`*` spans
     any octets, a trailing `$` anchors the end; a pattern with neither
@@ -70,28 +115,37 @@ def robots_allowed(frontier: DataFrame, host_rules: DataFrame) -> DataFrame:
     allowed with a NULL `rule`; a matching rule whose `allowed` is NULL
     yields NULL, never allowed.
 
-    The rule arrays are tiny (|hosts| rows) and broadcast, so the
-    verdict is one broadcast join and one projection: `array_max` over
-    the matching rule structs orders by (len, allowed, ...), and a
-    struct's NULL field sorts first. The frontier never shuffles."""
+    One projection: `array_max` over the matching rule structs orders
+    by (len, allowed, ...), and a struct's NULL field sorts first. The
+    path and the best rule are let-bound, so a filter on `allowed` that
+    Catalyst pushes into the join's projection still matches each row's
+    path against its rules once."""
     qs = F.try_parse_url(F.col("url"), F.lit("QUERY"))
     path = F.concat(
         F.coalesce(F.try_parse_url(F.col("url"), F.lit("PATH")), F.lit("/")),
         F.when(qs.isNotNull(), F.concat(F.lit("?"), qs)).otherwise(F.lit("")),
     )
-    f = frontier.withColumns({"_host": url_host(F.col("url")), "_path": path})
-    best = F.array_max(F.filter(
-        "_rules", lambda r: F.regexp_like(F.col("_path"), r["rx"])))
+    verdict = _let(path, lambda p: _let(
+        F.array_max(F.filter("_rules", lambda r: F.regexp_like(p, r["rx"]))),
+        lambda best: F.struct(
+            F.when(best.isNull(), F.lit(True)).otherwise(best["allowed"])
+            .alias("allowed"),
+            best["pattern"].alias("rule"),
+        ),
+    ))
     return (
-        f.join(F.broadcast(host_rules), on="_host", how="left")
-        .withColumn("_best", best)
-        .select(
-            *frontier.columns,
-            F.when(F.col("_best").isNull(), F.lit(True))
-            .otherwise(F.col("_best.allowed")).alias("allowed"),
-            F.col("_best.pattern").alias("rule"),
-        )
+        rows.withColumn("_verdict", verdict)
+        .withColumns({"allowed": F.col("_verdict.allowed"),
+                      "rule": F.col("_verdict.rule")})
+        .drop("_verdict")
     )
+
+
+def robots_allowed(frontier: DataFrame, host_rules: DataFrame) -> DataFrame:
+    """`frontier` + (allowed boolean, rule string) under the per-host
+    rule arrays of robots_host_rules (robots_verdict)."""
+    return robots_verdict(with_host_policy(frontier, host_rules)).select(
+        *frontier.columns, "allowed", "rule")
 
 
 def budgets_from_crawl_delays(delays: DataFrame, workers: int,
@@ -110,19 +164,21 @@ def budgets_from_crawl_delays(delays: DataFrame, workers: int,
     return delays.select("host", b.alias("budget"))
 
 
-def budget_gate(frontier: DataFrame, host_budget: int, salt: int,
+def budget_gate(frontier: DataFrame, host_budget: int | Column, salt: int,
                 order_cols: list | None = None,
-                host_budgets: DataFrame | None = None,
                 eligible: Column | None = None) -> DataFrame:
     """The frontier with an `admitted` flag under per-host budgets;
     rows not admitted are deferred to the next superstep.
 
     Admission is priority order within each of `salt` lanes per host;
-    lane budgets sum exactly to the host's budget. `host_budgets`
-    ((host, budget), tiny -> broadcast) overrides the global
-    `host_budget` per host — the robots Crawl-delay hook. Only rows
-    where `eligible` holds (default: every row) compete for the budget:
-    the rest rank after them in their lane and are never admitted.
+    lane budgets sum exactly to the host's budget. `host_budget` is
+    one budget for every host, or a Column giving each row its host's
+    budget: with_host_policy's `host_budget` over a (host, budget)
+    table (the robots Crawl-delay hook), coalesced to a default. Only
+    rows where `eligible` holds (default: every row) compete for the
+    budget: the rest rank after them in their lane and are never
+    admitted. The hosts come from the frontier's `_host` column when
+    it has one (with_host_policy adds it).
     """
     order_cols = order_cols or [
         F.col("kind_rank").asc(),
@@ -134,13 +190,9 @@ def budget_gate(frontier: DataFrame, host_budget: int, salt: int,
         order_cols = [eligible.desc(), *order_cols]
     lane = F.pmod(F.xxhash64(F.col("url")), F.lit(salt))
     w = Window.partitionBy("_host", "_lane").orderBy(*order_cols)
-    tagged = frontier.withColumn("_host", url_host(F.col("url")))
+    tagged = (frontier if "_host" in frontier.columns
+              else frontier.withColumn("_host", url_host(F.col("url"))))
     budget = F.lit(host_budget).cast("long")
-    if host_budgets is not None:
-        ov = host_budgets.select(F.col("host").alias("_host"),
-                                 F.col("budget").alias("_hb"))
-        tagged = tagged.join(F.broadcast(ov), on="_host", how="left")
-        budget = F.coalesce(F.col("_hb"), budget)
     # exact per-host lane split: the first budget % salt lanes take one more
     lane_budget = (F.floor(budget / salt)
                    + (F.col("_lane") < budget % salt).cast("long"))
@@ -150,7 +202,7 @@ def budget_gate(frontier: DataFrame, host_budget: int, salt: int,
     return (
         tagged.withColumn("_lane", lane)
         .withColumn("admitted", admitted)
-        .drop("_host", "_lane", "_hb")
+        .drop("_host", "_lane")
     )
 
 
@@ -173,7 +225,8 @@ def aimd_budgets(prev_budgets: DataFrame, fetch_log: DataFrame,
       default_budget before the rule applies.
 
     Composes downstream exactly like authority_budgets / Crawl-delay:
-    the output IS budget_gate's host_budgets override. All arithmetic
+    the output is a (host, budget) table for with_host_policy, whose
+    `host_budget` column budget_gate reads. All arithmetic
     is integer-exact (oracle-reproducible); the congestion signal is
     one groupBy(host) max over a narrow (url, status) projection.
     """

@@ -5,12 +5,18 @@ Streaming — because the crawl is an iterative fixpoint over a priority
 frontier (BASELINE.json north_star). Each superstep:
 
   0. opt-in trap and blocklist flags (flag-and-divert)
-  1. robots verdicts (broadcast per-host rules)      [north_rule]
+  1. robots verdicts                                 [north_rule]
   2. per-host politeness budget flag, salted lanes   (T1/T6)
+     — the blocklist verdict, robots rules and host budget of steps
+     0-2 reach each row through ONE broadcast join of the frontier to
+     a host-level frame (politeness.with_host_policy); the
+     blocked flag, the robots verdict and the lane budget are
+     projections over it, so the budget's salted lanes are the only
+     frontier shuffle
   3. retry-ledger resolution of simulated statuses   (T2)
      — steps 0-3 are column producers, and the step ledger is ONE
-     projection over their flags: one budget rank and one fetch-status
-     join per superstep
+     projection over their flags: one host-policy join, one budget
+     rank and one fetch-status join per superstep
   4. "fetch" = equi-join frontier ⋈ pages on url     (J1; broadcast
      hint on the frontier side — the budget bounds its size)
   5. Arrow-vectorized parse: index pages -> article rows (P1, UDTF
@@ -39,17 +45,16 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ptt_spider_go_spark.config import CrawlConfig
 from ptt_spider_go_spark.errors import quarantine_from_fetch_log
-from ptt_spider_go_spark.functions.columns import final_title, url_host
+from ptt_spider_go_spark.functions.columns import final_title
 from ptt_spider_go_spark.functions.udfs import (
     PARSED_ALL_SCHEMA,
     make_parse_page_kernel,
 )
-from ptt_spider_go_spark.operators.blocklist import blocklist_filter
 from ptt_spider_go_spark.operators.collision import with_unique_dir
 from ptt_spider_go_spark.operators.dedup import (
     BloomShardSet,
@@ -59,8 +64,9 @@ from ptt_spider_go_spark.operators.dedup import (
 from ptt_spider_go_spark.operators.politeness import (
     aimd_budgets,
     budget_gate,
-    robots_allowed,
     robots_host_rules,
+    robots_verdict,
+    with_host_policy,
     with_trap_flags,
 )
 from ptt_spider_go_spark.operators.progress import (
@@ -102,6 +108,16 @@ class CrawlResult:
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
+
+
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """`df` localCheckpointed, and its row count, observed on the
+    checkpoint job itself rather than counted by a job of its own. An
+    Observation serves one action, so each call makes its own."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True)
+    return out, obs.get["n"]
 
 
 @contextmanager
@@ -284,16 +300,15 @@ def run_crawl(
             F.col("kind_rank").asc(), F.col("page_no").desc(), F.col("pos").asc()
         )
         with _timed("init.seed_frontier", timings):
-            seed = frontier = (
+            seed, n_seen_est = _checkpoint_counted(
                 frontier.withColumn("_r", F.row_number().over(seed_w))
                 .filter(F.col("_r") == 1)
                 .select(FRONTIER_COLS)
-                .localCheckpoint(eager=True)
             )
+        frontier = seed
         seen = frontier.select("url")
         with _timed("init.bloom_seed", timings):
             blooms.add_df(seen)  # bloom must stay a superset of seen
-        n_seen_est = frontier.count()  # checkpointed -> cheap count
 
     pages_fetch = pages.select("url", "warc_ts", "html", "text")
     # the robots rules grouped once into per-host arrays: every
@@ -311,10 +326,8 @@ def run_crawl(
         # grows superlinearly; every frame the loop carries (frontier,
         # ledger, parsed rows, fresh) is localCheckpointed once.
         with _timed(f"step{step}.frontier_ckpt", timings):
-            frontier = frontier.select(FRONTIER_COLS).localCheckpoint(eager=True)
-
-        with _timed(f"step{step}.is_empty", timings):
-            n_frontier = frontier.count()  # checkpointed -> cheap count
+            frontier, n_frontier = _checkpoint_counted(
+                frontier.select(FRONTIER_COLS))
         if n_frontier == 0:
             break
 
@@ -336,16 +349,18 @@ def run_crawl(
             diverted = F.when(F.col("is_trap"), F.lit("trapped"))
             reason = F.when(F.col("is_trap"), F.col("trap_reason"))
 
+        # The per-host policy frame: each frontier host's blocklist
+        # verdict, robots rule array (built before the loop) and budget
+        # (override or AIMD), broadcast-joined to the frontier once.
+        # Steps 0b-2 are projections over its columns.
+        gated = with_host_policy(gated, host_rules, blocklist, cur_budgets)
+
         # 0b. domain-blocklist gate (opt-in, same flag-and-divert
         # contract as the trap gate): registrable-domain suffix match
         # per DISTINCT host against the broadcast pattern list
         # (operators/blocklist.py); blocked rows land in the `blocked`
         # result table with their winning pattern, never silently drop.
         if blocklist is not None:
-            gated = blocklist_filter(
-                gated.withColumn("_bhost", url_host(F.col("url"))),
-                blocklist, host_col="_bhost",
-            )
             diverted = F.coalesce(
                 diverted, F.when(F.col("blocked"), F.lit("blocked")))
             reason = F.coalesce(
@@ -353,16 +368,14 @@ def run_crawl(
         passing = diverted.isNull()
 
         # 1. robots + 2. politeness budget, over the rows no gate above
-        # diverted; a robots-disallowed row leaves the ledger. The
-        # robots verdict is one broadcast join against the per-host
-        # rule arrays built before the loop, and one projection.
+        # diverted; a robots-disallowed row leaves the ledger. Hosts
+        # without a budget row take the configured budget.
         if host_rules is not None:
-            gated = robots_allowed(gated, host_rules).filter(
-                ~passing | F.col("allowed"))
-        gated = budget_gate(
-            gated, cfg.host_budget_per_superstep, cfg.host_salt,
-            host_budgets=cur_budgets, eligible=passing,
-        )
+            gated = robots_verdict(gated).filter(~passing | F.col("allowed"))
+        budget = F.lit(cfg.host_budget_per_superstep)
+        if cur_budgets is not None:
+            budget = F.coalesce(F.col("host_budget"), budget)
+        gated = budget_gate(gated, budget, cfg.host_salt, eligible=passing)
 
         # 3. retry ledger over simulated statuses, for admitted rows
         # only: deferred rows keep their attempt and backoff
@@ -397,7 +410,7 @@ def run_crawl(
         # row broadcast costs ~6 s at any core count, turning a 0.84-
         # efficient parse stage into 0.70). A big frontier takes the
         # shuffle join, which scales with cores. The decision reuses the
-        # frontier row count the empty-frontier probe above took.
+        # frontier row count observed on its checkpoint job.
         probe = ledger.filter(F.col("outcome") == "ok").select(
             [c for c in FRONTIER_COLS if c != "warc_ts"]
         )
@@ -444,7 +457,7 @@ def run_crawl(
         # 6. dedup new candidates: within-batch first (deterministic
         # winner by priority) then against the global seen set. fresh is
         # used four times below (next frontier, seen union, bloom add,
-        # commit) -> materialize it once.
+        # commit) -> materialize it once, observing its row count.
         w = Window.partitionBy("url").orderBy(
             F.col("page_no").desc(), F.col("pos").asc()
         )
@@ -454,11 +467,10 @@ def run_crawl(
             .drop("_r")
         )
         with _timed(f"step{step}.dedup_fresh", timings):
-            fresh = (
+            fresh, n_fresh = _checkpoint_counted(
                 dedup_against_seen(candidates, seen, blooms,
                                    _cuckoo_for_step(seen))
                 .select(FRONTIER_COLS)
-                .localCheckpoint(eager=True)
             )
 
         # AIMD control loop (opt-in): the budgets gating superstep k+1
@@ -466,7 +478,7 @@ def run_crawl(
         # tiny groupBy(host) over the log, localCheckpointed (the
         # budget table is a host-level dimension; materializing it
         # keeps the loop from compounding plan lineage into the
-        # broadcast side of every later budget_gate).
+        # broadcast side of every later host-policy frame).
         if aimd:
             prev_b = (
                 cur_budgets if cur_budgets is not None
@@ -498,7 +510,7 @@ def run_crawl(
             blooms.add_df(new_seen)
             if cuckoo_active:
                 cuckoos.add_df(new_seen)  # incremental once engaged
-            n_seen_est += fresh.count()  # checkpointed -> cheap count
+        n_seen_est += n_fresh
 
         # 8. append-only commit (like Iceberg appends) of the frames
         # this step already materialized: each write is one job over a

@@ -97,12 +97,15 @@ def test_authority_budgets_hand_case_and_exact_sum(spark):
 
 
 def test_authority_budgets_compose_with_budget_gate(spark):
-    """The allocator output IS budget_gate's host_budgets override:
-    per-host admissions never exceed the allocated budget and deferred
-    rows complement exactly."""
+    """The allocator output is a per-host budget table budget_gate
+    admits under: per-host admissions never exceed the allocated budget
+    and deferred rows complement exactly."""
     from pyspark.sql import functions as F
 
-    from ptt_spider_go_spark.operators.politeness import budget_gate
+    from ptt_spider_go_spark.operators.politeness import (
+        budget_gate,
+        with_host_policy,
+    )
 
     urls = [
         (f"https://{h}/p{i}", 1, i, 1700000000 + i)
@@ -119,7 +122,8 @@ def test_authority_budgets_compose_with_budget_gate(spark):
     budgets = linkrank.authority_budgets(ranks, 40)
     bmap = {r["host"]: r["budget"] for r in budgets.collect()}
     assert bmap == {"big.example": 30, "small.example": 10}
-    g = budget_gate(frontier, 0, salt=4, host_budgets=budgets)
+    g = budget_gate(with_host_policy(frontier, host_budgets=budgets),
+                    F.coalesce(F.col("host_budget"), F.lit(0)), salt=4)
     admitted, deferred = g.filter("admitted"), g.filter("NOT admitted")
     adm = {
         r["h"]: r["n"]
@@ -163,14 +167,15 @@ def test_aimd_budgets_four_rungs(spark):
 
 
 def test_aimd_budgets_feed_budget_gate(spark):
-    """The AIMD output is budget_gate's host_budgets override — the
-    control loop closes: congested hosts admit half as much next
-    superstep."""
+    """The AIMD output is the per-host budget table budget_gate admits
+    under — the control loop closes: congested hosts admit half as much
+    next superstep."""
     from pyspark.sql import functions as F
 
     from ptt_spider_go_spark.operators.politeness import (
         aimd_budgets,
         budget_gate,
+        with_host_policy,
     )
 
     prev = spark.createDataFrame(
@@ -186,8 +191,10 @@ def test_aimd_budgets_feed_budget_gate(spark):
          for h in ("hot.example", "cool.example") for i in range(20)],
         "url string, kind_rank int, page_no int, ts long",
     ).withColumn("warc_ts", F.timestamp_seconds(F.col("ts"))).drop("ts")
-    admitted = budget_gate(frontier, 0, salt=2,
-                           host_budgets=budgets).filter("admitted")
+    admitted = budget_gate(
+        with_host_policy(frontier, host_budgets=budgets),
+        F.coalesce(F.col("host_budget"), F.lit(0)), salt=2,
+    ).filter("admitted")
     adm = {r["h"]: r["n"] for r in admitted.groupBy(
         F.expr("parse_url(url, 'HOST')").alias("h")
     ).agg(F.count("*").alias("n")).collect()}

@@ -12,7 +12,11 @@ from ptt_spider_go_spark.operators.dedup import (
     CuckooShardSet,
     dedup_against_seen,
 )
-from ptt_spider_go_spark.operators.politeness import apply_robots, budget_gate
+from ptt_spider_go_spark.operators.politeness import (
+    apply_robots,
+    budget_gate,
+    with_host_policy,
+)
 from ptt_spider_go_spark.operators.retrysim import apply_fetch_status
 
 FRONTIER_SCHEMA = (
@@ -62,7 +66,11 @@ def test_budget_gate_multiple_hosts_independent(spark):
 def test_budget_gate_per_host_overrides(spark):
     """Per-host budget overrides (robots Crawl-delay hook): overridden
     hosts admit exactly their budget across salted lanes; others use
-    the global budget."""
+    the global budget. The same holds when the budget table is the
+    whole policy frame and when it is merged with robots rule arrays
+    over the rows' distinct hosts."""
+    from ptt_spider_go_spark.operators.politeness import robots_host_rules
+
     # 100 urls/host so every salted lane holds >= its cap (lane splits
     # admit exactly the budget only when lanes aren't starved — same
     # precondition test_budget_gate_exact_host_total documents)
@@ -71,16 +79,22 @@ def test_budget_gate_per_host_overrides(spark):
     overrides = spark.createDataFrame(
         [("h0.test", 4), ("h1.test", 25)], "host string, budget long"
     )
-    g = budget_gate(f, host_budget=10, salt=4, host_budgets=overrides)
-    admitted, deferred = g.filter("admitted"), g.filter("NOT admitted")
-    per_host = {
-        r["h"]: r["n"]
-        for r in admitted.groupBy(
-            F.parse_url(F.col("url"), F.lit("HOST")).alias("h")
-        ).agg(F.count("*").alias("n")).collect()
-    }
-    assert per_host == {"h0.test": 4, "h1.test": 25, "h2.test": 10}
-    assert admitted.count() + deferred.count() == 300
+    rules = robots_host_rules(spark.createDataFrame(
+        [("h2.test", "/x", False)],
+        "host string, path_prefix string, allowed boolean"))
+    for host_rules in (None, rules):
+        policy = with_host_policy(f, host_rules, host_budgets=overrides)
+        g = budget_gate(policy, F.coalesce(F.col("host_budget"), F.lit(10)),
+                        salt=4)
+        admitted, deferred = g.filter("admitted"), g.filter("NOT admitted")
+        per_host = {
+            r["h"]: r["n"]
+            for r in admitted.groupBy(
+                F.parse_url(F.col("url"), F.lit("HOST")).alias("h")
+            ).agg(F.count("*").alias("n")).collect()
+        }
+        assert per_host == {"h0.test": 4, "h1.test": 25, "h2.test": 10}
+        assert admitted.count() + deferred.count() == 300
 
 
 def test_budgets_from_crawl_delays(spark):
@@ -396,6 +410,32 @@ def test_bloom_flat_bits_match_per_shard_filters(spark):
             mirror[h1 % n, bit >> 3] |= 1 << (bit & 7)
     assert blooms.shards.shape == mirror.shape
     assert blooms.shards.tobytes() == mirror.tobytes()
+
+
+def test_bloom_false_positive_rate_at_design_load():
+    """The default BloomShardSet(8), holding its design load of 8 x 2^17
+    URLs, passes never-added URLs at its configured fpp (within 2x).
+    Double hashing reaches that rate only when its two hashes are
+    independent. Computed with the module's own kernels, no Spark."""
+    import pandas as pd
+
+    from ptt_spider_go_spark.operators.dedup import (
+        _hash2,
+        _set_bits,
+        _test_bits,
+    )
+
+    fpp = 0.01
+    blooms = BloomShardSet(8, expected_per_shard=1 << 17, fpp=fpp)
+    kernel = (blooms.k, blooms.n_shards, blooms.m_bits)
+    flat = blooms.shards.reshape(-1)
+    added = pd.Series([f"https://www.ptt.cc/bbs/B/M.{i}.A.html"
+                       for i in range(blooms.n_shards << 17)])
+    _set_bits(flat, *_hash2(added), *kernel)
+    probes = pd.Series([f"https://www.ptt.cc/bbs/N/M.{i}.A.html"
+                        for i in range(100_000)])
+    rate = _test_bits(flat, *_hash2(probes), *kernel).mean()
+    assert fpp / 2 <= rate <= 2 * fpp, rate
 
 
 # --- D3 dir collision window --------------------------------------------------

@@ -1,6 +1,6 @@
-"""The superstep step ledger: one tagging projection over one budget
-rank and one fetch-status join, with outputs independent of the
-shuffle partition count."""
+"""The superstep step ledger: one tagging projection over one per-host
+policy join, one budget rank and one fetch-status join, with outputs
+independent of the shuffle partition count."""
 
 import re
 
@@ -60,11 +60,20 @@ def gated_crawl(spark):
     return run
 
 
+def _host_budgets(spark):
+    """A per-host budget override below the fixture's budget of 8."""
+    return spark.createDataFrame([("www.ptt.cc", 5)],
+                                 "host string, budget long")
+
+
 def test_step0_ledger_is_one_pass(spark, gated_crawl, monkeypatch):
-    """The executed step-0 ledger plan holds one Window, the budget's
-    (partitioned by _host, _lane), one join against fetch_events, no
-    Union of per-outcome branches, and no shuffle by url: the robots
-    verdict is a broadcast join and a projection."""
+    """The executed step-0 ledger plan, with robots rules, a blocklist
+    and host budgets, holds one Window, the budget's (partitioned by
+    _host, _lane), one join against fetch_events and no Union of
+    per-outcome branches. Per-host policy reaches the rows in one
+    broadcast join, so the only hash exchanges are the budget's and the
+    one over distinct host names: no sort-merge join, and no shuffle of
+    the frontier by url or by a blocklist host key."""
     plans = []
     cls = type(spark.range(1))
     real = cls.localCheckpoint
@@ -76,7 +85,7 @@ def test_step0_ledger_is_one_pass(spark, gated_crawl, monkeypatch):
         return out
 
     monkeypatch.setattr(cls, "localCheckpoint", spy)
-    gated_crawl(max_supersteps=1)
+    gated_crawl(max_supersteps=1, host_budgets=_host_budgets(spark))
     plan = plans[0].split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in plan
     budget_windows = re.findall(
@@ -84,7 +93,12 @@ def test_step0_ledger_is_one_pass(spark, gated_crawl, monkeypatch):
     events_joins = re.findall(r"Join \[url#\d+, .*\], \[_url#\d+, _att#", plan)
     assert len(budget_windows) == 1, plan
     assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
-    assert not re.search(r"Exchange hashpartitioning\(url#", plan), plan
+    assert not re.search(r"Exchange hashpartitioning\((url|_bhost)#", plan)
+    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    keys = sorted(re.sub(r"#\d+L?", "", e).rsplit(", ", 1)[0]
+                  for e in exchanges)
+    assert keys == ["_host", "_host, _lane"], plan
+    assert "SortMergeJoin" not in plan, plan
     assert len(events_joins) == 1, plan
     assert "Union" not in plan, plan
 
@@ -96,16 +110,21 @@ def _tables(res):
     }
 
 
-def test_outputs_independent_of_shuffle_partitions(spark, gated_crawl):
+@pytest.mark.parametrize("budgets", [None, _host_budgets],
+                         ids=["config_budget", "host_budgets"])
+def test_outputs_independent_of_shuffle_partitions(spark, gated_crawl,
+                                                   budgets):
     """Every CrawlResult table, trapped and blocked included, is
-    identical at 1 and 7 shuffle partitions."""
+    identical at 1 and 7 shuffle partitions, under the configured
+    budget and under a per-host budget table."""
+    host_budgets = budgets(spark) if budgets else None
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     got = {}
     try:
         for n in (1, 7):
             spark.conf.set(key, str(n))
-            got[n] = _tables(gated_crawl())
+            got[n] = _tables(gated_crawl(host_budgets=host_budgets))
     finally:
         spark.conf.set(key, prev)
     assert got[1]["trapped"] and got[1]["blocked"]
