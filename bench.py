@@ -432,8 +432,7 @@ def main():
     crawl_phases: dict = {}
     for _ in range(2):  # best-of-2 (same window-noise rationale)
         t0 = time.time()
-        res = run_crawl(spark, pages, cfg, boards=list(scale["boards"]),
-                        verify_text=False)
+        res = run_crawl(spark, pages, cfg, boards=list(scale["boards"]))
         _force(res.articles)
         _force(res.markdown_docs)
         fetched = res.fetch_log.count()
@@ -465,7 +464,7 @@ def main():
         shutil.rmtree(ck_dir, ignore_errors=True)
         t0 = time.time()
         res_ck = run_crawl(spark, pages, cfg, boards=list(scale["boards"]),
-                           verify_text=False, checkpoint_dir=ck_dir)
+                           checkpoint_dir=ck_dir)
         _force(res_ck.articles)
         _force(res_ck.markdown_docs)
         fetched_ck = res_ck.fetch_log.count()
@@ -502,7 +501,7 @@ def main():
     for _ in range(2):  # best-of-2, same as the workers=10 side
         t0 = time.time()
         res_small = run_crawl(spark, pages, cfg_small,
-                              boards=list(scale["boards"]), verify_text=False)
+                              boards=list(scale["boards"]))
         _force(res_small.articles)
         _force(res_small.markdown_docs)
         fetched_small = res_small.fetch_log.count()

@@ -30,8 +30,6 @@ class CrawlConfig:
     board: str = DEFAULT_BOARD
     pages: int = DEFAULT_PAGES
     push_rate: int = DEFAULT_PUSH_RATE
-    # Parallelism (config.go:82-83 workers/parserCount -> partitions).
-    parallelism: int = 32
     # Politeness: the reference sleeps U[min_delay_ms, max_delay_ms) per
     # request per worker (config.go:89-92). With W workers over a superstep
     # window of `superstep_ms`, the per-host budget is
@@ -67,7 +65,6 @@ class CrawlConfig:
             )
         # Clamp pass mirroring config.go:156-171.
         self.pages = max(1, self.pages)
-        self.parallelism = max(1, self.parallelism)
         self.workers = max(1, self.workers)
         if self.max_delay_ms <= self.min_delay_ms:
             self.max_delay_ms = self.min_delay_ms
@@ -215,16 +212,16 @@ def load_reference_yaml(path: str | None) -> dict:
 
 def reference_to_crawl_config(ref: dict, **overrides) -> CrawlConfig:
     """Map the reference's nested knobs onto the engine's CrawlConfig:
-    workers -> workers (politeness-budget numerator), parserCount ->
-    parallelism (parse-stage partitions), delays -> the politeness delay
-    envelope (SURVEY T1: budget = workers * superstep / avg_delay).
-    Channel buffer sizes have no batch-engine analogue (materialization
-    boundaries replace bounded channels, SURVEY T4) but are preserved in
-    the dict for callers that need them."""
+    workers -> workers (politeness-budget numerator), delays -> the
+    politeness delay envelope (SURVEY T1: budget = workers * superstep /
+    avg_delay). parserCount and the channel buffer sizes have no
+    batch-engine analogue (Spark sizes the parse stage by its
+    partitions; materialization boundaries replace bounded channels,
+    SURVEY T4) but are preserved, clamped, in the dict for callers that
+    need them."""
     c = ref["crawler"]
     kwargs = dict(
         workers=c["workers"],
-        parallelism=c["parserCount"],
         min_delay_ms=c["delays"]["minMs"],
         max_delay_ms=c["delays"]["maxMs"],
     )

@@ -3127,7 +3127,7 @@ def _crawl_result(spark, scale: str = "small"):
     pages = pages_df(spark, boards=("Beauty",), pages_per_board=n_pages)
     cfg = CrawlConfig(board="Beauty", pages=3, push_rate=10, host_salt=4,
                       max_supersteps=6)
-    res = run_crawl(spark, pages, cfg, verify_text=False)
+    res = run_crawl(spark, pages, cfg)
     _CRAWL_CACHE[key] = (spark, res)
     return res
 

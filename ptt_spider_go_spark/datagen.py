@@ -9,8 +9,9 @@ Every byte is a pure function of (board, page_no, slot, seed) via
 blake2b — no wall clock, no shared RNG — so generation is identical
 whether it runs driver-side (pandas, tests) or distributed
 (spark.range + mapInPandas, bench/scale). The ``text`` column is
-produced by the same ``extract_text`` the engine re-runs, which is what
-makes the byte-identical invariant checkable.
+produced by ``extract_text``, the text the engine reads off the DOM of
+each article page it parses, which is what makes the byte-identical
+invariant checkable.
 
 Covered cases (each pinned by a reference behavior, FIXTURES.md §1):
 push markers 爆/numeric/X<k>/X/empty, deleted articles, 公告 rows,
@@ -219,8 +220,9 @@ def _spec_to_row(kind: str, board: str, page_no: int, slot: int, seed: int,
         "warc_ts": _warc_ts(url, seed),
         "html": html.encode("utf-8"),
         # The text golden doubles generation cost; benches that don't
-        # check the byte-identical invariant can skip it.
-        "text": extract_text(html) if with_text else "",
+        # check the byte-identical invariant skip it, and a NULL text
+        # leaves the crawl's text_match NULL.
+        "text": extract_text(html) if with_text else None,
         "lang": _lang(url, seed),
     }
 

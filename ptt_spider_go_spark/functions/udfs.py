@@ -2,12 +2,12 @@
 
 Two shapes:
 
-- ``parse_articles_map``: a ``mapInPandas`` stage (1 board-index page ->
-  N article rows, the UDTF shape of P1) — avoids an array<struct> +
-  posexplode round-trip and keeps the emitted ``pos`` column exact.
-- ``make_parse_page_kernel``: one ``mapInPandas`` pass over fetched
+- ``make_parse_page_kernel``: one ``mapInArrow`` pass over fetched
   pages of both kinds — P1 article rows, P2 article content and the P4
-  byte-identical text check together.
+  byte-identical text check together. Each page is parsed once: an
+  article page's one DOM yields its title, images and page text. Only
+  ``url``, ``kind``, ``html`` and ``text`` become Python values; every
+  other output column is an Arrow ``take`` of its input column.
 - a scalar ``pandas_udf`` for P3 (max page).
 
 All per-document work happens batch-at-a-time over Arrow; there is no
@@ -20,63 +20,17 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType
 
 from ptt_spider_go_spark.htmlparse.files import image_file_names, unique_in_order
 from ptt_spider_go_spark.htmlparse.ptt import (
-    extract_text,
-    parse_article_content,
+    parse_article_page,
     parse_articles,
     parse_max_page,
 )
-
-# Output schema of the P1 mapInPandas stage. Input must carry at least
-# (url, html); extra grouping columns (board, page_no, warc_ts) pass through.
-ARTICLES_SCHEMA = StructType(
-    [
-        StructField("board", StringType()),
-        StructField("page_no", IntegerType()),
-        StructField("src_url", StringType()),
-        StructField("pos", IntegerType()),
-        StructField("title", StringType()),
-        StructField("url", StringType()),
-        StructField("author", StringType()),
-        StructField("push_rate", IntegerType()),
-    ]
-)
-
-
-def parse_articles_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: board-index pages -> article rows (P1).
-
-    Expects columns (board, page_no, url, html); emits ARTICLES_SCHEMA
-    rows with `pos` = document order among emitted rows (SURVEY O2).
-    """
-    for pdf in batches:
-        out = {k: [] for k in
-               ("board", "page_no", "src_url", "pos", "title", "url", "author", "push_rate")}
-        for board, page_no, src_url, html in zip(
-            pdf["board"], pdf["page_no"], pdf["url"], pdf["html"]
-        ):
-            if html is None:
-                continue  # F6: missing page = non-200, dropped
-            for row in parse_articles(html):
-                out["board"].append(board)
-                out["page_no"].append(page_no)
-                out["src_url"].append(src_url)
-                out["pos"].append(row["pos"])
-                out["title"].append(row["title"])
-                out["url"].append(row["url"])
-                out["author"].append(row["author"])
-                out["push_rate"].append(row["push_rate"])
-        yield pd.DataFrame(out)
-
 
 # Unified one-pass parse output: the superstep loop scans the fetched
 # pages exactly once and derives every downstream table (article rows,
@@ -92,14 +46,25 @@ PARSED_ALL_SCHEMA = (
     "text_match boolean"
 )
 
+#: the kernel's input columns: a fetched frontier row with its page
+KERNEL_INPUT_COLS = (
+    "url", "kind", "board", "page_no", "pos", "title", "author", "push_rate",
+    "attempt", "backoff_ms", "warc_ts", "html", "text",
+)
+
 _PARSED_COLS = [f.strip().split(" ")[0] for f in PARSED_ALL_SCHEMA.split(",")]
+_STR = pa.string()
+_STRS = pa.list_(pa.string())
 
 
-def make_parse_page_kernel(verify_text: bool, push_threshold: int | None = None):
-    """mapInPandas kernel over fetched pages of BOTH kinds (index +
-    article). One Arrow pass emits P1 article rows, P2 content rows, and
-    per-page fetch-log rows together, so the (huge) pages join is
-    scanned and parsed exactly once per superstep.
+def make_parse_page_kernel(push_threshold: int | None = None):
+    """mapInArrow kernel over fetched pages (KERNEL_INPUT_COLS) of BOTH
+    kinds (index + article). One Arrow pass emits P1 article rows, P2
+    content rows and per-page fetch-log rows together, so the (huge)
+    pages join is scanned and parsed exactly once per superstep.
+
+    A content row's `text_match` is "page text == `text`" when the
+    row's `text` is not NULL, and NULL otherwise.
 
     `push_threshold`: apply the F1 producer filter (crawler.go:413-422)
     in-kernel — the reference's producer also drops below-threshold
@@ -107,72 +72,70 @@ def make_parse_page_kernel(verify_text: bool, push_threshold: int | None = None)
     avoids shipping the (majority) rejected rows back through Arrow.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # Hot path: direct per-column appends (a kwargs-dict emit
-            # costs ~17 dict lookups per row across millions of rows).
-            out: dict[str, list] = {c: [] for c in _PARSED_COLS}
-            (o_rk, o_url, o_kind, o_board, o_page, o_pos, o_title, o_author,
-             o_push, o_att, o_back, o_src, o_ts, o_pt, o_imgs, o_fn, o_tm) = (
-                out[c] for c in _PARSED_COLS)
-
-            def emit_row(rk, url, kind, board, page_no, pos, title, author,
-                         push_rate, attempt, backoff_ms, src_url, warc_ts,
-                         parsed_title, img_urls, file_names, text_match):
-                o_rk.append(rk); o_url.append(url); o_kind.append(kind)
-                o_board.append(board); o_page.append(page_no); o_pos.append(pos)
-                o_title.append(title); o_author.append(author)
-                o_push.append(push_rate); o_att.append(attempt)
-                o_back.append(backoff_ms); o_src.append(src_url)
-                o_ts.append(warc_ts); o_pt.append(parsed_title)
-                o_imgs.append(img_urls); o_fn.append(file_names)
-                o_tm.append(text_match)
-
-            has_text = "text" in pdf.columns
-            texts = pdf["text"].tolist() if has_text else [None] * len(pdf)
-            rows = zip(
-                pdf["url"].tolist(), pdf["kind"].tolist(), pdf["board"].tolist(),
-                pdf["page_no"].tolist(), pdf["pos"].tolist(),
-                pdf["title"].tolist(), pdf["author"].tolist(),
-                pdf["push_rate"].tolist(), pdf["attempt"].tolist(),
-                pdf["backoff_ms"].tolist(), pdf["warc_ts"].tolist(),
-                pdf["html"].tolist(), texts,
-            )
-            for (url, kind, board, page_no, pos, title, author, push_rate,
-                 attempt, backoff_ms, warc_ts, html, text) in rows:
-                emit_row("fetch", url, kind, board, page_no, None, None, None,
-                         None, attempt, backoff_ms, None, None, None, None,
-                         None, None)
-                if html is None:
-                    continue
-                if kind == "index":
-                    for a in parse_articles(html):
-                        if push_threshold is not None and a["push_rate"] < push_threshold:
-                            continue  # F1, crawler.go:414
-                        emit_row("art", a["url"], "article", board, page_no,
-                                 a["pos"], a["title"], a["author"],
-                                 a["push_rate"], None, None, url, warc_ts,
-                                 None, None, None, None)
-                else:
-                    ptitle, imgs = parse_article_content(html)
-                    imgs = unique_in_order(imgs)
-                    tm = None
-                    if verify_text and has_text:
-                        tm = extract_text(html) == text
-                    emit_row("content", url, "article", board, page_no, pos,
-                             title, author, push_rate, None, None, None, None,
-                             ptitle, imgs, image_file_names(imgs), tm)
-            opdf = pd.DataFrame(out)
-            # arrow needs concrete dtypes even for all-None columns
-            opdf["page_no"] = opdf["page_no"].astype("Int32")
-            opdf["pos"] = opdf["pos"].astype("Int32")
-            opdf["push_rate"] = opdf["push_rate"].astype("Int32")
-            opdf["attempt"] = opdf["attempt"].astype("Int32")
-            opdf["backoff_ms"] = opdf["backoff_ms"].astype("Int64")
-            opdf["text_match"] = opdf["text_match"].astype("boolean")
-            yield opdf
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield _parse_batch(b, push_threshold)
 
     return kernel
+
+
+def _parse_batch(b: pa.RecordBatch, push_threshold: int | None) -> pa.RecordBatch:
+    # one tuple per output row: (source row, row_kind, url, kind, then the
+    # parsed pos, title, author, push_rate, parsed_title, img_urls,
+    # file_names, text_match)
+    rows: list[tuple] = []
+    for i, (url, kind, html, text) in enumerate(zip(
+            *(b.column(c).to_pylist() for c in ("url", "kind", "html", "text")))):
+        rows.append((i, "fetch", url, kind) + (None,) * 8)
+        if html is None:
+            continue
+        if kind == "index":
+            for a in parse_articles(html):
+                if push_threshold is not None and a["push_rate"] < push_threshold:
+                    continue  # F1, crawler.go:414
+                rows.append((i, "art", a["url"], "article", a["pos"],
+                             a["title"], a["author"], a["push_rate"],
+                             None, None, None, None))
+        else:
+            ptitle, imgs, page_text = parse_article_page(html)
+            imgs = unique_in_order(imgs)
+            rows.append((i, "content", url, "article", None, None, None, None,
+                         ptitle, imgs, image_file_names(imgs),
+                         None if text is None else page_text == text))
+    (src, rk, urls, kinds, pos, title, author, push, ptitle, imgs, fnames,
+     tmatch) = zip(*rows) if rows else [()] * 12
+
+    def rows_of(only: str | None = None) -> pa.Array:
+        """Each output row's source row; NULL on every row whose
+        row_kind is not `only`, when given."""
+        return pa.array(src if only is None else [
+            s if k == only else None for s, k in zip(src, rk)], pa.int64())
+
+    every, fetch, art, content = (
+        rows_of(), rows_of("fetch"), rows_of("art"), rows_of("content"))
+    col = b.column
+
+    def frontier_or_parsed(name: str, parsed: tuple) -> pa.Array:
+        """A content row keeps its frontier value, an art row its parsed
+        one; fetch rows are NULL."""
+        got = col(name).take(content)
+        return pc.coalesce(got, pa.array(parsed, got.type))
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(rk, _STR), pa.array(urls, _STR), pa.array(kinds, _STR),
+            col("board").take(every), col("page_no").take(every),
+            frontier_or_parsed("pos", pos),
+            frontier_or_parsed("title", title),
+            frontier_or_parsed("author", author),
+            frontier_or_parsed("push_rate", push),
+            col("attempt").take(fetch), col("backoff_ms").take(fetch),
+            col("url").take(art), col("warc_ts").take(art),
+            pa.array(ptitle, _STR), pa.array(imgs, _STRS),
+            pa.array(fnames, _STRS), pa.array(tmatch, pa.bool_()),
+        ],
+        names=_PARSED_COLS,
+    )
 
 
 @F.pandas_udf(IntegerType())

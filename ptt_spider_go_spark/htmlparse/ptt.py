@@ -6,13 +6,14 @@ fixture expectations):
 
 - ``parse_articles``        <- /root/reference/ptt/parser_impl.go:24-71
 - ``parse_article_content`` <- /root/reference/ptt/parser_impl.go:74-113
+- ``parse_article_page``    <- the same, plus ``doc.Text()`` of the same DOM
 - ``parse_max_page``        <- /root/reference/ptt/parser_impl.go:116-139
 - ``decode_push_rate``      <- /root/reference/ptt/parser_impl.go:46-60
 - ``extract_text``          <- goquery ``doc.Text()`` (net/html text nodes)
 
 These are plain functions over one HTML document; the Spark layer calls them
-from Arrow-batched pandas UDFs / ``mapInPandas`` (ptt_spider_go_spark.functions.udfs)
-so there is no per-row Python at the Spark API level.
+from Arrow-batched passes (ptt_spider_go_spark.functions.udfs), so there is no
+per-row Python at the Spark API level.
 """
 
 from __future__ import annotations
@@ -163,7 +164,18 @@ def parse_article_content(html: str | bytes) -> tuple[str, list[str]]:
     ``normalize_img_href`` (:92-110). Duplicates are NOT removed here —
     the crawler dedups later (crawler.go:460).
     """
+    return _article_content(parse_html(html))
+
+
+def parse_article_page(html: str | bytes) -> tuple[str, list[str], str]:
+    """Article page -> (title, image URLs, page text) from ONE parse: the
+    ``parse_article_content`` pair plus ``extract_text``'s text, read off
+    the same DOM (the crawl kernel's one parse per article page)."""
     doc = parse_html(html)
+    return (*_article_content(doc), doc.text())
+
+
+def _article_content(doc: Node) -> tuple[str, list[str]]:
     title = ""
     for tag_el in doc.find(".article-meta-tag"):
         if trim_space(tag_el.text()) == "標題":
@@ -206,9 +218,9 @@ def parse_max_page(html: str | bytes) -> int | None:
 
 def extract_text(html: str | bytes) -> str:
     """goquery ``doc.Text()``: concatenation of every text node, document
-    order, entities decoded. This is the engine's page-text extraction,
-    and the datagen writes the ``pages.text`` column with this same
-    function — the byte-identical invariant (BASELINE.json input_hint)
-    is then checked by re-extracting in the engine and comparing bytes.
+    order, entities decoded. The datagen writes the ``pages.text``
+    column with this function; the crawl kernel reads the same text off
+    the DOM its content parse built (``parse_article_page``) and compares
+    bytes — the byte-identical invariant (BASELINE.json input_hint).
     """
     return parse_html(html).text()

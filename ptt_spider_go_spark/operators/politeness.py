@@ -120,10 +120,11 @@ def robots_verdict(rows: DataFrame) -> DataFrame:
     path and the best rule are let-bound, so a filter on `allowed` that
     Catalyst pushes into the join's projection still matches each row's
     path against its rules once."""
-    qs = F.try_parse_url(F.col("url"), F.lit("QUERY"))
-    path = F.concat(
+    # concat_ws skips a NULL query and keeps an empty one ('/a?')
+    path = F.concat_ws(
+        "?",
         F.coalesce(F.try_parse_url(F.col("url"), F.lit("PATH")), F.lit("/")),
-        F.when(qs.isNotNull(), F.concat(F.lit("?"), qs)).otherwise(F.lit("")),
+        F.try_parse_url(F.col("url"), F.lit("QUERY")),
     )
     verdict = _let(path, lambda p: _let(
         F.array_max(F.filter("_rules", lambda r: F.regexp_like(p, r["rx"]))),
@@ -269,19 +270,25 @@ def with_trap_flags(df: DataFrame,
     """Append (path_depth, dup_segs, n_params, url_len, is_trap,
     trap_reason) to any url-bearing frame — the column-only form the
     crawl loop composes with (no join, no shuffle; the flags are a
-    stateless projection over the frontier it already holds)."""
+    stateless projection over the frontier it already holds). The path
+    segments and the query are let-bound, so each is extracted once per
+    row."""
     path = F.regexp_extract(F.col("url"), "^[a-z]+://[^/?#]+([^?#]*)", 1)
     query = F.regexp_extract(F.col("url"), "\\?([^#]*)", 1)
-    segs = F.filter(F.split(path, "/"), lambda x: x != "")
-    n_params = F.when(query == "", F.lit(0)).otherwise(
-        F.size(F.split(query, "&"))
-    )
-    x = df.withColumns({
-        "path_depth": F.size(segs),
-        "dup_segs": F.size(segs) - F.size(F.array_distinct(segs)),
-        "n_params": n_params,
+    flags = _let(F.filter(F.split(path, "/"), lambda x: x != ""), lambda segs:
+                 _let(query, lambda q: F.struct(
+                     F.size(segs).alias("path_depth"),
+                     (F.size(segs) - F.size(F.array_distinct(segs)))
+                     .alias("dup_segs"),
+                     F.when(q == "", F.lit(0))
+                     .otherwise(F.size(F.split(q, "&"))).alias("n_params"),
+                 )))
+    x = df.withColumn("_trap", flags).withColumns({
+        "path_depth": F.col("_trap.path_depth"),
+        "dup_segs": F.col("_trap.dup_segs"),
+        "n_params": F.col("_trap.n_params"),
         "url_len": F.length(F.col("url")),
-    })
+    }).drop("_trap")
     reason = (
         F.when(F.col("path_depth") > max_depth, "path_depth")
         .when(F.col("dup_segs") >= dup_segments, "repeated_segments")

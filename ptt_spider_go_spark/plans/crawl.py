@@ -19,8 +19,9 @@ frontier (BASELINE.json north_star). Each superstep:
      rank and one fetch-status join per superstep
   4. "fetch" = equi-join frontier ⋈ pages on url     (J1; broadcast
      hint on the frontier side — the budget bounds its size)
-  5. Arrow-vectorized parse: index pages -> article rows (P1, UDTF
-     shape via mapInPandas), article pages -> content (P2 + D1 + D2)
+  5. Arrow-vectorized parse in one mapInArrow pass, one parse per
+     page: index pages -> article rows (P1, UDTF shape), article pages
+     -> content (P2 + D1 + D2) and the byte-identical text check (P4)
   6. push-rate filter on candidates (F1), global URL-seen dedup of
      new candidates (D4: Bloom shards + exact anti-join verify)
   7. next frontier = fresh candidates ∪ deferred ∪ retries
@@ -52,6 +53,7 @@ from ptt_spider_go_spark.config import CrawlConfig
 from ptt_spider_go_spark.errors import quarantine_from_fetch_log
 from ptt_spider_go_spark.functions.columns import final_title
 from ptt_spider_go_spark.functions.udfs import (
+    KERNEL_INPUT_COLS,
     PARSED_ALL_SCHEMA,
     make_parse_page_kernel,
 )
@@ -163,7 +165,6 @@ def run_crawl(
     host_budgets: DataFrame | None = None,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    verify_text: bool = True,
     broadcast_frontier: bool | str = "auto",
     broadcast_max_rows: int = 200_000,
     probe_strategy: str = "html",
@@ -184,6 +185,11 @@ def run_crawl(
     `?query`; the longest matching pattern decides and Allow wins ties
     (operators.politeness.robots_allowed). A disallowed row leaves the
     crawl; a URL no rule matches is allowed.
+
+    Every fetched article page's text is checked against its `text`
+    column: `contents.text_match` is True when the page text parsed in
+    the crawl equals it byte for byte, False when it differs and NULL
+    when `text` is NULL.
 
     Two opt-in loop stages (default off, so the pinned reference-parity
     outputs are untouched — the trap_filter pattern; VERDICT r04
@@ -395,7 +401,7 @@ def run_crawl(
 
         # 4+5. fetch ⋈ parse in ONE pass over the pages table: the join
         # streams the (huge) pages scan against the frontier, and a
-        # single mapInPandas kernel parses BOTH page kinds, also
+        # single mapInArrow kernel parses BOTH page kinds, also
         # emitting the per-page fetch-log rows. The result is
         # materialized exactly once (localCheckpoint); every downstream
         # table (articles, contents, log, next frontier) derives from
@@ -421,17 +427,10 @@ def run_crawl(
         build = F.broadcast(probe) if do_broadcast else probe
         found = pages_fetch.join(build, on="url", how="inner")
 
-        kernel_in = found.select(
-            "url", "kind", "board", "page_no", "pos", "title", "author",
-            "push_rate", "attempt", "backoff_ms", "warc_ts", "html",
-            *(["text"] if verify_text else []),
-        )
         with _timed(f"step{step}.fetch_parse", timings):
             parsed_all = (
-                kernel_in.mapInPandas(
-                    make_parse_page_kernel(verify_text, cfg.push_rate),
-                    PARSED_ALL_SCHEMA,
-                )
+                found.select(*KERNEL_INPUT_COLS).mapInArrow(
+                    make_parse_page_kernel(cfg.push_rate), PARSED_ALL_SCHEMA)
                 .withColumn("superstep", F.lit(step))
                 .localCheckpoint(eager=True)
             )

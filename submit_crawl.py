@@ -68,7 +68,6 @@ def main() -> None:
         board=args.board,
         pages=args.pages_n,
         push_rate=args.push,
-        parallelism=cores,
         host_salt=args.host_salt or cores,
         max_supersteps=args.max_supersteps,
     )
@@ -79,7 +78,6 @@ def main() -> None:
         file_urls_path=args.file_urls,
         checkpoint_dir=args.checkpoint,
         resume=args.resume,
-        verify_text=False,
     )
     outputs = {
         "articles": res.articles,

@@ -46,7 +46,7 @@ def crawl(spark):
     def run(ckpt_dir, resume=False, archive_dir=None, **cfg):
         return run_crawl(spark, pages, _cfg(**cfg), fetch_events=events,
                          checkpoint_dir=ckpt_dir, resume=resume,
-                         archive_dir=archive_dir, verify_text=False)
+                         archive_dir=archive_dir)
 
     return run
 

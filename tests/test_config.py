@@ -189,15 +189,14 @@ crawler:
 
 
 def test_reference_style_yaml_to_crawl_config(tmp_path):
-    """A verbatim reference-layout config.yaml loses no knob: delays map
-    to the politeness envelope, workers/parserCount to budget numerator
-    and parse parallelism."""
+    """A verbatim reference-layout config.yaml maps onto CrawlConfig:
+    delays to the politeness envelope, workers to the budget numerator
+    (parserCount stays, clamped, in the loaded dict only)."""
     p = tmp_path / "config.yaml"
     p.write_text(REFERENCE_STYLE_YAML)
     cfg = load_yaml(str(p))
     assert isinstance(cfg, CrawlConfig)
     assert cfg.workers == 10
-    assert cfg.parallelism == 10
     assert cfg.min_delay_ms == 500
     assert cfg.max_delay_ms == 2000
     # the delay envelope drives the per-host budget (SURVEY T1)

@@ -35,7 +35,7 @@ def result(spark, dataset):
     pages = spark.createDataFrame(dataset)
     cfg = CrawlConfig(board=BOARD, pages=PAGES, push_rate=PUSH,
                       host_salt=4, max_supersteps=6)
-    return run_crawl(spark, pages, cfg, verify_text=True)
+    return run_crawl(spark, pages, cfg)
 
 
 def test_articles_match_golden_in_order(result, golden):
@@ -183,7 +183,7 @@ def test_crawl_identical_with_cuckoo_engaged(spark, dataset, result):
     pages = spark.createDataFrame(dataset)
     cfg = CrawlConfig(board=BOARD, pages=PAGES, push_rate=PUSH,
                       host_salt=4, max_supersteps=6, cuckoo_min_seen=0)
-    res2 = run_crawl(spark, pages, cfg, verify_text=False)
+    res2 = run_crawl(spark, pages, cfg)
     key = lambda df: sorted(
         (r["url"], r["push_rate"]) for r in df.select("url", "push_rate").collect()
     )
@@ -213,7 +213,7 @@ def test_assembly_plans_the_dir_collision_window_once(spark, dataset,
     pages = spark.createDataFrame(dataset)
     cfg = CrawlConfig(board=BOARD, pages=PAGES, push_rate=PUSH,
                       host_salt=4, max_supersteps=6)
-    res = run_crawl(spark, pages, cfg, verify_text=False)
+    res = run_crawl(spark, pages, cfg)
     plans += [df._jdf.queryExecution().executedPlan().toString()
               for df in vars(res).values() if isinstance(df, DataFrame)]
     dir_windows = [

@@ -32,7 +32,7 @@ def test_crawl_resume_restores_filter_state_from_table(spark, tmp_path,
                workers=1, superstep_ms=10_000)
     d = str(tmp_path / "ck")
     cmod.run_crawl(spark, pages, CrawlConfig(max_supersteps=2, **cfg),
-                   checkpoint_dir=d, verify_text=False)
+                   checkpoint_dir=d)
     assert not os.path.exists(os.path.join(d, "filters"))
 
     def urls(step, table):
@@ -52,7 +52,7 @@ def test_crawl_resume_restores_filter_state_from_table(spark, tmp_path,
 
     monkeypatch.setattr(BloomShardSet, "add_df", spy)
     res = cmod.run_crawl(spark, pages, CrawlConfig(max_supersteps=6, **cfg),
-                         checkpoint_dir=d, resume=True, verify_text=False)
+                         checkpoint_dir=d, resume=True)
     assert res.supersteps >= 1
     # restore: exactly the seed plus the committed fresh URLs, once...
     assert calls[0] == committed_seen

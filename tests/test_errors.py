@@ -95,7 +95,7 @@ def test_crawl_result_carries_quarantine(spark):
     pages = pages_df(spark, boards=("Beauty",), pages_per_board=3)
     cfg = CrawlConfig(board="Beauty", pages=2, push_rate=10, host_salt=2,
                       max_supersteps=4)
-    res = run_crawl(spark, pages, cfg, verify_text=False)
+    res = run_crawl(spark, pages, cfg)
     q = res.quarantine.collect()
     # the synthetic board references some articles missing from pages
     assert len(q) > 0

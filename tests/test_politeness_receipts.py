@@ -70,7 +70,7 @@ def test_crawl_log_compliant_by_construction(spark):
         pages_pandas(boards=(board,), pages_per_board=3, slots_per_page=6))
     cfg = CrawlConfig(board=board, pages=3, push_rate=0, host_salt=4,
                       max_supersteps=6)
-    res = run_crawl(spark, pages, cfg, verify_text=False)
+    res = run_crawl(spark, pages, cfg)
     out = politeness_receipts(
         res.fetch_log, None,
         default_budget=cfg.host_budget_per_superstep).collect()

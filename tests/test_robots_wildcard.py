@@ -160,6 +160,7 @@ def test_verdict_matrix(spark, rules):
             "/t/x9",  # equal-length Allow/Disallow tie -> Allow
             "/q(1)/p",  # literal metachars in pattern
             "/p?sessionid=3",  # match runs over path + query
+            "/a?",  # an empty query keeps its '?', so '/a$' misses
             "/p",  # no rule matches
             "/n1",  # the matching rule has a NULL verdict
         ],
@@ -173,6 +174,7 @@ def test_verdict_matrix(spark, rules):
     assert v["/t/x9"] == (True, "/t/x*")
     assert v["/q(1)/p"] == (False, "/q(1)/")
     assert v["/p?sessionid=3"] == (False, "/*?sessionid=")
+    assert v["/a?"] == (True, None)
     assert v["/p"] == (True, None)
     assert v["/n1"] == (None, "/n")
 

@@ -94,8 +94,7 @@ def test_second_crawl_compiles_no_generated_class(spark):
 
     def crawl() -> int:
         before = _codegen_compilations(spark)
-        res = run_crawl(spark, pages, cfg, fetch_events=events,
-                        verify_text=False)
+        res = run_crawl(spark, pages, cfg, fetch_events=events)
         for df in vars(res).values():
             if isinstance(df, DataFrame):
                 df.write.format("noop").mode("overwrite").save()

@@ -55,7 +55,7 @@ def gated_crawl(spark):
                           max_supersteps=kw.pop("max_supersteps", 10))
         return run_crawl(spark, pages, cfg, fetch_events=events,
                          robots=robots, trap_filter=True,
-                         blocklist=blocklist, verify_text=False, **kw)
+                         blocklist=blocklist, **kw)
 
     return run
 
@@ -73,7 +73,9 @@ def test_step0_ledger_is_one_pass(spark, gated_crawl, monkeypatch):
     per-outcome branches. Per-host policy reaches the rows in one
     broadcast join, so the only hash exchanges are the budget's and the
     one over distinct host names: no sort-merge join, and no shuffle of
-    the frontier by url or by a blocklist host key."""
+    the frontier by url or by a blocklist host key. The trap gate splits
+    each URL's path and extracts its query once, and the robots verdict
+    parses its query once."""
     plans = []
     cls = type(spark.range(1))
     real = cls.localCheckpoint
@@ -101,6 +103,9 @@ def test_step0_ledger_is_one_pass(spark, gated_crawl, monkeypatch):
     assert "SortMergeJoin" not in plan, plan
     assert len(events_joins) == 1, plan
     assert "Union" not in plan, plan
+    assert len(re.findall(r"split\(regexp_extract\(url#\d+, ", plan)) == 1, plan
+    assert len(re.findall(r"regexp_extract\(url#\d+, \\\?", plan)) == 1, plan
+    assert len(re.findall(r"evaluate\(url#\d+, QUERY\)", plan)) == 1, plan
 
 
 def _tables(res):
