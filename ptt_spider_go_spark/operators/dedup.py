@@ -14,15 +14,19 @@ the *newly added* URLs each superstep — O(new), not O(seen)) and probed
 Arrow-vectorized against one broadcast copy (mapInPandas, SipHash via
 pandas.util.hash_array).
 
-Filter state lives on the driver as (n_shards, bytes) arrays; each
-add_df ORs (Bloom) or installs (cuckoo) the executor-built shard blobs.
-A crawl's defaults build a 1.26 MB Bloom set (8 × 157 KB) and a 16.8 MB
-cuckoo set, so one broadcast per probe is the whole transfer. The state
-is not persisted: a resumed crawl rebuilds the Bloom filter from the
-committed seed frontier and per-step `fresh` deltas, and the cuckoo
-filter is bulk-built from seen when the seen set crosses its activation
-threshold, so the checkpoint manifest is the crawl's only commit
-protocol.
+Filter state lives on the driver as (n_shards, bytes) arrays. A Bloom
+add_df collects from each non-empty partition the nonzero bytes of its
+bitmap as (index, value) arrays, 9 bytes per touched byte, or the dense
+bitmap when that is smaller, and ORs them in; a cuckoo add_df installs
+the executor-built shard tables. A crawl's defaults build a 1.26 MB
+Bloom set (8 × 157 KB) and a 16.8 MB cuckoo set, so one broadcast per
+probe is the whole transfer, while an add of a superstep's few hundred
+URLs returns some tens of KB. The state is not persisted: a resumed
+crawl rebuilds the Bloom filter from the committed seed frontier and
+per-step `fresh` deltas (the add's row count is the seen-set size), and
+the cuckoo filter is bulk-built from seen when the seen set crosses its
+activation threshold, so the checkpoint manifest is the crawl's only
+commit protocol.
 """
 
 from __future__ import annotations
@@ -112,27 +116,47 @@ class BloomShardSet:
 
     # -- build / merge ------------------------------------------------------
 
-    def add_df(self, df: DataFrame, url_col: str = "url") -> None:
-        """OR the URLs of `df` into the shard bit-arrays. Distributed:
-        each non-empty partition reduces its rows to one flat bitmap of
-        the whole shard set, which the driver ORs into its arrays."""
+    def add_df(self, df: DataFrame, url_col: str = "url") -> int:
+        """OR the URLs of `df` into the shard bit-arrays and return the
+        number of rows added. Distributed: each non-empty partition
+        reduces its rows to one flat bitmap of the whole shard set and
+        returns its nonzero bytes as (index, value) arrays, or the
+        whole bitmap when that is smaller (`idx` NULL). The driver ORs
+        each value in at its index."""
         n_shards, m_bits, k = self.n_shards, self.m_bits, self.k
 
         def to_bitmaps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc = None
+            acc, n = None, 0
             for pdf in batches:
                 if not len(pdf):
                     continue
                 if acc is None:
                     acc = np.zeros(n_shards * m_bits // 8, dtype=np.uint8)
                 _set_bits(acc, *_hash2(pdf[url_col]), k, n_shards, m_bits)
-            if acc is not None:
-                yield pd.DataFrame({"bits": [acc.tobytes()]})
+                n += len(pdf)
+            if acc is None:
+                return
+            idx = np.flatnonzero(acc)
+            # an int64 index plus its byte against one byte per position
+            if idx.size * 9 < acc.size:
+                yield pd.DataFrame({"n": [n], "idx": [idx.tobytes()],
+                                    "val": [acc[idx].tobytes()]})
+            else:
+                yield pd.DataFrame({"n": [n], "idx": [None],
+                                    "val": [acc.tobytes()]})
 
-        parts = df.select(url_col).mapInPandas(to_bitmaps, "bits binary")
+        parts = df.select(url_col).mapInPandas(
+            to_bitmaps, "n long, idx binary, val binary")
         flat = self.shards.reshape(-1)
+        added = 0
         for row in parts.collect():
-            flat |= np.frombuffer(row["bits"], dtype=np.uint8)
+            val = np.frombuffer(row["val"], dtype=np.uint8)
+            if row["idx"] is None:
+                flat |= val
+            else:
+                flat[np.frombuffer(row["idx"], dtype=np.int64)] |= val
+            added += row["n"]
+        return added
 
     # -- probe ---------------------------------------------------------------
 
@@ -335,21 +359,14 @@ class CuckooShardSet:
         epoch = self._epoch
 
         def to_triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            seen_local: set = set()
-            out = {"shard": [], "fp": [], "i1": []}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                shard, fp, i1 = _cuckoo_decompose(pdf[url_col], n_shards,
-                                                  n_buckets)
-                for s, f_, i_ in zip(shard, fp, i1):
-                    key = (int(s), int(f_), int(i_))
-                    if key not in seen_local:
-                        seen_local.add(key)
-                        out["shard"].append(key[0])
-                        out["fp"].append(key[1])
-                        out["i1"].append(key[2])
-            yield pd.DataFrame(out, columns=["shard", "fp", "i1"])
+            parts = [np.stack(_cuckoo_decompose(pdf[url_col], n_shards,
+                                                n_buckets))
+                     for pdf in batches if len(pdf)]
+            if parts:
+                shard, fp, i1 = np.unique(np.concatenate(parts, axis=1),
+                                          axis=1)
+                yield pd.DataFrame({"shard": shard, "fp": fp.astype(np.int32),
+                                    "i1": i1})
 
         # one-row-per-shard current state, cogrouped with the triples —
         # a build task receives ONLY its shard's bytes. Untouched shards

@@ -276,8 +276,7 @@ def run_crawl(
         )
         # cuckoo_active stays False: _cuckoo_for_step bulk-builds the
         # cuckoo filter from seen once n_seen_est crosses its threshold
-        blooms.add_df(seen)
-        n_seen_est = seen.count()
+        n_seen_est = blooms.add_df(seen)
     else:
         if file_mode:
             frontier = file_frontier(spark, file_urls_path)

@@ -9,24 +9,29 @@ cluster would.
 Two settings are for short-lived sessions, where the JVM spends more
 CPU compiling its own code than crawling:
 
-- The driver JVM gets C2 (tier-4) thresholds ten times the JDK 17
-  defaults (`DRIVER_JIT_OPTIONS`). In one cold two-board crawl at
-  local[2] on a 4-CPU VM (38.5 s of CPU), per-thread CPU read from
-  /proc was: C2 compiler threads 16.4 s, C1 3.2 s, executor task
-  threads 4.6 s, py4j driver threads 4.1 s, GC 1.1 s, all Python
-  processes 3.9 s. Planner, Janino and serialization code that runs
-  only some thousands of times in a seconds-long job now stays at C1:
-  C2 then took 4.4 s of the same crawl's 24.9 s. Hot per-row loops
-  (generated code, Arrow batches) still reach C2, a round or two later
-  than before: by the fifth warm near-dup round executor CPU is the
-  same as with the JVM defaults. The options go through
-  `spark.driver.defaultJavaOptions`, which Spark puts ahead of a
-  caller's `spark.driver.extraJavaOptions`; a caller that sets
-  `spark.driver.defaultJavaOptions` itself replaces them. Cluster
-  executors keep the JVM defaults (in local mode the executor runs in
-  the driver JVM). The options only take effect when this factory
+- The driver JVM compiles with C1 only (`DRIVER_JIT_OPTIONS`,
+  `-XX:TieredStopAtLevel=1`): no tier-3 profiling code and no C2. A
+  crawl session runs some hundred short jobs, and in local mode the
+  planner, Janino, the generated code and the Arrow exchange all run
+  in this JVM. Per-thread CPU of one cold `board_crawl` round at
+  local[2] on a 4-CPU VM (`tools/thread_cpu.py`, seeds 1-3 on a busy
+  host): with C2 at ten times its default thresholds (the previous
+  setting), C2 compiler threads took 11.3-12.1 s of 52-55 s, C1
+  5.4-5.7 s, py4j driver threads 9.8 s and executor task threads
+  7.5-7.9 s; C1 only gave C2 0 s, C1 4.1-5.4 s, py4j 7.5-9.9 s and
+  executor 6.7-8.4 s of 33-43 s. C1 code is slower in hot per-row
+  loops: warm near-dup executor CPU was 0.86 s with C2 and 1.3-1.6 s
+  without, the reason the raised thresholds were chosen first. That
+  loss is smaller than the compile and profiling work C1 only saves,
+  and a near-dup run also spends less CPU in all, so it no longer
+  decides. The option goes through `spark.driver.defaultJavaOptions`,
+  which Spark puts ahead of a caller's `spark.driver.extraJavaOptions`;
+  a caller that sets `spark.driver.defaultJavaOptions` itself replaces
+  it. Cluster executors keep the JVM defaults (in local mode the
+  executor runs in the driver JVM), since a long-lived executor earns
+  back C2's compiles. The option only takes effect when this factory
   launches the JVM: under spark-submit the driver is already running,
-  so pass them on the command line (see submit_crawl.py).
+  so pass it on the command line (see submit_crawl.py).
 - Spark's cache of compiled generated classes holds
   `CODEGEN_CACHE_ENTRIES` classes, not Spark's default 100. One board
   crawl compiles ~270 generated classes; with 100 entries a second
@@ -44,15 +49,12 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # Arrow batch for the HTML-parse UDFs: pages rows are large (html binary),
 # keep batches modest so executor memory stays bounded.
 ARROW_MAX_RECORDS = 2000
-#: tier-4 (C2) compile thresholds, ten times the JDK 17 defaults
-#: (5000, 600, 15000, 40000). In trials on the same 4-CPU VM, thirty
-#: times saved no more on the crawl and slowed the cold near-dup round,
-#: and C1 only (TieredStopAtLevel=1) raised warm near-dup executor CPU
-#: from 0.86 s to 1.3-1.6 s.
-DRIVER_JIT_OPTIONS = (
-    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
-    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
-)
+#: C1 only: no tier-3 profiling and no C2 in the driver JVM. It
+#: replaces four tier-4 thresholds at ten times the JDK 17 defaults,
+#: which left hot methods in profiled tier-3 code longer and still
+#: compiled them with C2 later. Per-thread CPU of a cold board crawl:
+#: see the module docstring.
+DRIVER_JIT_OPTIONS = "-XX:TieredStopAtLevel=1"
 #: compiled generated classes kept per JVM (static SQL conf)
 CODEGEN_CACHE_ENTRIES = 1000
 

@@ -14,9 +14,10 @@ command works on YARN/k8s/standalone and local[N]):
 Under spark-submit the driver JVM is already running when this script
 builds its session, so the short-lived-session engine settings of
 `ptt_spider_go_spark.session` (its docstring says why) go on the
-command line. The driver's JIT thresholds are the string
-`session.DRIVER_JIT_OPTIONS`, the codegen cache size
-`session.CODEGEN_CACHE_ENTRIES`:
+command line. The driver's JIT option (C1 only,
+`-XX:TieredStopAtLevel=1`) is the string `session.DRIVER_JIT_OPTIONS`,
+the codegen cache size `session.CODEGEN_CACHE_ENTRIES`. They suit a
+driver that lives for one crawl; executors keep the JVM defaults:
 
     spark-submit \
         --conf "spark.driver.defaultJavaOptions=$(python -c \

@@ -412,6 +412,51 @@ def test_bloom_flat_bits_match_per_shard_filters(spark):
     assert blooms.shards.tobytes() == mirror.tobytes()
 
 
+def test_bloom_add_collects_touched_bytes_only(spark, monkeypatch):
+    """An add of a few hundred URLs into the crawl's default filter
+    collects each partition's touched bytes as (index, value) arrays,
+    far less than the 1.26 MB flat array; a small filter that most adds
+    fill collects the dense array instead. Either way the flat array
+    equals a per-URL reference build, at 1 and at 3 partitions, and
+    add_df returns the number of rows added."""
+    import pandas as pd
+
+    from ptt_spider_go_spark.operators.dedup import _hash2, _set_bits
+
+    collected = []
+    cls = type(spark.range(1))
+    real_collect = cls.collect
+
+    def spy(self):
+        rows = real_collect(self)
+        collected.extend(rows)
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    urls = [f"https://sp.test/{i}" for i in range(300)]
+    for make, sparse in ((BloomShardSet, True),
+                         (lambda: BloomShardSet(2, 64), False)):
+        ref = make()
+        flat = ref.shards.reshape(-1)
+        for u in urls:
+            _set_bits(flat, *_hash2(pd.Series([u])), ref.k, ref.n_shards,
+                      ref.m_bits)
+        for n_parts in (1, 3):
+            blooms = make()
+            collected.clear()
+            df = spark.createDataFrame([(u,) for u in urls], "url string")
+            assert blooms.add_df(df.repartition(n_parts)) == len(urls)
+            assert blooms.shards.tobytes() == ref.shards.tobytes()
+            assert len(collected) == n_parts
+            assert all((r["idx"] is not None) == sparse for r in collected)
+            payload = sum(len(r["val"]) + len(r["idx"] or b"")
+                          for r in collected)
+            if sparse:
+                assert payload * 20 < flat.size, (payload, flat.size)
+            else:
+                assert payload == n_parts * flat.size
+
+
 def test_bloom_false_positive_rate_at_design_load():
     """The default BloomShardSet(8), holding its design load of 8 x 2^17
     URLs, passes never-added URLs at its configured fpp (within 2x).

@@ -1,6 +1,5 @@
-"""The session factory's engine settings for short-lived sessions: the
-driver JVM's tier-4 (C2) thresholds and a codegen cache that holds a
-whole crawl."""
+"""The session factory's engine settings for short-lived sessions: a
+C1-only driver JVM and a codegen cache that holds a whole crawl."""
 
 import glob
 import os
@@ -15,31 +14,29 @@ from ptt_spider_go_spark.datagen import fetch_events_pandas, pages_pandas
 from ptt_spider_go_spark.plans.crawl import run_crawl
 from ptt_spider_go_spark.session import get_spark
 
-#: the driver's C2 thresholds, ten times the JDK 17 defaults
-TIER4_FLAGS = [
-    "-XX:Tier4InvocationThreshold=50000",
-    "-XX:Tier4MinInvocationThreshold=6000",
-    "-XX:Tier4CompileThreshold=150000",
-    "-XX:Tier4BackEdgeThreshold=400000",
-]
+#: the driver's JIT option: C1 only, no tier-3 profiling and no C2
+C1_ONLY = "-XX:TieredStopAtLevel=1"
 
 
-def test_driver_jvm_runs_with_tier4_thresholds(spark):
-    args = list(
-        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-        .getInputArguments()
-    )
-    for flag in TIER4_FLAGS:
-        assert flag in args, args
+def test_driver_jvm_runs_c1_only(spark):
+    jvm = spark._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    hotspot = mf.getPlatformMXBean(jvm.java.lang.Class.forName(
+        "com.sun.management.HotSpotDiagnosticMXBean"))
+    assert hotspot.getVMOption("TieredStopAtLevel").getValue() == "1"
+    args = list(mf.getRuntimeMXBean().getInputArguments())
+    assert C1_ONLY in args, args
+    assert not [a for a in args if a.startswith("-XX:Tier4")], args
 
 
 def test_codegen_cache_holds_a_crawl(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
 
 
-def _launch_command(conf: dict) -> list[str]:
-    """The driver JVM command spark-submit would run for `conf`, from
-    Spark's own launcher; no JVM beyond the launcher starts."""
+def _launch_jvm_args(conf: dict) -> list[str]:
+    """The driver JVM's options in the command spark-submit would run
+    for `conf`, from Spark's own launcher; no JVM beyond the launcher
+    starts."""
     home = _find_spark_home()
     [jar] = glob.glob(os.path.join(home, "jars", "spark-launcher_*.jar"))
     scala = re.search(r"spark-launcher_([0-9.]+)-", jar).group(1)
@@ -50,22 +47,22 @@ def _launch_command(conf: dict) -> list[str]:
     env = dict(os.environ, SPARK_HOME=home, SPARK_SCALA_VERSION=scala)
     out = subprocess.run(args + ["pyspark-shell"], env=env, check=True,
                          capture_output=True, timeout=60).stdout
-    return out.decode().split("\0")
+    cmd = out.decode().split("\0")
+    return cmd[:cmd.index("org.apache.spark.deploy.SparkSubmit")]
 
 
 def test_caller_java_options_reach_the_jvm_next_to_the_jit_options(
         monkeypatch):
     """A caller's spark.driver.extraJavaOptions (the benchmark harness
-    sets one) does not displace the thresholds: Spark's launcher puts
+    sets one) does not displace the JIT option: Spark's launcher puts
     both on the driver command line, the defaults first."""
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
                         lambda self: dict(self._options))
     conf = get_spark(extra_conf={
         "spark.driver.extraJavaOptions": "-Dcaller.option=1"})
-    cmd = _launch_command(conf)
-    jvm_args = cmd[:cmd.index("org.apache.spark.deploy.SparkSubmit")]
-    at = [jvm_args.index(f) for f in TIER4_FLAGS]
-    assert max(at) < jvm_args.index("-Dcaller.option=1"), jvm_args
+    jvm_args = _launch_jvm_args(conf)
+    assert jvm_args.index(C1_ONLY) < jvm_args.index("-Dcaller.option=1"), \
+        jvm_args
 
 
 def test_caller_default_java_options_replace_the_jit_options(monkeypatch):
@@ -74,6 +71,9 @@ def test_caller_default_java_options_replace_the_jit_options(monkeypatch):
     conf = get_spark(extra_conf={
         "spark.driver.defaultJavaOptions": "-Dcaller.option=1"})
     assert conf["spark.driver.defaultJavaOptions"] == "-Dcaller.option=1"
+    jvm_args = _launch_jvm_args(conf)
+    assert "-Dcaller.option=1" in jvm_args and C1_ONLY not in jvm_args, \
+        jvm_args
 
 
 def _codegen_compilations(spark) -> int:
